@@ -32,3 +32,20 @@ def assert_df_equal(got, want, key_cols):
     assert len(g) == len(w), f"row counts differ: {len(g)} vs {len(w)}\nonly-got={set(g)-set(w)}\nonly-want={set(w)-set(g)}"
     for i, (a, b) in enumerate(zip(g, w)):
         assert a == b, f"row {i} differs:\n got={a}\nwant={b}"
+
+
+@pytest.fixture()
+def write_plans(monkeypatch):
+    """Physical plan of every DataFrame written with ``.parquet()`` while
+    the test runs, in write order (rendered before the write executes)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans: list = []
+    orig = DataFrameWriter.parquet
+
+    def recording(self, *a, **k):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    return plans

@@ -99,3 +99,25 @@ def test_compaction_preserves_restart_seq(tmp_path):
     j2 = FeedJournal(root)
     seq2, _ = j2.new_staging()
     assert seq2 > seq
+
+
+def test_cleanup_reaps_unadopted_span_scratch(tmp_path):
+    """Crash between a span's one write and the adopt() of its windows:
+    cleanup() reaps the span scratch dir, and the window dirs adopted
+    before the crash (journal lines pending) stay."""
+    root = str(tmp_path / "feed")
+    j1 = FeedJournal(root)
+    span = j1.span_staging()
+    for i in range(2):
+        os.makedirs(os.path.join(span, f"_win={i}"))
+    seq_a = j1.adopt(os.path.join(span, "_win=0"))
+    j1.append_window(seq_a, 0, 10, False, {"t": {"src": "t", "path": "p", "bid": "b1"}}, "table_name")
+    adopted = os.path.join(j1.data_dir, f"w_{seq_a:08d}")
+    assert os.path.isdir(adopted)
+    # the crash: _win=1 is never adopted
+
+    j2 = FeedJournal(root)
+    j2.cleanup()
+    assert not os.path.isdir(span)
+    assert os.path.isdir(adopted)
+    assert [e["seq"] for e in j2.pending()] == [seq_a]

@@ -1,5 +1,6 @@
 """Merge-on-read sink mode: delta appends + read-time LWW + compaction."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import assert_df_equal
@@ -132,11 +133,16 @@ def test_bucketed_delta_read_prunes_files(spark, tmp_table_path):
     assert got.count() > 0
 
 
-def test_bootstrap_fast_path_state_identical_and_single_write(spark, tmp_path):
+@pytest.mark.parametrize("n_buckets", [4, 2], ids=["aligned", "spread"])
+def test_bootstrap_fast_path_state_identical_and_single_write(
+        spark, tmp_path, write_plans, n_buckets):
     """Initial-load fast path: the first DDL-free span on an empty table
     writes the compacted BASE directly. Final state, checkpoint and
     per-window batch ids are IDENTICAL to the normal delta+compact path;
-    the bootstrap table carries zero deltas and populated base buckets."""
+    the bootstrap table carries zero deltas and populated base buckets.
+    With fewer bucket slots than cores the raw span spreads by key and the
+    mounted rows align in a second exchange; otherwise one aligned
+    exchange carries the whole write."""
     from ticdc_spark.sinks.lake import LakeTable
     from ticdc_spark.sources.binlog_gen import BinlogSpec, gen_binlog, gen_resolved_log
     from ticdc_spark.streaming.pipeline import Changefeed, ChangefeedConfig
@@ -147,13 +153,17 @@ def test_bootstrap_fast_path_state_identical_and_single_write(spark, tmp_path):
     def run(path, fast):
         cf = Changefeed(
             spark, binlog, resolved, None, LakeTable(spark, path),
-            ChangefeedConfig(changefeed_id="bst", n_buckets=4, sink_mode="mor",
+            ChangefeedConfig(changefeed_id="bst", n_buckets=n_buckets, sink_mode="mor",
                              compact_every=2, bootstrap_fast_path=fast),
         )
         cf.run()
         return cf.target
 
     fast = run(f"{tmp_path}/fast", True)
+    # the whole feed is one span: ONE write, placed per the slot rule
+    assert len(write_plans) == 1
+    aligned = n_buckets >= spark.sparkContext.defaultParallelism
+    assert write_plans[0].count("Exchange") == (1 if aligned else 2), write_plans[0]
     slow = run(f"{tmp_path}/slow", False)
     from tests.conftest import assert_df_equal
     assert_df_equal(fast.read(), slow.read(), ["conv_id", "turn_idx"])

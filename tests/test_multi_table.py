@@ -4,6 +4,8 @@ N tables through one feed, per-table schema registries and DDL barriers
 (global vs table-scoped), per-table exactly-once resume, feed checkpoint =
 min over tables."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -642,6 +644,56 @@ def test_partition_add_truncate_reorganize_drop(spark, tmp_path):
     assert_df_equal(mt2.read("pt#p1"), want_p1, KEY)
 
 
+def test_reorganize_partition_of_blocked_table_is_skipped(spark, tmp_path):
+    """A reorganize_partition barrier on a logical table the block list
+    excludes: the fleet runs to completion (and resumes) without ever
+    activating the new spans, and the allowed table replicates in full."""
+    X = 2_000
+    sp = BinlogSpec(n_events=2_000, n_convs=60, n_turns=8, seed=37)
+    raw = gen_binlog(spark, sp)
+    h = F.pmod(F.xxhash64("conv_id"), F.lit(2))
+    tbl = (
+        F.when(h == 0, "t0")
+        .when(F.col("commit_ts") <= X, "pt#p0")
+        .when(F.pmod(F.xxhash64("turn_idx"), F.lit(2)) == 0, "pt#p0a")
+        .otherwise("pt#p0b")
+    )
+    binlog = raw.withColumn("table_name", tbl)
+    ddl_rows = [
+        {"commit_ts": X, "ddl_type": "reorganize_partition",
+         "query": "ALTER TABLE pt REORGANIZE PARTITION p0 INTO "
+                  "(PARTITION p0a, PARTITION p0b)",
+         "column": "p0a,p0b", "old_column": "p0",
+         "col_type": "pmod(xxhash64(turn_idx), 2) = 0",
+         "schema_version": X, "table_name": "pt"},
+    ]
+
+    def build():
+        return MultiTableChangefeed(
+            spark, binlog, gen_resolved_log(spark, sp), ddl_rows,
+            table_factory=lambda t: LakeTable(spark, f"{tmp_path}/{t.replace('#', '_')}"),
+            config=ChangefeedConfig(changefeed_id="blk", n_buckets=4,
+                                    table_block=("pt",)),
+            tables=["t0", "pt"],
+            partitions={"pt": ["p0"]},
+        )
+
+    mt = build()
+    assert sorted(mt.feeds) == ["t0"]
+    mt.run()
+    assert sorted(mt.feeds) == ["t0"]
+    assert mt.checkpoint() == sp.max_commit_ts
+    want = expected_final_state(
+        raw.filter(h == 0), mt.feeds["t0"].registry, sp.max_commit_ts, KEY)
+    assert_df_equal(mt.read("t0"), want, KEY)
+    assert not any(p.startswith("pt") for p in os.listdir(tmp_path))
+    # resume replays the barrier below the checkpoint: still a no-op
+    mt2 = build()
+    mt2.run()
+    assert sorted(mt2.feeds) == ["t0"]
+    assert_df_equal(mt2.read("t0"), want, KEY)
+
+
 def test_rename_tables_atomic_swap(spark, tmp_path):
     """ActionRenameTables (schema_storage.go:405): RENAME TABLE a TO b,
     b TO a is ATOMIC — both feeds swap names against the pre-barrier
@@ -746,13 +798,18 @@ def test_recover_table_and_batch_create(spark, tmp_path):
         assert_df_equal(mt.read(t), want, KEY)
 
 
-def test_fleet_bootstrap_state_identical_and_single_pass(spark, tmp_path):
+@pytest.mark.parametrize("n_tables,n_buckets", [(3, 4), (2, 1)],
+                         ids=["aligned", "spread"])
+def test_fleet_bootstrap_state_identical_and_single_pass(
+        spark, tmp_path, write_plans, n_tables, n_buckets):
     """Fleet initial load: when every applying table is empty, the span
     folds once and writes every table's compacted BASE in one job — final
     state, checkpoints and per-window batch ids identical to the
-    journal+delta path; bases populated, zero deltas, journal untouched."""
+    journal+delta path; bases populated, zero deltas, journal untouched.
+    Fewer (table, bucket) slots than cores take the spread placement: two
+    exchanges instead of one."""
     specs = {f"f{i}": BinlogSpec(n_events=3_000, n_convs=60, seed=70 + i)
-             for i in range(3)}
+             for i in range(n_tables)}
     parts = [gen_binlog(spark, sp).withColumn("table_name", F.lit(t))
              for t, sp in specs.items()]
     wal = parts[0]
@@ -764,13 +821,16 @@ def test_fleet_bootstrap_state_identical_and_single_pass(spark, tmp_path):
         return MultiTableChangefeed(
             spark, wal, resolved, None,
             table_factory=lambda t: LakeTable(spark, f"{base}/{t}"),
-            config=ChangefeedConfig(changefeed_id="fb", n_buckets=4,
+            config=ChangefeedConfig(changefeed_id="fb", n_buckets=n_buckets,
                                     bootstrap_fast_path=fast),
             tables=list(specs),
         )
 
     fast = build(f"{tmp_path}/fast", True)
     s_fast = fast.run()
+    assert len(write_plans) == 1
+    aligned = n_tables * n_buckets >= spark.sparkContext.defaultParallelism
+    assert write_plans[0].count("Exchange") == (1 if aligned else 2), write_plans[0]
     slow = build(f"{tmp_path}/slow", False)
     slow.run()
     for t in specs:

@@ -4488,7 +4488,8 @@ def q_cdc_lake_changelog(spark, sf_dir):
     # demonstration (the diff spans many committed versions).
     cf = _run_engine(spark, sf_dir, path, sink_mode="cow",
                      cfg_extra={"max_windows_per_job": 1})
-    v_lo = cf.target.syncpoint_for(bound)[1]
+    rts, v_lo = cf.target.syncpoint_for(bound)
+    assert rts == bound, (rts, bound)
     v_hi = cf.target.manifest()["version"]
     return cf.target.changes_between(v_lo, v_hi)
 

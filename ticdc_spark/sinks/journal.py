@@ -96,6 +96,22 @@ class FeedJournal:
         self._seq += 1
         return self._seq, os.path.join(self.data_dir, f"w_{self._seq:08d}")
 
+    def span_staging(self) -> str:
+        """Scratch path for a multi-window write whose window dirs are then
+        :meth:`adopt`-ed one by one (no seq is reserved for it; what a crash
+        leaves behind, :meth:`cleanup` reaps)."""
+        return os.path.join(self.data_dir, f"span_{uuid.uuid4().hex}")
+
+    def adopt(self, src: str) -> int:
+        """Reserve the next window's staging slot and move an already-written
+        dir ``src`` into it (a span writes all its windows in one job, then
+        hands each window's dir to the journal). A missing ``src`` — no rows
+        staged for the window — leaves the slot empty. Returns the seq."""
+        seq, path = self.new_staging()
+        if os.path.isdir(src):
+            os.rename(src, path)
+        return seq
+
     def append_window(self, seq: int, lo: int, hi: int, bucketed: bool,
                       tables: dict, table_col: str,
                       shared: bool = False, epoch: int | None = None) -> None:
@@ -158,7 +174,9 @@ class FeedJournal:
         """Remove folded/orphaned staging dirs: seq <= fold_hwm (folded —
         any leftover partition dirs belong to windows whose commits are
         durable) and seq > newest journal line (a crash between staging
-        write and journal append: never committed anywhere, dead weight)."""
+        write and journal append: never committed anywhere, dead weight),
+        plus any span scratch dir a crash left before its windows were
+        adopted."""
         import shutil
 
         hwm = self.fold_hwm()
@@ -169,6 +187,9 @@ class FeedJournal:
         shared_seqs = {e["seq"] for e in entries if e.get("shared")}
         removed = 0
         for d in os.listdir(self.data_dir):
+            if d.startswith("span_"):
+                shutil.rmtree(os.path.join(self.data_dir, d), ignore_errors=True)
+                continue
             if not d.startswith("w_"):
                 continue
             try:

@@ -78,6 +78,24 @@ def _nt(schema_rows) -> list:
     return [(x[0], x[1]) for x in schema_rows]
 
 
+def parquet_files(d: str) -> list:
+    """Sorted parquet files directly under ``d`` ([] when it is missing)."""
+    if not os.path.isdir(d):
+        return []
+    return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def staged_files(dest: str, bucketed: bool) -> tuple:
+    """(files, buckets) of a staged write: its parquet files, plus
+    ``{bucket: files}`` over its ``_bucket=`` dirs when ``bucketed``
+    (None when flat or when nothing was staged)."""
+    if not bucketed or not os.path.isdir(dest):
+        return parquet_files(dest), None
+    buckets = {d.split("=", 1)[1]: parquet_files(os.path.join(dest, d))
+               for d in sorted(os.listdir(dest)) if d.startswith("_bucket=")}
+    return sorted(f for fl in buckets.values() for f in fl), buckets
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -531,7 +549,8 @@ class LakeTable:
 
     # ---------------- read ----------------
 
-    def _bucket_expr(self, n_buckets: int, key0: str = "conv_id"):
+    @staticmethod
+    def _bucket_expr(n_buckets: int, key0: str = "conv_id"):
         return F.pmod(F.xxhash64(F.col(key0)), F.lit(n_buckets)).cast("int")
 
     def _reconcile(self, by_version: dict, m: dict) -> DataFrame | None:
@@ -728,18 +747,9 @@ class LakeTable:
                     .write.partitionBy("_bucket")
                     .parquet(commit_dir)
                 )
-                new_files: dict = {b: [] for b in affected}
-                for b in affected:
-                    bdir = os.path.join(commit_dir, f"_bucket={b}")
-                    if os.path.isdir(bdir):
-                        new_files[b] = sorted(
-                            os.path.join(bdir, f)
-                            for f in os.listdir(bdir)
-                            if f.endswith(".parquet")
-                        )
                 for b in affected:
                     m["buckets"][str(b)] = {
-                        "files": new_files[b],
+                        "files": parquet_files(os.path.join(commit_dir, f"_bucket={b}")),
                         "written_version": m["schema_version"],
                     }
         finally:
@@ -835,18 +845,8 @@ class LakeTable:
                     .parquet(commit_dir)
                 )
                 for b in affected:
-                    bdir = os.path.join(commit_dir, f"_bucket={b}")
-                    files = (
-                        sorted(
-                            os.path.join(bdir, f)
-                            for f in os.listdir(bdir)
-                            if f.endswith(".parquet")
-                        )
-                        if os.path.isdir(bdir)
-                        else []
-                    )
                     m["buckets"][str(b)] = {
-                        "files": files,
+                        "files": parquet_files(os.path.join(commit_dir, f"_bucket={b}")),
                         "written_version": m["schema_version"],
                     }
         finally:
@@ -899,31 +899,19 @@ class LakeTable:
         #     cost of tasks x touched-buckets small files per batch.
         commit_dir = os.path.join(self.data_dir, uuid.uuid4().hex)
         entry: dict = {"written_version": m["schema_version"]}
-        if m.get("delta_layout", "flat") == "bucketed":
+        bucketed = m.get("delta_layout", "flat") == "bucketed"
+        if bucketed:
             (
                 src.withColumn("_bucket", self._bucket_expr(m["n_buckets"], m["key"][0]))
                 .select(*cur_names, "_bucket")
                 .write.partitionBy("_bucket")
                 .parquet(commit_dir)
             )
-            bucket_files: dict = {}
-            for d in sorted(os.listdir(commit_dir)):
-                if d.startswith("_bucket="):
-                    bdir = os.path.join(commit_dir, d)
-                    bucket_files[d.split("=", 1)[1]] = sorted(
-                        os.path.join(bdir, f)
-                        for f in os.listdir(bdir)
-                        if f.endswith(".parquet")
-                    )
-            entry["buckets"] = bucket_files
-            entry["files"] = sorted(f for fls in bucket_files.values() for f in fls)
         else:
             src.select(*cur_names).write.parquet(commit_dir)
-            entry["files"] = sorted(
-                os.path.join(commit_dir, f)
-                for f in os.listdir(commit_dir)
-                if f.endswith(".parquet")
-            )
+        entry["files"], buckets = staged_files(commit_dir, bucketed)
+        if bucketed:
+            entry["buckets"] = buckets
         m.setdefault("deltas", []).append(entry)
         rows = lineage_rows() if callable(lineage_rows) else (lineage_rows or [])
         n_src = sum(r.get("event_count", 0) for r in rows)
@@ -1092,10 +1080,7 @@ class LakeTable:
         commit_dir = os.path.join(self.data_dir, uuid.uuid4().hex)
         src.select(*cur_names).write.parquet(commit_dir)
         m.setdefault("deltas", []).append({
-            "files": sorted(
-                os.path.join(commit_dir, f)
-                for f in os.listdir(commit_dir) if f.endswith(".parquet")
-            ),
+            "files": parquet_files(commit_dir),
             "written_version": m["schema_version"],
         })
         rows = lineage_rows() if callable(lineage_rows) else (lineage_rows or [])
@@ -1169,16 +1154,8 @@ class LakeTable:
             .parquet(commit_dir)
         )
         for b in affected:
-            bdir = os.path.join(commit_dir, f"_bucket={b}")
-            files = (
-                sorted(
-                    os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")
-                )
-                if os.path.isdir(bdir)
-                else []
-            )
             m["buckets"][str(b)] = {
-                "files": files,
+                "files": parquet_files(os.path.join(commit_dir, f"_bucket={b}")),
                 "written_version": m["schema_version"],
             }
         m["deltas"] = []

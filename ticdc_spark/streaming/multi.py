@@ -10,14 +10,17 @@ with global vs table-scoped events
 checkpoint = min over tables
 (/root/reference/cdc/scheduler/internal/v3/replication/replication_manager.go:556-731).
 
-Spark-first single-pass execution: per frontier window the shared WAL is
+Spark-first single-pass execution: a multi-table front end over the span
+executor (streaming/span.py). Per DDL-free span of windows the shared WAL is
 scanned ONCE and LWW-deduped ONCE with ``table_name`` prepended to the
-handle key — one shuffle for all N tables — then each table's slice is a
-narrow filter off the persisted dedup output, mounted against that table's
-schema registry and committed to its own LakeTable. Work per window is
-O(window events) + N cheap cached filters, not N full WAL scans. Store the
-WAL partitioned by ``table_name`` (:func:`write_wal_partitioned`) so any
-residual per-table scan partition-prunes.
+handle key — one shuffle for all N tables. Homogeneous fleets (one schema
+chain) mount once and write every table in one job; the initial load onto
+empty tables writes every table's compacted base in one job; each window
+commits with one feed-journal append. Diverged chains and DDL barriers take
+the per-window union write (one job per type-compatible group). Work per
+window is O(window events), not N full WAL scans. Store the WAL partitioned
+by ``table_name`` (:func:`write_wal_partitioned`) so any residual per-table
+scan partition-prunes.
 
 Mid-stream table lifecycle (batch_add_table / multi_tables_ddl analogs,
 /root/reference/tests/integration_tests/batch_add_table/,
@@ -42,6 +45,7 @@ from __future__ import annotations
 import os
 import re
 import shutil
+import uuid
 
 from collections.abc import Callable
 from dataclasses import replace
@@ -49,10 +53,22 @@ from dataclasses import replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ticdc_spark.functions.mount import mount, mounted_columns
 from ticdc_spark.sinks.journal import FeedJournal
-from ticdc_spark.sinks.lake import LakeTable
+from ticdc_spark.sinks.lake import LakeTable, staged_files
 from ticdc_spark.sources.frontier import frontier_steps
 from ticdc_spark.streaming.pipeline import Changefeed, ChangefeedConfig, table_matches
+from ticdc_spark.streaming.span import (
+    WIN,
+    SpanExecutor,
+    bootstrap_ready,
+    lineage_rows,
+    order_meta,
+    part_dirs,
+    plan_windows,
+    quarantined,
+    span_end,
+)
 
 _LIFECYCLE = ("create_table", "recover_table", "drop_table", "rename_table",
               "rename_tables", "exchange_table_partition",
@@ -317,22 +333,9 @@ class MultiTableChangefeed:
             # physical table), and post-recover DML applies on top; events
             # in the dropped gap never replicate, matching upstream where
             # the table did not exist to receive writes.
-            if t in self.feeds:
-                return  # idempotent replay (resume past this barrier)
-            if not table_matches(t, self.config):
-                return
-            self._add_feed(t, start_ts=ts)
-            f = self.feeds[t]
-            f.ensure_target()
-            # catch the new target's schema up to create time: global column
-            # DDLs below the create barrier apply to the newborn table too
-            f._reconcile_ddl(ts)
-            f._partitions = getattr(self, "_partitions", [])
-            self._load_state(t)
+            self._activate(t, ts)
         elif d["ddl_type"] == "drop_table":
-            self.feeds.pop(t, None)  # stop replicating; data retained
-            self._source_name.pop(t, None)
-            self._state.pop(t, None)
+            self._retire(t)  # stop replicating; data retained
         elif d["ddl_type"] == "rename_table":
             old = d["old_column"]
             if old in self.feeds and t not in self.feeds:
@@ -352,10 +355,7 @@ class MultiTableChangefeed:
             news = d["column"].split(",")
             snap = {o: (self.feeds.get(o), self._state.get(o)) for o in olds}
             for o in olds:
-                if snap[o][0] is not None:
-                    self.feeds.pop(o, None)
-                    self._source_name.pop(o, None)
-                    self._state.pop(o, None)
+                self._retire(o)
             for o, nn in zip(olds, news):
                 f, st = snap[o]
                 if f is None or nn in self.feeds:
@@ -385,25 +385,38 @@ class MultiTableChangefeed:
             # (snapshot.go:64), so downstream this is create_table for the
             # span key; global/logical column DDLs below the barrier catch
             # the newborn span up, same as create.
-            if t in self.feeds or not table_matches(_logical(t), self.config):
-                return
-            self._add_feed(t, start_ts=ts)
-            f = self.feeds[t]
-            f.ensure_target()
-            f._reconcile_ddl(ts)
-            f._partitions = getattr(self, "_partitions", [])
-            self._load_state(t)
+            self._activate(t, ts)
         elif d["ddl_type"] == "drop_table_partition":
             # ALTER TABLE <logical> DROP PARTITION (schema_storage_test.go:
             # 824): upstream deletes the partition's rows by metadata, so
             # the span leaves the logical table — replication stops and
             # read_logical() no longer unions the span's target (files
             # retained for time travel, same posture as drop_table).
-            self.feeds.pop(t, None)
-            self._source_name.pop(t, None)
-            self._state.pop(t, None)
+            self._retire(t)
         elif d["ddl_type"] == "reorganize_partition":
             self._apply_reorganize(d, ts)
+
+    def _activate(self, t: str, ts: int) -> None:
+        """A feed (table or partition span) becomes live at barrier ``ts``:
+        its windows start there, and column DDLs below the barrier catch
+        the newborn target's schema up. Idempotent (a resumed run replays
+        barriers below its checkpoint); tables the allow/block lists
+        exclude never activate."""
+        if t in self.feeds or not table_matches(_logical(t), self.config):
+            return
+        self._add_feed(t, start_ts=ts)
+        f = self.feeds[t]
+        f.ensure_target()
+        f._reconcile_ddl(ts)
+        f._partitions = getattr(self, "_partitions", [])
+        self._load_state(t)
+
+    def _retire(self, t: str):
+        """A feed leaves the live set (its target's data is retained);
+        returns the retired feed, or None if ``t`` was not live."""
+        self._source_name.pop(t, None)
+        self._state.pop(t, None)
+        return self.feeds.pop(t, None)
 
     def _apply_reorganize(self, d, ts: int) -> None:
         """ALTER TABLE <logical> REORGANIZE PARTITION p.. INTO (p'.. VALUES
@@ -425,9 +438,12 @@ class MultiTableChangefeed:
         resolved_ts=<ts>, so re-applying the barrier on resume is
         recognized (batch-id tier, or checkpoint tier once later windows
         advanced past ts) and skipped — exactly-once, no regression of
-        post-barrier writes."""
+        post-barrier writes. A logical table the allow/block lists exclude
+        has no live spans, so its reorganize is a no-op."""
         logical = d[self.table_col]
-        olds = [f"{logical}#{p}" for p in d["old_column"].split(",")]
+        if not table_matches(logical, self.config):
+            return
+        olds =[f"{logical}#{p}" for p in d["old_column"].split(",")]
         news = [f"{logical}#{p}" for p in d["column"].split(",")]
         preds = [p.strip() for p in (d["col_type"] or "").split(";") if p.strip()]
         if len(preds) != len(news) - 1:
@@ -435,18 +451,10 @@ class MultiTableChangefeed:
                 "reorganize_partition needs one routing predicate per new "
                 "span except the last (remainder)")
         for nk in news:
-            if nk in self.feeds:
-                continue
-            self._add_feed(nk, start_ts=ts)
-            f = self.feeds[nk]
-            f.ensure_target()
-            f._reconcile_ddl(ts)
-            f._partitions = getattr(self, "_partitions", [])
+            self._activate(nk, ts)
         src = None
         for ok in olds:
-            f = self.feeds.pop(ok, None)
-            self._source_name.pop(ok, None)
-            self._state.pop(ok, None)
+            f = self._retire(ok)
             if f is not None and f.target.exists():
                 # include_meta: migrated rows keep their ORIGINAL LWW order
                 # metadata, so post-barrier events win ties exactly as if
@@ -543,18 +551,9 @@ class MultiTableChangefeed:
             self.resolved_log, low=ckpt,
             expected_partitions=self.config.expected_partitions,
         )
-        k = max(1, self.config.frontiers_per_batch)
-        uppers = steps[k - 1 :: k]
-        if steps and (not uppers or uppers[-1] != steps[-1]):
-            uppers.append(steps[-1])
-        tgt = self.config.target_ts
-        if tgt is not None:
-            # finish-at (changefeed_finish): the whole fleet stops AT
-            # target_ts — same clamp rule as the single-table feed
-            reached = bool(steps) and steps[-1] >= tgt
-            uppers = [u for u in uppers if u < tgt]
-            if reached and ckpt < tgt:
-                uppers.append(tgt)
+        # finish-at (changefeed_finish): the whole fleet stops AT
+        # target_ts — same clamp rule as the single-table feed
+        uppers = plan_windows(steps, ckpt, self.config)
 
         stats = {"tables": len(self.feeds), "merges": 0, "events": 0,
                  "windows": 0, "wal_scans_per_window": 1}
@@ -589,15 +588,7 @@ class MultiTableChangefeed:
                 cap = self.config.max_windows_per_job
                 if max_merges_per_table:
                     cap = min(cap, max_merges_per_table - merged_windows)
-                j = i
-                while (
-                    j + 1 < len(uppers) and (j + 1 - i) < cap
-                    and not any(
-                        uppers[j] < int(d["commit_ts"]) <= uppers[j + 1]
-                        for d in self.ddl_rows
-                    )
-                ):
-                    j += 1
+                j = span_end(uppers, i, cap, self.ddl_rows)
                 if j > i:
                     span = uppers[i:j + 1]
                     s = self._apply_span_all(ckpt, span)
@@ -616,7 +607,7 @@ class MultiTableChangefeed:
             for d in bounds + [None]:
                 hi = r if d is None else int(d["commit_ts"])
                 if lo < hi:
-                    s = self._apply_window_all(lo, hi)
+                    s = self._apply_span_all(lo, [hi])
                     stats["merges"] += s["merges"]
                     stats["events"] += s["events"]
                     stats["windows"] += 1
@@ -645,15 +636,12 @@ class MultiTableChangefeed:
         stats["checkpoint"] = self.checkpoint()
         return stats
 
-    def _apply_window_all(self, lo: int, hi: int) -> dict:
-        return self._apply_span_all(lo, [hi])
-
     def _apply_span_all(self, lo: int, uppers: list) -> dict:
         """A DDL-free SPAN of windows, all tables: ONE WAL scan + ONE dedup
         exchange + (homogeneous fast path) ONE write job for the whole
-        span x table cross-product — each (window, table) still commits
-        its own batch id through the journal. A single-window call is the
-        degenerate span."""
+        span x table cross-product through the span executor (span.py) —
+        each (window, table) still commits its own batch id through the
+        journal. A single-window call is the degenerate span."""
         hi = uppers[-1]
         live = {
             t: f for t, f in self.feeds.items() if hi > self._state[t]["ckpt"]
@@ -670,38 +658,32 @@ class MultiTableChangefeed:
         wal = wal.filter(F.col(self.table_col).isin(*names))
         probe = next(iter(live.values()))
         df, qobs = probe._prepare_window(wal, f"{self.config.changefeed_id}:{lo}:{hi}")
-        span = len(uppers) > 1
-        if span:
-            # window id = index of the first upper bound >= commit_ts;
-            # dedup stays PER WINDOW (the LWW read re-resolves across
-            # windows, exactly as with separate batches)
-            wexpr = F.lit(len(uppers) - 1)
-            for i in range(len(uppers) - 2, -1, -1):
-                wexpr = F.when(F.col("commit_ts") <= uppers[i], i).otherwise(wexpr)
-            df = df.withColumn("_win", wexpr.cast("int"))
-            dkey = ["_win", self.table_col, *self.config.key]
-        else:
-            dkey = [self.table_col, *self.config.key]
-        # FLEET initial load: when the whole span lands on empty tables,
-        # skip the per-window pre-dedup, the table-clustering sort and the
-        # cache entirely — one direct (table, key) LWW over the raw span
-        # plus one column-pruned stats re-scan (see _fleet_bootstrap)
-        if span and self._fleet_bootstrap(live, names, df, lo, uppers, out):
-            if qobs is not None:
-                try:
-                    out["quarantined"] = int(qobs.get.get("quarantined") or 0)
-                except Exception:
-                    out["quarantined"] = 0
+        span = SpanExecutor(self.spark, df, lo, uppers, probe.registry,
+                            self.config, self.table_col)
+        nb = self._bootstrap_gate(live, names, uppers)
+        if nb is not None:
+            # FLEET initial load: the journal is bypassed for the span (its
+            # per-window amortization exists for steady state; an initial
+            # load pays N manifest commits ONCE)
+            staging = os.path.join(self.feed_dir, f"_bootstrap_{uuid.uuid4().hex}")
+            feeds = {name: (live[t].target, live[t].config.changefeed_id)
+                     for name, t in names.items()}
+            for name, res in span.bootstrap(feeds, nb, staging).items():
+                out["events"] += sum(r["event_count"] for r in res.get("lineage", []))
+                out["merges"] += len(uppers)
+                self._state[names[name]]["ckpt"] = hi
+            out["windows_merged"] += len(uppers)
+            out["write_jobs"] = out.get("write_jobs", 0) + 1
+            out["quarantined"] = quarantined(qobs)
             return out
-        deduped = probe._dedup_window(df, dkey)
         # cluster the cached dedup output by table WITHIN partitions (no
         # extra exchange): cache batches become single-table runs, so each
         # table's slice filter prunes other tables' batches via the
         # in-memory scan's per-batch column stats instead of rescanning the
         # whole cache N times
-        deduped = deduped.sortWithinPartitions(self.table_col).persist()
+        deduped = span.dedup().sortWithinPartitions(self.table_col).persist()
         try:
-            if not self._apply_homogeneous(live, names, deduped, lo, uppers, out):
+            if not self._apply_homogeneous(live, names, span, deduped, out):
                 # heterogeneous (diverged schema chains, DDL-at-boundary,
                 # truncate, CoW mode): per window, MOR tables without a
                 # truncate incarnation still share ONE union write job per
@@ -715,12 +697,8 @@ class MultiTableChangefeed:
                 # advance the checkpoint past an unfolded journal window,
                 # whose later fold would be wrongly recognized as replay.
                 self._fold_journal()
-                prev = lo
-                for i, u in enumerate(uppers):
-                    wdf = (
-                        deduped.filter(F.col("_win") == i).drop("_win")
-                        if span else deduped
-                    )
+                for i, prev, u in span.windows():
+                    wdf = deduped.filter(F.col(WIN) == i).drop(WIN)
                     batched, serial = [], []
                     for name, t in sorted(names.items()):
                         if (live[t].config.sink_mode == "mor"
@@ -749,198 +727,60 @@ class MultiTableChangefeed:
                         if committed and feed.config.sink_mode == "mor":
                             st["depth"] += 1
                     out["windows_merged"] += w_merged > 0
-                    prev = u
         finally:
             deduped.unpersist()
-        if qobs is not None:
-            try:
-                out["quarantined"] = int(qobs.get.get("quarantined") or 0)
-            except Exception:
-                out["quarantined"] = 0
+        out["quarantined"] = quarantined(qobs)
         return out
 
-    def _fleet_bootstrap(self, live: dict, names: dict, df,
-                         lo: int, uppers: list, out: dict) -> bool:
-        """FLEET initial-load fast path — the multi-table twin of the
-        single-table bootstrap span (pipeline.py): when every applying
-        table's target is completely EMPTY, no journal window is pending,
-        and no table resumes mid-span, the span folds ONCE across windows
-        per (table, key) DIRECTLY off the raw prepared span — no
-        per-window pre-dedup exchange, no table-clustering sort, no cache
-        of the undeduped span (at a true 100-TB initial load that cache
-        would hold the whole corpus) — mounts only the survivors, and
-        writes every table's compacted BASE in one
-        partitionBy(table, bucket) job. Lineage re-scans the WAL pruned
-        to (win, table, partition_id, commit_ts). Per-window batch ids /
-        syncpoints / lineage commit atomically per table; the journal is
-        bypassed for the span (its per-window O(1) amortization exists
-        for steady state; an initial load pays N manifest commits ONCE).
-        The normal path would journal every window as deltas and write
-        the data again at the first fold + compaction. Excluded: CoW,
-        diverged schema chains, DDL-at-boundary, truncate incarnations,
-        shared fleet filesets (their per-bucket mixed files have no
-        per-table split yet) and mixed bucket counts — those fleets take
-        the normal path, correct either way."""
-        import uuid as _uuid
-
+    def _bootstrap_gate(self, live: dict, names: dict, uppers: list) -> int | None:
+        """FLEET initial-load gate — the multi-table twin of the single-table
+        bootstrap span: a span of 2+ windows whose applying tables are all
+        completely EMPTY, with no journal window pending and no table
+        resuming mid-span, folds ONCE across windows per (table, key)
+        (:meth:`SpanExecutor.bootstrap`). The normal path would journal
+        every window as deltas and write the data again at the first fold
+        + compaction. Excluded: CoW, diverged schema chains,
+        DDL-at-boundary, truncate incarnations, shared fleet filesets
+        (their per-bucket mixed files have no per-table split yet) and
+        mixed bucket counts — those fleets take the normal path, correct
+        either way. Returns the common bucket count, or None."""
         cfg = self.config
         hi = uppers[-1]
-        if not cfg.bootstrap_fast_path or cfg.sink_mode != "mor":
-            return False
-        digests = set()
-        for name, t in names.items():
-            feed = live[t]
-            st = self._state[t]
-            if feed._ddl_at(hi) is not None or st["truncate"]:
-                return False
-            if st["ckpt"] >= uppers[0]:
-                return False  # resumes mid-span: per-window path handles it
-            digests.add(feed.registry.chain_digest(hi))
-        if len(digests) > 1:
-            return False  # diverged chains: one mount can't decode all
-        applying = names
-        nb_all = {self._state[t]["n_buckets"] for t in applying.values()}
-        if len(nb_all) != 1:
-            return False
-        if len(applying) >= cfg.shared_deltas_after:
-            return False  # shared fileset mode owns fleets this large
-        if self.journal.pending():
-            return False  # unfolded windows: manifests understate state
+        if (len(uppers) < 2 or not cfg.bootstrap_fast_path
+                or cfg.sink_mode != "mor" or len(names) >= cfg.shared_deltas_after):
+            return None
+        ts = list(names.values())
+        if any(live[t]._ddl_at(hi) is not None or self._state[t]["truncate"]
+               # resumes mid-span: the per-window path handles it
+               or self._state[t]["ckpt"] >= uppers[0] for t in ts):
+            return None
+        if len({live[t].registry.chain_digest(hi) for t in ts}) > 1:
+            return None  # diverged chains: one mount can't decode all
+        nbs = {self._state[t]["n_buckets"] for t in ts}
+        # one staged layout needs one bucket count; unfolded journal
+        # windows would mean the manifests understate the tables' state
+        if len(nbs) != 1 or self.journal.pending():
+            return None
+        if not all(bootstrap_ready(live[t].target, cfg) for t in ts):
+            return None
+        return nbs.pop()
 
-        def empty(t):
-            tg = live[t].target
-            if not tg.exists():
-                return False
-            m = tg.manifest()
-            return (not any(i["files"] for i in m["buckets"].values())
-                    and not m.get("deltas") and not m.get("truncate_ts", 0))
-
-        if not all(empty(t) for t in applying.values()):
-            return False
-        from ticdc_spark.functions.mount import mount, mounted_columns
-
-        probe = live[next(iter(applying.values()))]
-        nb = next(iter(nb_all))
-        n_slots = len(applying) * nb
-        dp = self.spark.sparkContext.defaultParallelism
-        raw = df.drop("_win").withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64(F.col(cfg.key[0])), F.lit(nb)).cast("int"),
-        )
-        if n_slots >= dp:
-            # the fleet twin of the single-table aligned bootstrap: ONE
-            # exchange of the raw span, placed (table, bucket) -> partition
-            # 1:1 (operators/placement.py — plain hash-on-(table,bucket)
-            # collides and staggers the whole dedup+mount+write stage);
-            # the (table, bucket, key) aggregate reuses the partitioning
-            # in a single sort pass, and the partitionBy write streams
-            # straight out of mount — the mounted rows are never
-            # exchanged a second time, one file per (table, bucket).
-            from ticdc_spark.operators.placement import placement_token_column
-
-            tnames = sorted(applying)
-            tmap = F.create_map(
-                *[x for i, tn in enumerate(tnames)
-                  for x in (F.lit(tn), F.lit(i))]
-            )
-            idx = (
-                F.coalesce(F.element_at(tmap, F.col(self.table_col)),
-                           F.lit(0)) * nb + F.col("_bucket")
-            )
-            raw = raw.withColumn(
-                "_pt", placement_token_column(self.spark, n_slots, idx)
-            ).repartition(n_slots, F.col("_pt"))
-            final = probe._dedup_window(
-                raw, ["_pt", self.table_col, "_bucket", *cfg.key]
-            ).drop("_pt").filter(F.col("op_rank") != 1)
-        else:
-            # fewer (table, bucket) slots than cores: spread the raw span
-            # by (table, key[0]) — the aggregate reuses it, still one
-            # sort pass — and align buckets in a second small exchange of
-            # the deduped mounted rows.
-            raw = raw.repartition(dp, F.col(self.table_col),
-                                  F.col(cfg.key[0]))
-            final = probe._dedup_window(
-                raw, [self.table_col, "_bucket", *cfg.key]
-            ).filter(F.col("op_rank") != 1)
-        mounted = mount(final, probe.registry, as_of_ts=hi,
-                        defaults=cfg.defaults)
-        payload_cols = mounted_columns(probe.registry, hi)
-        src = mounted.select(
-            self.table_col, "_bucket", *cfg.key, *payload_cols,
-            F.col("commit_ts").alias("_commit_ts"),
-            F.col("start_ts").alias("_start_ts"),
-            F.col("op_rank").alias("_op_rank"),
-            (F.col("op") == "D").cast("int").alias("_deleted"),
-        )
-        if n_slots < dp:
-            src = src.repartition(n_slots, self.table_col, F.col("_bucket"))
-        staging = os.path.join(self.feed_dir, f"_bootstrap_{_uuid.uuid4().hex}")
-        src.write.partitionBy(self.table_col, "_bucket").parquet(staging)
-        out["write_jobs"] = out.get("write_jobs", 0) + 1
-        stats = (
-            df.groupBy("_win", self.table_col, "partition_id")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.max("commit_ts").alias("mx"))
-            .collect()
-        )
-        by_key: dict = {}
-        for r in stats:
-            by_key.setdefault((int(r["_win"]), r[self.table_col]), []).append(r)
-        for name in sorted(applying):
-            t = applying[name]
-            feed = live[t]
-            sdir = os.path.join(staging, f"{self.table_col}={name}")
-            bucket_files: dict = {}
-            if os.path.isdir(sdir):
-                os.makedirs(feed.target.data_dir, exist_ok=True)
-                dest = os.path.join(feed.target.data_dir, _uuid.uuid4().hex)
-                os.rename(sdir, dest)
-                for d in sorted(os.listdir(dest)):
-                    if d.startswith("_bucket="):
-                        bdir = os.path.join(dest, d)
-                        bucket_files[d.split("=", 1)[1]] = sorted(
-                            os.path.join(bdir, x) for x in os.listdir(bdir)
-                            if x.endswith(".parquet")
-                        )
-            batches, prev = [], lo
-            for i, u in enumerate(uppers):
-                bid = f"{feed.config.changefeed_id}:{prev}:{u}"
-                rows = [
-                    {"batch_id": bid, "partition_id": int(r["partition_id"]),
-                     "resolved_ts": u, "event_count": int(r["n"]),
-                     "max_commit_ts": int(r["mx"])}
-                    for r in by_key.get((i, name), [])
-                ]
-                batches.append({"batch_id": bid, "resolved_ts": u,
-                                "lineage_rows": rows})
-                out["events"] += sum(r["event_count"] for r in rows)
-                out["merges"] += 1
-                prev = u
-            feed.target.bootstrap_base_group(batches, bucket_files)
-            self._state[t]["ckpt"] = hi
-        out["windows_merged"] += len(uppers)
-        shutil.rmtree(staging, ignore_errors=True)
-        return True
-
-    def _apply_homogeneous(self, live: dict, names: dict, deduped, lo: int,
-                           uppers: list, out: dict) -> bool:
+    def _apply_homogeneous(self, live: dict, names: dict, span: SpanExecutor,
+                           deduped, out: dict) -> bool:
         """HOMOGENEOUS-window fast path: when every live table shares the
         SAME schema chain up to ``hi`` (the 100k-table fleet case — one
-        transcript schema, global DDLs only), mount ONCE, write every
-        table's delta files in ONE Spark job (partitionBy table — plus
-        ``_bucket`` when tables use the bucketed delta layout, so the
-        7.9x point-read dial survives multi-table mode), and commit the
-        window with ONE feed-journal append. Driver cost per window: 1
-        write job + 1 metadata-cardinality lineage aggregate + 1 jsonl
-        append — independent of table count; per-table manifest I/O is
-        amortized into group folds at barriers/compactions/run end.
-        Falls back (returns False) on diverged chain digests, a DDL
-        barrier at ``hi``, truncate incarnations, mixed bucket counts, or
-        CoW mode."""
+        transcript schema, global DDLs only), the span executor mounts
+        ONCE and writes every table's delta files in ONE Spark job
+        (partitionBy table — plus ``_bucket`` when tables use the bucketed
+        delta layout, so the 7.9x point-read dial survives multi-table
+        mode); each window then commits with ONE feed-journal append.
+        Driver cost per window: 1 jsonl append — independent of table
+        count; per-table manifest I/O is amortized into group folds at
+        barriers/compactions/run end. Falls back (returns False) on
+        diverged chain digests, a DDL barrier at ``hi``, truncate
+        incarnations, mixed bucket counts, or CoW mode."""
         cfg = self.config
-        hi = uppers[-1]
-        span = len(uppers) > 1
+        hi = span.uppers[-1]
         if cfg.sink_mode != "mor":
             return False
         applying: dict = {}
@@ -961,10 +801,10 @@ class MultiTableChangefeed:
             return False
         if not applying:
             return True
-        nb_all = {self._state[applying[n]]["n_buckets"] for n in applying}
+        nb_all = {self._state[t]["n_buckets"] for t in applying.values()}
         nb_set = {
-            self._state[applying[n]]["n_buckets"] for n in applying
-            if self._state[applying[n]]["layout"] == "bucketed"
+            self._state[t]["n_buckets"] for t in applying.values()
+            if self._state[t]["layout"] == "bucketed"
         }
         if len(nb_set) > 1:
             return False  # mixed bucket counts can't share one staged layout
@@ -976,108 +816,46 @@ class MultiTableChangefeed:
         shared = (
             len(applying) >= cfg.shared_deltas_after and len(nb_all) == 1
         )
-        from ticdc_spark.functions.mount import mount, mounted_columns
-
-        probe = live[next(iter(applying.values()))]
+        bucketed = bool(nb_set) or shared
+        nb = next(iter(nb_all if shared else nb_set)) if bucketed else None
         # per-table checkpoint snapshot BEFORE updates: a table resuming
         # mid-span applies only windows above its own mark (the others'
         # batches are recognized as replays at fold anyway)
         ckpt0 = {t: self._state[t]["ckpt"] for t in applying.values()}
         sliced = deduped.filter(F.col(self.table_col).isin(*applying))
-        mounted = mount(sliced, probe.registry, as_of_ts=hi, defaults=cfg.defaults)
-        payload_cols = mounted_columns(probe.registry, hi)
-        src = mounted.select(
-            *(["_win"] if span else []),
-            self.table_col, *cfg.key, *payload_cols,
-            F.col("commit_ts").alias("_commit_ts"),
-            F.col("start_ts").alias("_start_ts"),
-            F.col("op_rank").alias("_op_rank"),
-            (F.col("op") == "D").cast("int").alias("_deleted"),
-        )
-        bucketed = bool(nb_set) or shared
-        if shared:
-            nb = nb_all.pop()
-            # cluster rows by table WITHIN each bucket file so a per-table
-            # read of a recent delta at least skips via row-group stats
-            src = src.withColumn(
-                "_bucket",
-                F.pmod(F.xxhash64(F.col(cfg.key[0])), F.lit(nb)).cast("int"),
-            ).sortWithinPartitions(
-                *(["_win"] if span else []), "_bucket", self.table_col
-            )
-            pcols = ["_bucket"]
-        else:
-            pcols = [self.table_col]
-            if bucketed:
-                nb = nb_set.pop()
-                src = src.withColumn(
-                    "_bucket",
-                    F.pmod(F.xxhash64(F.col(cfg.key[0])), F.lit(nb)).cast("int"),
-                )
-                pcols.append("_bucket")
-        if span:
-            pcols = ["_win", *pcols]
-        seq0, staging = self.journal.new_staging()
+        staging = self.journal.span_staging()
         # THE one write job for all tables in the whole span
-        src.write.partitionBy(*pcols).parquet(staging)
+        span.stage(sliced, staging, nb, shared)
         out["write_jobs"] = out.get("write_jobs", 0) + 1
-        # per-(window, table, source partition) lineage off the cached
-        # dedup: metadata-cardinality output, one small job for the span
-        gcols = ([F.col("_win")] if span else []) + [
-            F.col(self.table_col), F.col("partition_id")]
-        stats = (
-            deduped.filter(F.col(self.table_col).isin(*applying))
-            .groupBy(*gcols)
-            .agg(F.sum("_n_events").alias("n"), F.max("_max_commit_ts").alias("mx"))
-            .collect()
-        )
-        by_key: dict = {}
-        for r in stats:
-            w = int(r["_win"]) if span else 0
-            by_key.setdefault((w, r[self.table_col]), []).append(r)
-        prev = lo
-        for i, u in enumerate(uppers):
-            if span:
-                # carve the window's partition dir out as its own journal
-                # staging (cheap rename; a crash before the appends leaves
-                # orphan dirs above the newest journal seq — reaped)
-                seq_i, wpath = self.journal.new_staging()
-                wsrc = os.path.join(staging, f"_win={i}")
-                if os.path.isdir(wsrc):
-                    os.rename(wsrc, wpath)
-            else:
-                seq_i = seq0
+        stats = span.lineage(sliced)
+        commits = {name: span.commits(live[t].config.changefeed_id, name, stats,
+                                     None, False)
+                   for name, t in applying.items()}
+        for i, prev, u in span.windows():
+            # the window's partition dir becomes its own journal staging
+            # (cheap rename; a crash before the append leaves an orphan
+            # dir above the newest journal seq — reaped)
+            seq = self.journal.adopt(os.path.join(staging, f"{WIN}={i}"))
             entry_tables: dict = {}
-            w_merged = 0
             for name in sorted(applying):
                 t = applying[name]
                 if u <= ckpt0[t]:
                     continue  # this table already has this window
-                feed = live[t]
-                batch_id = f"{feed.config.changefeed_id}:{prev}:{u}"
-                rows = [
-                    {"batch_id": batch_id, "partition_id": int(r["partition_id"]),
-                     "resolved_ts": u, "event_count": int(r["n"]),
-                     "max_commit_ts": int(r["mx"])}
-                    for r in by_key.get((i, name), [])
-                ]
-                entry_tables[t] = {"src": name, "path": feed.target.path,
-                                   "bid": batch_id, "lineage": rows}
+                b = commits[name][i]
+                entry_tables[t] = {"src": name, "path": live[t].target.path,
+                                   "bid": b["batch_id"], "lineage": b["lineage_rows"]}
                 st = self._state[t]
                 st["ckpt"] = u
                 st["depth"] += 1
-                out["events"] += sum(r["event_count"] for r in rows)
+                out["events"] += sum(r["event_count"] for r in b["lineage_rows"])
                 out["merges"] += 1
-                w_merged += 1
-            out["windows_merged"] += w_merged > 0
+            out["windows_merged"] += bool(entry_tables)
             if entry_tables:
                 # the window's commit point: ONE durable append for all N
-                self.journal.append_window(seq_i, prev, u, bucketed,
+                self.journal.append_window(seq, prev, u, bucketed,
                                            entry_tables, self.table_col,
                                            shared=shared)
-            prev = u
-        if span:
-            shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(staging, ignore_errors=True)
         return True
 
     def _sink_union_window(self, live: dict, items: list, wdf, lo: int,
@@ -1098,8 +876,6 @@ class MultiTableChangefeed:
         runs ≤2 write jobs per window instead of 32 (measured:
         scripts/bench_multi_table.py churn scenario). Returns the number
         of tables committed."""
-        from ticdc_spark.functions.mount import mount, mounted_columns
-
         cfg = self.config
         frames: dict = {}
         for name, t in items:
@@ -1109,13 +885,7 @@ class MultiTableChangefeed:
             mounted = mount(sliced, feed.registry, as_of_ts=as_of,
                             defaults=cfg.defaults)
             pcols = mounted_columns(feed.registry, as_of)
-            src = mounted.select(
-                self.table_col, *cfg.key, *pcols,
-                F.col("commit_ts").alias("_commit_ts"),
-                F.col("start_ts").alias("_start_ts"),
-                F.col("op_rank").alias("_op_rank"),
-                (F.col("op") == "D").cast("int").alias("_deleted"),
-            )
+            src = mounted.select(self.table_col, *cfg.key, *pcols, *order_meta())
             frames[name] = (t, src, dict(src.dtypes))
         # greedy type-compatibility grouping: frames join a group iff no
         # shared column name carries a different type there
@@ -1140,7 +910,8 @@ class MultiTableChangefeed:
         )
         by_table: dict = {}
         for r in stats:
-            by_table.setdefault(r[self.table_col], []).append(r)
+            by_table.setdefault(r[self.table_col], []).append(
+                (r["partition_id"], r["n"], r["mx"]))
         committed = 0
         for g in groups:
             gnames = g["names"]
@@ -1156,10 +927,7 @@ class MultiTableChangefeed:
             pcols = [self.table_col]
             if bucketed:
                 union = union.withColumn(
-                    "_bucket",
-                    F.pmod(F.xxhash64(F.col(cfg.key[0])),
-                           F.lit(nbs.pop())).cast("int"),
-                )
+                    "_bucket", LakeTable._bucket_expr(nbs.pop(), cfg.key[0]))
                 pcols.append("_bucket")
             seq, staging = self.journal.new_staging()
             union.write.partitionBy(*pcols).parquet(staging)
@@ -1169,12 +937,7 @@ class MultiTableChangefeed:
                 t = frames[n][0]
                 feed = live[t]
                 batch_id = f"{feed.config.changefeed_id}:{lo}:{hi}"
-                rows = [
-                    {"batch_id": batch_id, "partition_id": int(r["partition_id"]),
-                     "resolved_ts": hi, "event_count": int(r["n"]),
-                     "max_commit_ts": int(r["mx"])}
-                    for r in by_table.get(n, [])
-                ]
+                rows = lineage_rows(batch_id, by_table.get(n, []), hi)
                 entry_tables[t] = {"src": n, "path": feed.target.path,
                                    "bid": batch_id, "lineage": rows}
                 st = self._state[t]
@@ -1263,49 +1026,13 @@ def fold_feed_journal(spark: SparkSession, j: FeedJournal) -> None:
         j.cleanup()
         return
 
-    def _list(dest: str, bucketed: bool) -> tuple:
-        files: list = []
-        buckets: dict | None = None
-        if os.path.isdir(dest):
-            if bucketed:
-                buckets = {}
-                for d in sorted(os.listdir(dest)):
-                    if d.startswith("_bucket="):
-                        bdir = os.path.join(dest, d)
-                        buckets[d.split("=", 1)[1]] = sorted(
-                            os.path.join(bdir, x)
-                            for x in os.listdir(bdir)
-                            if x.endswith(".parquet")
-                        )
-                files = sorted(f for fl in buckets.values() for f in fl)
-            else:
-                files = sorted(
-                    os.path.join(dest, x)
-                    for x in os.listdir(dest) if x.endswith(".parquet")
-                )
-        return files, buckets
-
-    from urllib.parse import unquote
-
-    def _part_dirs(window_dir: str, col: str) -> dict:
-        """Partition value -> dir, UNESCAPING Hive's %-hex encoding of
-        special chars in partition paths (a span named ``pt#p0`` is
-        staged as ``table_name=pt%23p0`` — a literal join would miss
-        it and silently commit an empty window)."""
-        out = {}
-        if os.path.isdir(window_dir):
-            for d in os.listdir(window_dir):
-                if d.startswith(col + "="):
-                    out[unquote(d.split("=", 1)[1])] = os.path.join(window_dir, d)
-        return out
-
-    part_dirs = {
-        e["seq"]: _part_dirs(os.path.join(j.root, e["dir"]), e["table_col"])
+    staged = {
+        e["seq"]: part_dirs(os.path.join(j.root, e["dir"]), e["table_col"])
         for e in entries if not e.get("shared")
     }
     # shared windows: ONE listing serves every table in the window
     shared_listing = {
-        e["seq"]: _list(os.path.join(j.root, e["dir"]), e.get("bucketed", False))
+        e["seq"]: staged_files(os.path.join(j.root, e["dir"]), e.get("bucketed", False))
         for e in entries if e.get("shared")
     }
     per_table: dict = {}
@@ -1340,7 +1067,7 @@ def fold_feed_journal(spark: SparkSession, j: FeedJournal) -> None:
                 b["shared"] = (e["table_col"], info["src"])
                 group.append(b)
                 continue
-            src = part_dirs[e["seq"]].get(info["src"], "")
+            src = staged[e["seq"]].get(info["src"], "")
             dest = os.path.join(table.data_dir, f"jw{e['seq']:08d}")
             if src and os.path.isdir(src):
                 os.makedirs(table.data_dir, exist_ok=True)
@@ -1348,7 +1075,7 @@ def fold_feed_journal(spark: SparkSession, j: FeedJournal) -> None:
                     os.rename(src, dest)
                 except OSError:
                     shutil.move(src, dest)
-            files, buckets = _list(dest, e.get("bucketed", False))
+            files, buckets = staged_files(dest, e.get("bucketed", False))
             group.append(_batch(e, info, files, buckets))
         table.append_delta_files_group(group)
     j.mark_folded(entries[-1]["seq"])

@@ -1,0 +1,345 @@
+"""The span executor: one DDL-free span of resolved windows over 1..N tables.
+
+Per resolved window the engine does one job — scan, prepare, LWW dedup,
+mount, write, then an atomic per-window commit — and TiCDC's sink manager
+runs that same per-span pipeline for one table or for 100k
+(cdc/processor/sinkmanager/manager.go:489-663). This module is that one
+pipeline. Its input is a prepared WAL slice whose rows carry a table
+column; a single-table feed adds a literal one and is a fleet of one. The
+executor never knows which front end it serves:
+
+- ``pipeline.Changefeed`` commits the staged windows with one group
+  manifest rewrite (``LakeTable.append_delta_files_group``);
+- ``multi.MultiTableChangefeed`` commits each window with one feed-journal
+  append;
+- ``structured.run_streaming_multi`` commits each micro-batch (a span of one
+  window) with one journal append carrying its epoch.
+
+Two halves:
+
+- :meth:`SpanExecutor.bootstrap` — every target is EMPTY (the initial
+  load): fold the span once per (table, bucket, key) straight off the raw
+  slice (LWW is associative over (commit_ts, start_ts, op_rank)), drop
+  tombstones, mount the survivors, write every table's compacted BASE in one
+  ``partitionBy(table, _bucket)`` job, take lineage from one column-pruned
+  re-scan and commit with ``bootstrap_base_group`` per table.
+- :meth:`SpanExecutor.stage` + :meth:`SpanExecutor.lineage` — the delta
+  span: dedup per (window, table, key), mount once, one ``partitionBy``
+  write (flat, bucketed or a shared per-bucket fileset) and one
+  metadata-cardinality lineage job. The caller commits.
+
+The module-level helpers are the pieces every front end shares: window
+planning, span extent, the window tag, the LWW order-metadata columns,
+lineage rows (stats-job or Observation), the quarantine read and the
+empty-table gate.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import uuid
+from urllib.parse import unquote
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+from ticdc_spark.functions.mount import mount, mounted_columns
+from ticdc_spark.operators.placement import placement_token_column
+from ticdc_spark.operators.sortdedup import lww_dedup
+from ticdc_spark.sinks.lake import LakeTable, staged_files
+
+WIN = "_win"
+
+
+# ---------------- window planning ----------------
+
+
+def plan_windows(steps: list, ckpt: int, config) -> list:
+    """Window upper bounds from ``frontier_steps`` output: fold
+    ``frontiers_per_batch`` resolved steps into one window; with finish-at
+    (``target_ts``) no window passes it, and the last one clamps AT it once
+    the frontier has resolved past it."""
+    k = max(1, config.frontiers_per_batch)
+    uppers = steps[k - 1 :: k]
+    if steps and (not uppers or uppers[-1] != steps[-1]):
+        uppers.append(steps[-1])
+    tgt = config.target_ts
+    if tgt is not None:
+        reached = bool(steps) and steps[-1] >= tgt
+        uppers = [u for u in uppers if u < tgt]
+        if reached and ckpt < tgt:
+            uppers.append(tgt)
+    return uppers
+
+
+def span_end(uppers: list, i: int, cap: int, ddl_rows: list) -> int:
+    """Index of the last window of the span starting at ``uppers[i]``: at
+    most ``cap`` windows, never crossing a DDL commit-ts."""
+    j = i
+    while (
+        j + 1 < len(uppers) and (j + 1 - i) < cap
+        and not any(uppers[j] < int(d["commit_ts"]) <= uppers[j + 1]
+                    for d in ddl_rows)
+    ):
+        j += 1
+    return j
+
+
+def tag_windows(df: DataFrame, uppers: list) -> DataFrame:
+    """``_win`` = index of the first upper bound >= commit_ts."""
+    w = F.lit(len(uppers) - 1)
+    for i in range(len(uppers) - 2, -1, -1):
+        w = F.when(F.col("commit_ts") <= uppers[i], i).otherwise(w)
+    return df.withColumn(WIN, w.cast("int"))
+
+
+# ---------------- per-row pieces ----------------
+
+
+def op_from_rank() -> Column:
+    return (F.when(F.col("op_rank") == 1, "D")
+            .when(F.col("op_rank") == 2, "U").otherwise("I"))
+
+
+def dedup(df: DataFrame, key) -> DataFrame:
+    """LWW dedup with per-key lineage stats folded into the SAME aggregate
+    (one exchange), and ``op`` re-derived from the winning rank."""
+    return lww_dedup(df, list(key), stats=True).withColumn("op", op_from_rank())
+
+
+def order_meta() -> list:
+    """The LWW order metadata a MOR row carries (deduped rows in, table
+    columns out)."""
+    return [
+        F.col("commit_ts").alias("_commit_ts"),
+        F.col("start_ts").alias("_start_ts"),
+        F.col("op_rank").alias("_op_rank"),
+        (F.col("op") == "D").cast("int").alias("_deleted"),
+    ]
+
+
+# ---------------- lineage ----------------
+
+
+def lineage_rows(batch_id: str, stats, resolved_ts: int | None) -> list:
+    """One commit's lineage rows; ``stats`` = [(partition_id, events,
+    max_commit_ts)]."""
+    return [
+        {"batch_id": batch_id, "partition_id": int(p), "resolved_ts": resolved_ts,
+         "event_count": int(n), "max_commit_ts": int(mx)}
+        for p, n, mx in stats
+    ]
+
+
+def observe_lineage(df: DataFrame, partitions: list, batch_id: str,
+                    resolved_ts: int | None) -> tuple:
+    """Per-source-partition lineage riding on the sink's own action via
+    the Observation API — zero extra Spark jobs. Deduped rows carry
+    per-key ``_n_events``/``_max_commit_ts``; raw events count one each.
+    Returns (observed df, thunk of lineage rows). An empty slice schedules
+    zero tasks, so the Observation never fires: no rows."""
+    n, mx = ((F.col("_n_events"), F.col("_max_commit_ts"))
+             if "_n_events" in df.columns else (F.lit(1), F.col("commit_ts")))
+    obs = Observation(f"lineage-{batch_id}")
+    aggs = []
+    for p in partitions:
+        hit = F.col("partition_id") == p
+        aggs += [F.sum(F.when(hit, n)).alias(f"n_{p}"),
+                 F.max(F.when(hit, mx)).alias(f"mx_{p}")]
+    df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"), *aggs)
+
+    def rows() -> list:
+        try:
+            vals = obs.get
+        except Exception:
+            return []
+        return lineage_rows(batch_id, [
+            (p, vals[f"n_{p}"], vals[f"mx_{p}"]) for p in partitions
+            if vals.get(f"n_{p}") is not None
+        ], resolved_ts)
+
+    return df, rows
+
+
+def quarantined(qobs) -> int:
+    """Rows the checksum quarantine dropped (0 without verification, or
+    when the observed action never ran)."""
+    if qobs is None:
+        return 0
+    try:
+        return int(qobs.get.get("quarantined") or 0)
+    except Exception:
+        return 0
+
+
+# ---------------- staging ----------------
+
+
+def bootstrap_ready(target: LakeTable, config) -> bool:
+    """The initial-load gate: the fast path is on and the target is
+    completely empty (no base files, no deltas, no truncate incarnation)."""
+    if not config.bootstrap_fast_path or not target.exists():
+        return False
+    m = target.manifest()
+    return (not any(info["files"] for info in m["buckets"].values())
+            and not m.get("deltas") and not m.get("truncate_ts", 0))
+
+
+def part_dirs(parent: str, col: str) -> dict:
+    """Partition value -> dir under ``parent``, UNESCAPING Hive's %-hex
+    encoding of special chars (a span named ``pt#p0`` is staged as
+    ``table_name=pt%23p0``; a literal join would miss it and commit an
+    empty window)."""
+    if not os.path.isdir(parent):
+        return {}
+    return {unquote(d.split("=", 1)[1]): os.path.join(parent, d)
+            for d in os.listdir(parent) if d.startswith(col + "=")}
+
+
+class SpanExecutor:
+    """One DDL-free span: windows ``(lo, uppers[0]], (uppers[0], uppers[1]],
+    ...`` over the tables named in ``df``'s ``table_col``, mounted with one
+    ``registry`` (callers guarantee the tables share its schema chain)."""
+
+    def __init__(self, spark: SparkSession, df: DataFrame, lo: int,
+                 uppers: list, registry, config, table_col: str):
+        self.spark = spark
+        self.df = tag_windows(df, uppers)
+        self.lo, self.uppers = lo, list(uppers)
+        self.registry = registry
+        self.key = list(config.key)
+        self.defaults = config.defaults
+        self.tc = table_col
+
+    def windows(self):
+        """(index, lower bound, upper bound) per window."""
+        prev = self.lo
+        for i, u in enumerate(self.uppers):
+            yield i, prev, u
+            prev = u
+
+    def _mount(self, df: DataFrame) -> tuple:
+        hi = self.uppers[-1]
+        return (mount(df, self.registry, as_of_ts=hi, defaults=self.defaults),
+                mounted_columns(self.registry, hi))
+
+    def _stats(self, df: DataFrame, n: Column, mx: Column) -> dict:
+        by: dict = {}
+        for r in (df.groupBy(WIN, self.tc, "partition_id")
+                  .agg(n.alias("n"), mx.alias("mx")).collect()):
+            by.setdefault((int(r[WIN]), r[self.tc]), []).append(
+                (r["partition_id"], r["n"], r["mx"]))
+        return by
+
+    def commits(self, feed_id: str, name: str, stats: dict,
+                staging: str | None, bucketed: bool) -> list:
+        """Per-window batches of table ``name``: batch id, resolved-ts,
+        lineage rows and — from a :meth:`stage` dir — its staged files."""
+        out = []
+        for i, prev, u in self.windows():
+            bid = f"{feed_id}:{prev}:{u}"
+            b = {"batch_id": bid, "resolved_ts": u,
+                 "lineage_rows": lineage_rows(bid, stats.get((i, name), []), u)}
+            if staging is not None:
+                wdir = part_dirs(os.path.join(staging, f"{WIN}={i}"), self.tc)
+                b["files"], b["buckets"] = staged_files(wdir.get(name, ""), bucketed)
+            out.append(b)
+        return out
+
+    # ---------------- bootstrap half ----------------
+
+    def bootstrap(self, feeds: dict, n_buckets: int, staging: str) -> dict:
+        """Initial load onto EMPTY targets, ``feeds`` = {table value:
+        (LakeTable, feed id)}; one write job + one lineage job, then one
+        ``bootstrap_base_group`` per table. Returns {table value: commit
+        result}. The rows carry LWW order metadata only if the targets'
+        schema has it (CoW tables do not).
+
+        Placement: with at least ``defaultParallelism`` (table, bucket)
+        slots, ONE exchange of the raw span places slot -> partition 1:1
+        (operators/placement.py); the (table, bucket, key) aggregate reuses
+        that partitioning in a single sort pass and the write streams
+        straight out of mount, one file per slot. With fewer slots than
+        cores that would idle the cluster, so the raw span spreads by
+        (table, key[0]) — by key[0] alone for a single table, whose table
+        column may be a literal the aggregate would not reuse a partitioning
+        on — and the deduped mounted rows align in a second, small
+        exchange."""
+        tc, key = self.tc, self.key
+        schema = next(iter(feeds.values()))[0].manifest()["schema"]
+        meta = "_commit_ts" in [c[0] for c in schema]
+        n_slots = len(feeds) * n_buckets
+        dp = self.spark.sparkContext.defaultParallelism
+        raw = self.df.drop(WIN).withColumn(
+            "_bucket", LakeTable._bucket_expr(n_buckets, key[0]))
+        if n_slots >= dp:
+            tmap = F.create_map(*[x for i, name in enumerate(sorted(feeds))
+                                  for x in (F.lit(name), F.lit(i))])
+            idx = (F.coalesce(F.element_at(tmap, F.col(tc)), F.lit(0)) * n_buckets
+                   + F.col("_bucket"))
+            raw = raw.withColumn(
+                "_pt", placement_token_column(self.spark, n_slots, idx)
+            ).repartition(n_slots, F.col("_pt"))
+            final = dedup(raw, ["_pt", tc, "_bucket", *key]).drop("_pt")
+        else:
+            spread = [F.col(tc)] if len(feeds) > 1 else []
+            raw = raw.repartition(dp, *spread, F.col(key[0]))
+            final = dedup(raw, [tc, "_bucket", *key])
+        # final-state tombstones leave the base entirely — exactly what
+        # compact(drop_tombstones=True) produces in resolved-ts mode
+        mounted, payload = self._mount(final.filter(F.col("op_rank") != 1))
+        src = mounted.select(tc, "_bucket", *key, *payload,
+                             *(order_meta() if meta else []))
+        if n_slots < dp:
+            src = src.repartition(n_slots, F.col(tc), F.col("_bucket"))
+        src.write.partitionBy(tc, "_bucket").parquet(staging)
+        # lineage re-scans the WAL pruned to (win, table, partition, ts)
+        # instead of caching the undeduped span (at a 100-TB initial load
+        # that cache would hold the whole corpus)
+        stats = self._stats(self.df, F.count(F.lit(1)), F.max("commit_ts"))
+        staged = part_dirs(staging, tc)
+        out = {}
+        for name in sorted(feeds):
+            target, feed_id = feeds[name]
+            bucket_files: dict = {}
+            if name in staged:
+                os.makedirs(target.data_dir, exist_ok=True)
+                dest = os.path.join(target.data_dir, uuid.uuid4().hex)
+                os.rename(staged[name], dest)
+                bucket_files = staged_files(dest, True)[1]
+            out[name] = target.bootstrap_base_group(
+                self.commits(feed_id, name, stats, None, False), bucket_files)
+        shutil.rmtree(staging, ignore_errors=True)
+        return out
+
+    # ---------------- delta half ----------------
+
+    def dedup(self) -> DataFrame:
+        """The span deduped per (window, table, key); callers cache it —
+        :meth:`stage` and :meth:`lineage` both read it."""
+        return dedup(self.df, [WIN, self.tc, *self.key])
+
+    def stage(self, deduped: DataFrame, staging: str,
+              n_buckets: int | None, shared: bool) -> None:
+        """Mount once and write the whole span in ONE job under
+        ``staging``: ``_win=i/<table>=v/`` (+ ``_bucket=b/`` when
+        ``n_buckets``), or with ``shared`` one per-bucket fileset per window
+        holding every table, clustered by table within each file (file count
+        independent of table count)."""
+        mounted, payload = self._mount(deduped)
+        src = mounted.select(WIN, self.tc, *self.key, *payload, *order_meta())
+        pcols = [WIN, self.tc]
+        if n_buckets:
+            src = src.withColumn(
+                "_bucket", LakeTable._bucket_expr(n_buckets, self.key[0]))
+            pcols.append("_bucket")
+        if shared:
+            src = src.sortWithinPartitions(WIN, "_bucket", self.tc)
+            pcols.remove(self.tc)
+        src.write.partitionBy(*pcols).parquet(staging)
+
+    def lineage(self, deduped: DataFrame) -> dict:
+        """ONE metadata-cardinality job: {(window, table value):
+        [(partition_id, events, max_commit_ts)]}."""
+        return self._stats(deduped, F.sum("_n_events"), F.max("_max_commit_ts"))

@@ -14,12 +14,20 @@ Two execution modes exist for the same engine:
    generalization of the MySQL sink's REPLACE idempotency
    (/root/reference/cdc/sink/dmlsink/txn/mysql/mysql.go:516,533-537).
 
+The multi-table twin (:func:`run_streaming_multi`) runs each micro-batch
+through the span executor (streaming/span.py) as a span of one window —
+the same dedup, mount and staged write the driver loops use — and commits
+it with one feed-journal append carrying the epoch.
+
 Exactly-once: Spark's streaming checkpoint provides offset tracking;
 re-delivered epochs are no-ops via the batch_id registry committed
 atomically with the data (same guarantee as the driver-loop mode).
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +37,13 @@ from ticdc_spark.operators.sortdedup import lww_dedup, with_op_rank
 from ticdc_spark.plans.schema_registry import SchemaRegistry
 from ticdc_spark.sinks.lake import LakeTable
 from ticdc_spark.streaming.pipeline import ChangefeedConfig, table_fields
+from ticdc_spark.streaming.span import (
+    WIN,
+    SpanExecutor,
+    lineage_rows,
+    observe_lineage,
+    order_meta,
+)
 
 BINLOG_SCHEMA = (
     "commit_ts long, start_ts long, op string, conv_id string, turn_idx int, "
@@ -69,6 +84,7 @@ def run_streaming(
         ddl_rows = ddl_log if isinstance(ddl_log, list) else ddl_log.collect()
         ddl_rows = sorted(ddl_rows, key=lambda r: r["commit_ts"])
         registry.replay(ddl_rows)
+    _epoch_reset_guard(target, config.changefeed_id, checkpoint_dir)
     if not target.exists():
         target.create(
             key=list(config.key),
@@ -78,39 +94,6 @@ def run_streaming(
             with_order_cols=True,
             delta_layout=config.delta_layout,
         )
-    else:
-        ck = target.checkpoint
-        hwms = ck.get("epoch_hwms")
-        feed_hwm = (
-            ck.get("epoch_hwm", -1) if hwms is None  # legacy scalar manifest
-            else hwms.get(config.changefeed_id, -1)
-        )
-        if feed_hwm < 0 and any(
-            b.startswith(f"{config.changefeed_id}:epoch-")
-            for b in target.committed_batch_ids()
-        ):
-            feed_hwm = 0
-        if feed_hwm >= 0:
-            # the target already holds committed epochs for THIS changefeed:
-            # a run without a checkpoint (or with a fresh/older one) restarts
-            # epochs at 0 and re-reads ALL files — reused epoch ids would
-            # collide with committed ones and lose data. The manifest's
-            # per-feed epoch-regression raise is the deep defense; this is
-            # the friendly up-front one.
-            import os as _os
-            off_dir = _os.path.join(checkpoint_dir or "", "offsets")
-            committed = -1
-            if checkpoint_dir and _os.path.isdir(off_dir):
-                nums = [int(f) for f in _os.listdir(off_dir) if f.isdigit()]
-                committed = max(nums) if nums else -1
-            if checkpoint_dir is None or committed < feed_hwm:
-                raise ValueError(
-                    f"target holds committed epochs (hwm={feed_hwm}) for "
-                    f"changefeed {config.changefeed_id!r} but the streaming "
-                    f"checkpoint {'is missing' if checkpoint_dir is None else f'only reaches offset {committed}'} "
-                    "— resume with the ORIGINAL checkpoint_dir so epochs "
-                    "continue instead of restarting at 0"
-                )
     # evolve an existing target to the registry's newest schema (idempotent
     # by schema_version — the streaming twin of _reconcile_ddl)
     for d in ddl_rows:
@@ -129,50 +112,14 @@ def run_streaming(
     stats = {"batches": 0, "events": 0}
 
     def process(batch_df, epoch_id: int):
-        from pyspark.sql import Observation
-
         batch_id = f"{config.changefeed_id}:epoch-{epoch_id}"
-        df = with_op_rank(batch_df)
-        deduped = lww_dedup(df, config.key, stats=True)
+        deduped = lww_dedup(with_op_rank(batch_df), config.key, stats=True)
         # lineage rides on the sink's own write via the Observation API —
         # zero extra Spark jobs per micro-batch (same pattern as the
         # resolved-ts driver loop, streaming/pipeline.py)
-        obs = Observation(f"lineage-{batch_id}")
-        aggs = []
-        for p in partitions:
-            aggs.append(
-                F.sum(F.when(F.col("partition_id") == p, F.col("_n_events"))).alias(f"n_{p}")
-            )
-            aggs.append(
-                F.max(F.when(F.col("partition_id") == p, F.col("_max_commit_ts"))).alias(f"mx_{p}")
-            )
-        deduped = deduped.observe(obs, F.count(F.lit(1)).alias("n_keys"), *aggs)
-
-        def lineage_rows():
-            try:
-                vals = obs.get
-            except Exception:
-                return []  # empty batch: zero tasks, observation never fires
-            return [
-                {
-                    "batch_id": batch_id,
-                    "partition_id": int(p),
-                    "resolved_ts": None,
-                    "event_count": int(vals[f"n_{p}"]),
-                    "max_commit_ts": int(vals[f"mx_{p}"]),
-                }
-                for p in partitions
-                if vals.get(f"n_{p}") is not None
-            ]
-
+        deduped, lineage_rows = observe_lineage(deduped, partitions, batch_id, None)
         mounted = mount(deduped, registry, as_of_ts=_FAR_FUTURE, defaults=config.defaults)
-        src = mounted.select(
-            *config.key, "op", *payload_cols,
-            F.col("commit_ts").alias("_commit_ts"),
-            F.col("start_ts").alias("_start_ts"),
-            F.col("op_rank").alias("_op_rank"),
-            (F.col("op") == "D").cast("int").alias("_deleted"),
-        )
+        src = mounted.select(*config.key, "op", *payload_cols, *order_meta())
         # epoch rides into the commit so the manifest can PRUNE old epoch
         # batch_ids by the monotone epoch high-water mark (foreachBatch
         # epochs are monotone; only the newest can be re-delivered) — the
@@ -216,11 +163,10 @@ def _epoch_reset_guard(target: LakeTable, feed_id: str,
     ):
         feed_hwm = 0
     if feed_hwm >= 0:
-        import os as _os
-        off_dir = _os.path.join(checkpoint_dir or "", "offsets")
+        off_dir = os.path.join(checkpoint_dir or "", "offsets")
         committed = -1
-        if checkpoint_dir and _os.path.isdir(off_dir):
-            nums = [int(f) for f in _os.listdir(off_dir) if f.isdigit()]
+        if checkpoint_dir and os.path.isdir(off_dir):
+            nums = [int(f) for f in os.listdir(off_dir) if f.isdigit()]
             committed = max(nums) if nums else -1
         if checkpoint_dir is None or committed < feed_hwm:
             raise ValueError(
@@ -271,11 +217,10 @@ def run_streaming_multi(
       need the driver loop. Lifecycle DDL (create/drop/rename/exchange)
       requires barriers by nature -> rejected here.
 
-    Homogeneous chains (the fleet case) take the one-write-job path; if
-    table-scoped DDLs diverge the chains, the batch falls back to
-    per-table mount + ``append_delta`` (epoch-recognized), mirroring the
-    driver loop's heterogeneous fallback."""
-    import os
+    Homogeneous chains (the fleet case) take the span executor's
+    one-write-job path; if table-scoped DDLs diverge the chains, the batch
+    falls back to per-table mount + ``append_delta`` (epoch-recognized),
+    mirroring the driver loop's heterogeneous fallback."""
     import re
 
     from ticdc_spark.sinks.journal import FeedJournal
@@ -352,105 +297,60 @@ def run_streaming_multi(
         reg.chain_digest(_FAR_FUTURE) for reg in registries.values()
     }) == 1
 
-    probe_reg = registries[tables[0]]
-    payload_cols = mounted_columns(probe_reg, _FAR_FUTURE)
     stats = {"tables": len(tables), "batches": 0, "events": 0,
              "wal_scans_per_batch": 1}
 
     def process(batch_df, epoch_id: int):
         df = with_op_rank(batch_df.filter(F.col(table_col).isin(*tables)))
-        deduped = lww_dedup(df, [table_col, *config.key], stats=True).persist()
+        # the micro-batch is a span of one window, mounted at the newest
+        # schema (per-row schema_version picks each event's writer)
+        span = SpanExecutor(spark, df, 0, [_FAR_FUTURE], registries[tables[0]],
+                            config, table_col)
+        deduped = span.dedup().persist()
         try:
             # per-(table, source partition) lineage off the cached dedup —
             # ONE metadata-cardinality aggregate for the whole batch
-            agg = (
-                deduped.groupBy(table_col, "partition_id")
-                .agg(F.sum("_n_events").alias("n"),
-                     F.max("_max_commit_ts").alias("mx"))
-                .collect()
-            )
-            if not agg:
+            by_table = {t: rows for (_, t), rows in span.lineage(deduped).items()}
+            if not by_table:
                 return  # empty batch
-            by_table: dict = {}
-            for r in agg:
-                by_table.setdefault(r[table_col], []).append(r)
-
-            def lineage(t: str, bid: str) -> list:
-                return [
-                    {"batch_id": bid, "partition_id": int(r["partition_id"]),
-                     "resolved_ts": None, "event_count": int(r["n"]),
-                     "max_commit_ts": int(r["mx"])}
-                    for r in by_table.get(t, [])
-                ]
-
+            commits = {}
+            for t in sorted(by_table):
+                bid = f"{config.changefeed_id}/{t}:epoch-{int(epoch_id)}"
+                commits[t] = (bid, lineage_rows(bid, by_table[t], None))
+                stats["events"] += sum(r["event_count"] for r in commits[t][1])
             if homogeneous:
                 # the fleet fast path: one mount + ONE write job for every
-                # table in the batch + ONE journal append (commit point)
-                mounted = mount(deduped, probe_reg, as_of_ts=_FAR_FUTURE,
-                                defaults=config.defaults)
-                src = mounted.select(
-                    table_col, *config.key, "op", *payload_cols,
-                    F.col("commit_ts").alias("_commit_ts"),
-                    F.col("start_ts").alias("_start_ts"),
-                    F.col("op_rank").alias("_op_rank"),
-                ).withColumn(
-                    "_deleted", (F.col("op") == "D").cast("int")
-                ).drop("op")
-                # fleet mode (the driver loop's rule, applied per batch):
-                # at/above shared_deltas_after applying tables, per-table
-                # partition dirs would write O(tasks x tables) tiny files —
-                # ONE SHARED per-bucket fileset caps it at O(tasks x
-                # buckets), independent of table count; per-table reads
-                # filter the discriminator until compaction re-splits
+                # table in the batch + ONE journal append (commit point).
+                # Fleet mode (the driver loop's rule, applied per batch):
+                # at/above shared_deltas_after applying tables, ONE SHARED
+                # per-bucket fileset caps the file count at O(tasks x
+                # buckets), independent of table count
                 shared = len(by_table) >= config.shared_deltas_after
-                bexpr = F.pmod(F.xxhash64(F.col(config.key[0])),
-                               F.lit(config.n_buckets)).cast("int")
-                if shared:
-                    src = src.withColumn("_bucket", bexpr).sortWithinPartitions(
-                        "_bucket", table_col)
-                    pcols = ["_bucket"]
-                    bucketed = True
-                else:
-                    pcols = [table_col]
-                    bucketed = config.delta_layout == "bucketed"
-                    if bucketed:
-                        src = src.withColumn("_bucket", bexpr)
-                        pcols.append("_bucket")
-                seq, staging = journal.new_staging()
-                src.write.partitionBy(*pcols).parquet(staging)
-                entry_tables = {}
-                for t in sorted(by_table):
-                    bid = f"{config.changefeed_id}/{t}:epoch-{int(epoch_id)}"
-                    rows = lineage(t, bid)
-                    entry_tables[t] = {"src": t, "path": targets[t].path,
-                                       "bid": bid, "lineage": rows}
-                    stats["events"] += sum(r["event_count"] for r in rows)
-                journal.append_window(seq, 0, 0, bucketed, entry_tables,
-                                      table_col, shared=shared,
-                                      epoch=int(epoch_id))
+                bucketed = shared or config.delta_layout == "bucketed"
+                staging = journal.span_staging()
+                span.stage(deduped, staging,
+                           config.n_buckets if bucketed else None, shared)
+                seq = journal.adopt(os.path.join(staging, f"{WIN}=0"))
+                shutil.rmtree(staging, ignore_errors=True)
+                journal.append_window(
+                    seq, 0, 0, bucketed,
+                    {t: {"src": t, "path": targets[t].path, "bid": bid,
+                         "lineage": rows} for t, (bid, rows) in commits.items()},
+                    table_col, shared=shared, epoch=int(epoch_id))
             else:
                 # diverged chains: per-table mount + epoch-recognized MOR
                 # append (the streaming twin of the driver loop's
                 # heterogeneous fallback)
-                for t in sorted(by_table):
+                for t, (bid, rows) in commits.items():
                     reg = registries[t]
-                    sliced = deduped.filter(F.col(table_col) == t).drop(table_col)
+                    sliced = deduped.filter(F.col(table_col) == t)
                     mounted = mount(sliced, reg, as_of_ts=_FAR_FUTURE,
                                     defaults=config.defaults)
-                    cols = mounted_columns(reg, _FAR_FUTURE)
-                    src = mounted.select(
-                        *config.key, "op", *cols,
-                        F.col("commit_ts").alias("_commit_ts"),
-                        F.col("start_ts").alias("_start_ts"),
-                        F.col("op_rank").alias("_op_rank"),
-                    ).withColumn(
-                        "_deleted", (F.col("op") == "D").cast("int")
-                    ).drop("op")
-                    bid = f"{config.changefeed_id}/{t}:epoch-{int(epoch_id)}"
-                    rows = lineage(t, bid)
+                    src = mounted.select(*config.key,
+                                         *mounted_columns(reg, _FAR_FUTURE),
+                                         *order_meta())
                     targets[t].append_delta(src, bid, lineage_rows=rows,
                                             epoch=int(epoch_id))
-                    stats["events"] += sum(r["event_count"] for r in rows)
             stats["batches"] += 1
         finally:
             deduped.unpersist()
