@@ -7,6 +7,7 @@ is one that transfers (AQE, shuffle partitions sized to cores, Arrow on).
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -39,11 +40,14 @@ def get_spark(
     # shared/virtualized kernels a 32-thread parallel GC degenerates into a
     # futex storm (measured here: a pure-CPU job ran 3-5x slower at
     # local[32] until GC threads were pinned). Harmless on real hardware.
-    # Overridable per-run for experiments without touching code.
-    java_opts = os.environ.get(
-        "TICDC_SPARK_JAVA_OPTS",
-        "-XX:ParallelGCThreads=4 -XX:ConcGCThreads=2 -XX:CICompilerCount=2",
-    )
+    # Overridable per-run for experiments without touching code; the
+    # override is announced so its runs are not mistaken for pinned ones.
+    java_opts = os.environ.get("TICDC_SPARK_JAVA_OPTS")
+    if java_opts is None:
+        java_opts = "-XX:ParallelGCThreads=4 -XX:ConcGCThreads=2 -XX:CICompilerCount=2"
+    else:
+        print(f"ticdc_spark: TICDC_SPARK_JAVA_OPTS replaces the pinned GC/JIT "
+              f"flags; driver JVM options: {java_opts!r}", file=sys.stderr)
 
     b = (
         SparkSession.builder.master(master)

@@ -537,11 +537,6 @@ class MultiTableChangefeed:
         for f in self.feeds.values():
             f.ensure_target()
             f._reconcile_ddl(f.target.checkpoint["resolved_ts"])
-        self._partitions = sorted(
-            int(r[0]) for r in self.resolved_log.select("partition_id").distinct().collect()
-        )
-        for f in self.feeds.values():
-            f._partitions = self._partitions
         for t in self.feeds:
             self._load_state(t)
 
@@ -551,6 +546,10 @@ class MultiTableChangefeed:
             self.resolved_log, low=ckpt,
             expected_partitions=self.config.expected_partitions,
         )
+        # source partition ids from the same scan (observe-based lineage)
+        self._partitions = steps.partitions
+        for f in self.feeds.values():
+            f._partitions = self._partitions
         # finish-at (changefeed_finish): the whole fleet stops AT
         # target_ts — same clamp rule as the single-table feed
         uppers = plan_windows(steps, ckpt, self.config)

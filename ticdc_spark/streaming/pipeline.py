@@ -430,7 +430,7 @@ class Changefeed:
 
         gf = getattr(self, "_cached_frontier", None)
         if not use_cached_frontier or gf is None:
-            gf = global_frontier(self.resolved_log)
+            gf = global_frontier(self.resolved_log, self.config.expected_partitions)
             self._cached_frontier = gf
         return self.target.checkpoint["resolved_ts"] >= gf
 
@@ -470,20 +470,16 @@ class Changefeed:
         self.ensure_target()
         ckpt = max(self.target.checkpoint["resolved_ts"], self.config.start_ts)
         self._reconcile_ddl(ckpt)
-        # source partition ids, once per run (tiny): drives the observe-based
-        # per-partition lineage without a per-batch aggregation job
-        self._partitions = sorted(
-            int(r[0]) for r in self.resolved_log.select("partition_id").distinct().collect()
-        )
-
         steps = frontier_steps(
             self.resolved_log, low=ckpt,
             expected_partitions=self.config.expected_partitions,
         )
-        # cache the frontier this job already computed: run -> is_synced
-        # costs no extra frontier job (steps empty => frontier <= ckpt,
-        # for which ckpt is an equivalent bound)
-        self._cached_frontier = steps[-1] if steps else ckpt
+        # the same scan gave the source partition ids (they drive the
+        # observe-based per-partition lineage without a per-batch
+        # aggregation job) and the frontier, cached so run -> is_synced
+        # costs no extra frontier job
+        self._partitions = steps.partitions
+        self._cached_frontier = steps.frontier
         uppers = plan_windows(steps, ckpt, self.config)
 
         merges = 0
