@@ -211,15 +211,24 @@ def test_table_allow_block_routing(spark, tmp_path):
     assert route_tables(["a", "t1", "t2", "t10"], allow=("t[0-9]",), block=("t2",)) == ["t1"]
 
 
-def test_homogeneous_window_is_one_write_for_all_tables(spark, tmp_path, monkeypatch):
+# a global add-column DDL AT a window bound (resolved steps are 2000, 3000)
+BOUND_DDL = DDLSpec(commit_ts=2_000, ddl_type="add_column", column="qscore")
+
+
+@pytest.mark.parametrize("ddl", [None, BOUND_DDL], ids=["no_ddl", "ddl_at_bound"])
+def test_homogeneous_window_is_one_write_for_all_tables(spark, tmp_path, monkeypatch, ddl):
     """When tables share one schema chain (the fleet case), windows must
     execute the single-write fast path: ONE partitionBy write + ONE
     feed-journal append per window, the per-table append_delta write path
     never runs, and per-table manifest I/O happens once per table at the
-    END-OF-RUN FOLD (append_delta_files_group), not once per window."""
-    calls = {"group": 0, "delta": 0}
+    END-OF-RUN FOLD (append_delta_files_group), not once per window.
+    A global DDL at a window bound keeps the fast path for the barrier
+    window too (its DML decodes at the bound − 1, below the DDL): the union
+    write never runs, and the barrier adds one fold."""
+    calls = {"group": 0, "delta": 0, "union": 0}
     orig_g = LakeTable.append_delta_files_group
     orig_d = LakeTable.append_delta
+    orig_u = MultiTableChangefeed._sink_union_window
 
     def count_g(self, *a, **k):
         calls["group"] += 1
@@ -229,17 +238,29 @@ def test_homogeneous_window_is_one_write_for_all_tables(spark, tmp_path, monkeyp
         calls["delta"] += 1
         return orig_d(self, *a, **k)
 
+    def count_u(self, *a, **k):
+        calls["union"] += 1
+        return orig_u(self, *a, **k)
+
     monkeypatch.setattr(LakeTable, "append_delta_files_group", count_g)
     monkeypatch.setattr(LakeTable, "append_delta", count_d)
-    specs = {f"h{i}": BinlogSpec(n_events=2_000, n_convs=60, seed=300 + i)
+    monkeypatch.setattr(MultiTableChangefeed, "_sink_union_window", count_u)
+    ddls = (ddl,) if ddl else ()
+    specs = {f"h{i}": BinlogSpec(n_events=2_000, n_convs=60, seed=300 + i, ddls=ddls)
              for i in range(4)}
+    ddl_rows = [
+        {"commit_ts": d.commit_ts, "ddl_type": d.ddl_type, "query": d.query(),
+         "column": d.column, "old_column": None, "col_type": "string",
+         "schema_version": d.commit_ts, "table_name": None}
+        for d in ddls
+    ]
     parts = [gen_binlog(spark, s).withColumn("table_name", F.lit(t))
              for t, s in specs.items()]
     binlog = parts[0]
     for p in parts[1:]:
         binlog = binlog.unionByName(p)
     mt = MultiTableChangefeed(
-        spark, binlog, gen_resolved_log(spark, next(iter(specs.values()))), None,
+        spark, binlog, gen_resolved_log(spark, next(iter(specs.values()))), ddl_rows,
         table_factory=lambda t: LakeTable(spark, f"{tmp_path}/{t}"),
         config=ChangefeedConfig(changefeed_id="h", n_buckets=4,
                                 bootstrap_fast_path=False),
@@ -248,9 +269,11 @@ def test_homogeneous_window_is_one_write_for_all_tables(spark, tmp_path, monkeyp
     stats = mt.run()
     assert stats["merges"] == 4 * stats["windows"]
     assert calls["delta"] == 0            # per-table write path never ran
-    # the whole run is one homogeneous streak -> exactly ONE fold: one
-    # group manifest commit per table TOTAL, independent of window count
-    assert calls["group"] == 4
+    assert calls["union"] == 0            # nor the heterogeneous union write
+    # the whole run is one homogeneous streak -> exactly ONE fold per
+    # barrier plus the end-of-run one: one group manifest commit per table
+    # per fold, independent of window count
+    assert calls["group"] == 4 * (1 + len(ddls))
     assert stats["windows"] > 1           # the amortization was real
     # journal bookkeeping: everything folded, staging cleaned
     assert mt.journal.pending() == []
@@ -262,6 +285,8 @@ def test_homogeneous_window_is_one_write_for_all_tables(spark, tmp_path, monkeyp
         want = expected_final_state(gen_binlog(spark, s), mt.feeds[t].registry,
                                     s.max_commit_ts, KEY)
         assert_df_equal(mt.read(t), want, KEY)
+        if ddl:
+            assert ddl.column in mt.read(t).columns
     # GC ownership: every table's delta files live under ITS data_dir
     for t in specs:
         m = mt.feeds[t].target.manifest()

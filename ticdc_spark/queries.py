@@ -1495,7 +1495,11 @@ def q_cdc_syncpoint_read(spark, sf_dir):
                      cfg_extra={"max_windows_per_job": 1})
     n = _events(spark, sf_dir).count()
     bound = (1000 + n) * 2 // 3
-    out = cf.target.read_at_source_ts(bound)
+    # the bound must BE a committed syncpoint: a planner change that moves
+    # it fails loudly instead of pinning an earlier snapshot
+    rts, v = cf.target.syncpoint_for(bound)
+    assert rts == bound, (rts, bound)
+    out = cf.target.read(version=v)
     if "tool_args" not in out.columns:
         # at tiny sf the DDL lands after the 2/3 boundary, so the snapshot
         # predates the column; the oracle always projects it (all-NULL)

@@ -10,17 +10,20 @@ with global vs table-scoped events
 checkpoint = min over tables
 (/root/reference/cdc/scheduler/internal/v3/replication/replication_manager.go:556-731).
 
-Spark-first single-pass execution: a multi-table front end over the span
-executor (streaming/span.py). Per DDL-free span of windows the shared WAL is
-scanned ONCE and LWW-deduped ONCE with ``table_name`` prepended to the
+Spark-first single-pass execution: a multi-table front end over
+streaming/span.py. The window walker (``span.walk``, shared with the
+single-table feed) schedules the windows, and every window — a DDL-free
+span, a lone window or a barrier sub-window — runs as a span: the shared WAL
+is scanned ONCE and LWW-deduped ONCE with ``table_name`` prepended to the
 handle key — one shuffle for all N tables. Homogeneous fleets (one schema
-chain) mount once and write every table in one job; the initial load onto
-empty tables writes every table's compacted base in one job; each window
-commits with one feed-journal append. Diverged chains and DDL barriers take
-the per-window union write (one job per type-compatible group). Work per
-window is O(window events), not N full WAL scans. Store the WAL partitioned
-by ``table_name`` (:func:`write_wal_partitioned`) so any residual per-table
-scan partition-prunes.
+chain below the span's upper bound, so barrier windows too) mount once and
+write every table in one job; the initial load onto empty tables writes
+every table's compacted base in one job; each window commits with one
+feed-journal append. Diverged chains take the per-window union write (one
+job per type-compatible group). Work per window is O(window events), not N
+full WAL scans. Store the WAL partitioned by ``table_name``
+(:func:`write_wal_partitioned`) so any residual per-table scan
+partition-prunes.
 
 Mid-stream table lifecycle (batch_add_table / multi_tables_ddl analogs,
 /root/reference/tests/integration_tests/batch_add_table/,
@@ -53,21 +56,26 @@ from dataclasses import replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ticdc_spark.functions.mount import mount, mounted_columns
 from ticdc_spark.sinks.journal import FeedJournal
 from ticdc_spark.sinks.lake import LakeTable, staged_files
 from ticdc_spark.sources.frontier import frontier_steps
-from ticdc_spark.streaming.pipeline import Changefeed, ChangefeedConfig, table_matches
+from ticdc_spark.streaming.pipeline import (
+    Changefeed,
+    ChangefeedConfig,
+    ddl_rows_of,
+    table_matches,
+)
 from ticdc_spark.streaming.span import (
     WIN,
     SpanExecutor,
     bootstrap_ready,
     lineage_rows,
+    mount_window,
     order_meta,
     part_dirs,
     plan_windows,
     quarantined,
-    span_end,
+    walk,
 )
 
 _LIFECYCLE = ("create_table", "recover_table", "drop_table", "rename_table",
@@ -126,10 +134,7 @@ class MultiTableChangefeed:
         self.config = config or ChangefeedConfig(changefeed_id="cf-multi")
         self.table_col = table_col
         self.table_factory = table_factory
-        if isinstance(ddl_log, list) or ddl_log is None:
-            self.ddl_rows = sorted(ddl_log or [], key=lambda r: r["commit_ts"])
-        else:
-            self.ddl_rows = sorted(ddl_log.collect(), key=lambda r: r["commit_ts"])
+        self.ddl_rows = ddl_rows_of(ddl_log)
         # ActionTruncateTablePartition (ALTER TABLE ... TRUNCATE PARTITION,
         # /root/reference/cdc/entry/schema_storage_test.go:826): downstream
         # it is exactly a truncate of the PARTITION SPAN's target — the
@@ -554,11 +559,42 @@ class MultiTableChangefeed:
         # target_ts — same clamp rule as the single-table feed
         uppers = plan_windows(steps, ckpt, self.config)
 
+        cfg = self.config
+        budget = max_merges_per_table
         stats = {"tables": len(self.feeds), "merges": 0, "events": 0,
                  "windows": 0, "wal_scans_per_window": 1}
         merged_windows = 0
 
-        def _ticks():
+        def cap() -> int:
+            # DDL-free spans of up to max_windows_per_job windows x all
+            # tables run as ONE job (each (window, table) still commits its
+            # own batch id through the journal)
+            if cfg.sink_mode != "mor" or cfg.max_windows_per_job <= 1:
+                return 1
+            c = cfg.max_windows_per_job
+            return min(c, budget - merged_windows) if budget else c
+
+        def apply(lo: int, ws: list) -> bool:
+            nonlocal merged_windows
+            s = self._apply_span_all(lo, ws)
+            stats["merges"] += s["merges"]
+            stats["events"] += s["events"]
+            stats["windows"] += len(ws)
+            stats["write_jobs"] = stats.get("write_jobs", 0) + s.get("write_jobs", 0)
+            merged_windows += s["windows_merged"]
+            return bool(budget) and merged_windows >= budget
+
+        def barrier(d) -> None:
+            # quiesce done: fold pending journal windows (manifest state
+            # must be current before a DDL mutates schema_version or the
+            # table set), then apply the DDL
+            self._fold_journal()
+            if d["ddl_type"] in _LIFECYCLE:
+                self._apply_lifecycle(d)
+            else:
+                self._apply_column_ddl(d)
+
+        def tick() -> None:
             due = [
                 t for t, f in self.feeds.items()
                 if f.config.sink_mode == "mor"
@@ -571,62 +607,7 @@ class MultiTableChangefeed:
                     self._load_state(t)
                 self._gc_shared()
 
-        i = 0
-        while i < len(uppers):
-            r = uppers[i]
-            bounds = [d for d in self.ddl_rows if ckpt < int(d["commit_ts"]) <= r]
-            if (
-                not bounds
-                and self.config.sink_mode == "mor"
-                and self.config.max_windows_per_job > 1
-            ):
-                # DDL-free span: schedule up to max_windows_per_job windows
-                # x all tables as ONE job (the span twin of the single-table
-                # batched path; each (window, table) still commits its own
-                # batch id through the journal)
-                cap = self.config.max_windows_per_job
-                if max_merges_per_table:
-                    cap = min(cap, max_merges_per_table - merged_windows)
-                j = span_end(uppers, i, cap, self.ddl_rows)
-                if j > i:
-                    span = uppers[i:j + 1]
-                    s = self._apply_span_all(ckpt, span)
-                    stats["merges"] += s["merges"]
-                    stats["events"] += s["events"]
-                    stats["windows"] += len(span)
-                    stats["write_jobs"] = stats.get("write_jobs", 0) + s.get("write_jobs", 0)
-                    merged_windows += s.get("windows_merged", 0)
-                    ckpt = uppers[j]
-                    i = j + 1
-                    _ticks()
-                    if max_merges_per_table and merged_windows >= max_merges_per_table:
-                        break
-                    continue
-            lo = ckpt
-            for d in bounds + [None]:
-                hi = r if d is None else int(d["commit_ts"])
-                if lo < hi:
-                    s = self._apply_span_all(lo, [hi])
-                    stats["merges"] += s["merges"]
-                    stats["events"] += s["events"]
-                    stats["windows"] += 1
-                    stats["write_jobs"] = stats.get("write_jobs", 0) + s.get("write_jobs", 0)
-                    merged_windows += s["merges"] > 0
-                if d is not None:
-                    # the barrier: quiesce done, fold pending journal
-                    # windows (manifest state must be current before a DDL
-                    # mutates schema_version or the table set), apply DDL
-                    self._fold_journal()
-                    if d["ddl_type"] in _LIFECYCLE:
-                        self._apply_lifecycle(d)
-                    else:
-                        self._apply_column_ddl(d)
-                lo = hi
-            ckpt = r
-            _ticks()
-            i += 1
-            if max_merges_per_table and merged_windows >= max_merges_per_table:
-                break
+        walk(uppers, ckpt, self.ddl_rows, cap, apply, barrier, tick)
         # end-of-run fold: manifests catch up with the journal so external
         # readers (tests, downstream queries, a fresh engine instance) see
         # every window through the ordinary per-table read path
@@ -683,9 +664,9 @@ class MultiTableChangefeed:
         deduped = span.dedup().sortWithinPartitions(self.table_col).persist()
         try:
             if not self._apply_homogeneous(live, names, span, deduped, out):
-                # heterogeneous (diverged schema chains, DDL-at-boundary,
-                # truncate, CoW mode): per window, MOR tables without a
-                # truncate incarnation still share ONE union write job per
+                # heterogeneous (diverged schema chains, truncate, CoW
+                # mode): per window, MOR tables without a truncate
+                # incarnation still share ONE union write job per
                 # type-compatibility group (mount per table, union by name,
                 # partitionBy(table), one journal append) — per-table DDL
                 # churn no longer degrades to N write jobs per window.
@@ -738,22 +719,23 @@ class MultiTableChangefeed:
         resuming mid-span, folds ONCE across windows per (table, key)
         (:meth:`SpanExecutor.bootstrap`). The normal path would journal
         every window as deltas and write the data again at the first fold
-        + compaction. Excluded: CoW, diverged schema chains,
-        DDL-at-boundary, truncate incarnations, shared fleet filesets
-        (their per-bucket mixed files have no per-table split yet) and
-        mixed bucket counts — those fleets take the normal path, correct
-        either way. Returns the common bucket count, or None."""
+        + compaction. A span of 2+ windows never holds a DDL (the walker
+        splits barrier windows off as spans of one). Excluded: CoW,
+        diverged schema chains, truncate incarnations, shared fleet
+        filesets (their per-bucket mixed files have no per-table split
+        yet) and mixed bucket counts — those fleets take the normal path,
+        correct either way. Returns the common bucket count, or None."""
         cfg = self.config
         hi = uppers[-1]
         if (len(uppers) < 2 or not cfg.bootstrap_fast_path
                 or cfg.sink_mode != "mor" or len(names) >= cfg.shared_deltas_after):
             return None
         ts = list(names.values())
-        if any(live[t]._ddl_at(hi) is not None or self._state[t]["truncate"]
+        if any(self._state[t]["truncate"]
                # resumes mid-span: the per-window path handles it
                or self._state[t]["ckpt"] >= uppers[0] for t in ts):
             return None
-        if len({live[t].registry.chain_digest(hi) for t in ts}) > 1:
+        if len({live[t].registry.chain_digest(hi - 1) for t in ts}) > 1:
             return None  # diverged chains: one mount can't decode all
         nbs = {self._state[t]["n_buckets"] for t in ts}
         # one staged layout needs one bucket count; unfolded journal
@@ -767,17 +749,19 @@ class MultiTableChangefeed:
     def _apply_homogeneous(self, live: dict, names: dict, span: SpanExecutor,
                            deduped, out: dict) -> bool:
         """HOMOGENEOUS-window fast path: when every live table shares the
-        SAME schema chain up to ``hi`` (the 100k-table fleet case — one
+        SAME schema chain below ``hi`` (the 100k-table fleet case — one
         transcript schema, global DDLs only), the span executor mounts
-        ONCE and writes every table's delta files in ONE Spark job
-        (partitionBy table — plus ``_bucket`` when tables use the bucketed
-        delta layout, so the 7.9x point-read dial survives multi-table
-        mode); each window then commits with ONE feed-journal append.
+        ONCE at the decode snapshot ``hi − 1`` and writes every table's
+        delta files in ONE Spark job (partitionBy table — plus ``_bucket``
+        when tables use the bucketed delta layout, so the 7.9x point-read
+        dial survives multi-table mode); each window then commits with ONE
+        feed-journal append.
         Driver cost per window: 1 jsonl append — independent of table
         count; per-table manifest I/O is amortized into group folds at
-        barriers/compactions/run end. Falls back (returns False) on
-        diverged chain digests, a DDL barrier at ``hi``, truncate
-        incarnations, mixed bucket counts, or CoW mode."""
+        barriers/compactions/run end. A barrier window (a DDL at ``hi``)
+        qualifies too: its DML decodes below the DDL. Falls back (returns
+        False) on diverged chain digests, truncate incarnations, mixed
+        bucket counts, or CoW mode."""
         cfg = self.config
         hi = span.uppers[-1]
         if cfg.sink_mode != "mor":
@@ -787,12 +771,13 @@ class MultiTableChangefeed:
         for name, t in sorted(names.items()):
             f = live[t]
             st = self._state[t]
-            if f._ddl_at(hi) is not None or st["truncate"]:
+            if st["truncate"]:
                 return False
-            # equal chain digests ⇒ identical writer maps ⇒ one mount
-            # decodes every table's events correctly (O(1) per table per
+            # equal chain digests below hi ⇒ identical writer maps at the
+            # decode snapshot (hi − 1) ⇒ one mount decodes every table's
+            # events correctly, a DDL at hi included (O(1) per table per
             # window off the registry's cached cumulative hashes)
-            digests.add(f.registry.chain_digest(hi))
+            digests.add(f.registry.chain_digest(hi - 1))
             if hi <= st["ckpt"]:
                 continue  # this table already has the window
             applying[name] = t
@@ -860,8 +845,8 @@ class MultiTableChangefeed:
     def _sink_union_window(self, live: dict, items: list, wdf, lo: int,
                            hi: int, out: dict) -> int:
         """Heterogeneous-window WRITE BATCHING: each table mounts against
-        its OWN registry snapshot (diverged chains welcome; a DDL at ``hi``
-        mounts as-of ``lo`` per the barrier rule), the mounted frames union
+        its OWN registry snapshot at ``hi − 1`` (diverged chains welcome),
+        the mounted frames union
         by name into ONE ``partitionBy(table)`` write + ONE journal append.
         The staged files carry the UNION of the group's payload columns;
         that is safe because the per-table read projects files through the
@@ -878,12 +863,9 @@ class MultiTableChangefeed:
         cfg = self.config
         frames: dict = {}
         for name, t in items:
-            feed = live[t]
-            as_of = lo if feed._ddl_at(hi) else hi
             sliced = wdf.filter(F.col(self.table_col) == name)
-            mounted = mount(sliced, feed.registry, as_of_ts=as_of,
-                            defaults=cfg.defaults)
-            pcols = mounted_columns(feed.registry, as_of)
+            mounted, pcols = mount_window(sliced, live[t].registry, hi,
+                                          cfg.defaults)
             src = mounted.select(self.table_col, *cfg.key, *pcols, *order_meta())
             frames[name] = (t, src, dict(src.dtypes))
         # greedy type-compatibility grouping: frames join a group iff no

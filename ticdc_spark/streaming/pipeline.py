@@ -15,11 +15,14 @@ per micro-batch
   5. exactly-once MERGE into the lake table, committing per-partition
      lineage + the new checkpoint in the same atomic manifest
 
-A single-table front end over the span executor (streaming/span.py): a
-DDL-free run of windows executes as one span with this table as a fleet of
-one — a literal table column, the same executor the multi-table feed uses —
-and commits with one group manifest rewrite. Windows that end at a DDL
-barrier, force-replicate and steady-state CoW stay per window.
+A single-table front end over streaming/span.py: the window walker
+(``span.walk``, shared with the multi-table feed) schedules the windows; a
+DDL-free run of 2+ windows executes as one span with this table as a fleet
+of one — a literal table column, the same executor the multi-table feed
+uses — and commits with one group manifest rewrite. A lone window, a window
+that ends at a DDL barrier, force-replicate and steady-state CoW take the
+per-window sink. Every window decodes at its upper bound − 1
+(``span.mount_window``).
 
 Exactly-once across restarts: the batch_id is derived from the window
 bounds, recorded in the manifest commit; replaying a window after a crash
@@ -54,12 +57,13 @@ from ticdc_spark.streaming.span import (
     SpanExecutor,
     bootstrap_ready,
     dedup,
+    mount_window,
     observe_lineage,
     op_from_rank,
     order_meta,
     plan_windows,
     quarantined,
-    span_end,
+    walk,
 )
 
 # the literal table column that makes a single-table feed a fleet of one
@@ -201,6 +205,15 @@ def table_matches(name: str, config: "ChangefeedConfig") -> bool:
     return not any(_re.fullmatch(p, name) for p in config.table_block)
 
 
+def ddl_rows_of(ddl_log) -> list:
+    """DDL log rows sorted by commit-ts, from None, a list of rows/dicts or
+    a DataFrame (collected — the DDL stream is tiny by nature)."""
+    if ddl_log is None:
+        return []
+    rows = ddl_log if isinstance(ddl_log, list) else ddl_log.collect()
+    return sorted(rows, key=lambda r: r["commit_ts"])
+
+
 def table_fields(registry: SchemaRegistry, as_of_ts: int, key=HANDLE_KEY) -> list:
     """Full sink-table schema at a snapshot: key columns + payload columns
     (ts transported as long → timestamp)."""
@@ -226,14 +239,7 @@ class Changefeed:
         self.config = config or ChangefeedConfig()
         self.target = target
         self.registry = SchemaRegistry(self.config.payload_fields, base_version=0)
-        # ddl_log: a DataFrame (collected — the DDL stream is tiny by
-        # nature), or an already-collected list of rows/dicts
-        if ddl_log is None:
-            self.ddl_rows = []
-        elif isinstance(ddl_log, list):
-            self.ddl_rows = sorted(ddl_log, key=lambda r: r["commit_ts"])
-        else:
-            self.ddl_rows = sorted(ddl_log.collect(), key=lambda r: r["commit_ts"])
+        self.ddl_rows = ddl_rows_of(ddl_log)
         self.registry.replay(self.ddl_rows)  # snapshot chain; lookups are ts-bounded
 
     # -------------- lifecycle --------------
@@ -302,31 +308,6 @@ class Changefeed:
         # dedup shuffle (the one exchange per batch)
         return with_op_rank(df).drop("pre_payload", "op"), qobs
 
-    def _append_window(self, lo: int, hi: int) -> dict:
-        """Force-replicate window: filters + mount, NO dedup shuffle and no
-        merge — the whole window appends as insert-log rows in one narrow
-        write (the cheapest possible sink; the degradation the reference
-        applies to no-PK tables)."""
-        batch_id = f"{self.config.changefeed_id}:{lo}:{hi}"
-        if hi <= max(self.target.checkpoint["resolved_ts"], self.config.start_ts) or (
-            batch_id in self.target.committed_batch_ids()
-        ):
-            return {"status": "skipped", "batch_id": batch_id}
-        df = self.binlog.filter((F.col("commit_ts") > lo) & (F.col("commit_ts") <= hi))
-        df, qobs = self._prepare_window(df, batch_id)
-        df, lineage_rows = observe_lineage(
-            df.withColumn("op", op_from_rank()), self._partitions, batch_id, hi)
-        # DML at a DDL's commit-ts decodes against the PRE-DDL snapshot
-        # (mounter.go:173), same as the merge path
-        as_of = lo if self._ddl_at(hi) else hi
-        mounted = mount(df, self.registry, as_of_ts=as_of, defaults=self.config.defaults)
-        payload_cols = mounted_columns(self.registry, as_of)
-        src = mounted.select(*self.config.key, "op", "commit_ts", *payload_cols)
-        res = self.target.append_log(src, batch_id, lineage_rows=lineage_rows,
-                                     resolved_ts=hi)
-        res["events"] = sum(r["event_count"] for r in res.get("lineage", []))
-        return res
-
     def _apply_span(self, lo: int, uppers: list) -> dict:
         """Execute a DDL-free SPAN of resolved windows as ONE Spark job —
         this feed as a fleet of one through the span executor (span.py):
@@ -371,19 +352,23 @@ class Changefeed:
                 "quarantined": quarantined(qobs)}
 
     def _apply_window(self, lo: int, hi: int) -> dict:
-        if self.config.force_replicate:
-            return self._append_window(lo, hi)
         df = self.binlog.filter((F.col("commit_ts") > lo) & (F.col("commit_ts") <= hi))
         df, qobs = self._prepare_window(df, f"{self.config.changefeed_id}:{lo}:{hi}")
+        if self.config.force_replicate:
+            # keyless insert log: no dedup shuffle, every event is a row
+            return self._sink_deduped(df.withColumn("op", op_from_rank()),
+                                      lo, hi, qobs=qobs)
         # dedup BEFORE mount: the decode then touches only surviving rows
         return self._sink_deduped(dedup(df, self.config.key), lo, hi, qobs=qobs)
 
     def _sink_deduped(self, deduped: DataFrame, lo: int, hi: int,
                       qobs=None) -> dict:
-        """Mount + exactly-once sink of an already-deduped window slice.
-        Split out of :meth:`_apply_window` so the multi-table driver can
-        dedup ALL tables in one shuffle and feed each table's slice here
-        (streaming/multi.py)."""
+        """Mount + exactly-once sink of a window slice: MOR delta append,
+        CoW merge, or — force-replicate — an ``append_log`` of the raw
+        events (the cheapest sink; the degradation the reference applies
+        to no-PK tables). Split out of :meth:`_apply_window` so the
+        multi-table driver can dedup ALL tables in one shuffle and feed
+        each table's slice here (streaming/multi.py)."""
         batch_id = f"{self.config.changefeed_id}:{lo}:{hi}"
         # recognition is two-tier: the monotone-window rule (a window whose
         # upper bound is at/below the checkpoint was already applied — lets
@@ -397,14 +382,13 @@ class Changefeed:
         # action — NO extra Spark job per micro-batch. partition_id is a
         # function of conv_id, so per-key stats aggregate exactly.
         deduped, lineage_rows = observe_lineage(deduped, self._partitions, batch_id, hi)
-        # DML whose commit_ts equals a DDL finishedTs uses the schema
-        # BEFORE the DDL (mounter.go:173) — windows end AT ddl ts, so the
-        # decode snapshot is the one at the window's start
-        as_of = lo if self._ddl_at(hi) else hi
-        mounted = mount(deduped, self.registry, as_of_ts=as_of,
-                        defaults=self.config.defaults)
-        payload_cols = mounted_columns(self.registry, as_of)
-        if self.config.sink_mode == "mor":
+        mounted, payload_cols = mount_window(deduped, self.registry, hi,
+                                             self.config.defaults)
+        if self.config.force_replicate:
+            src = mounted.select(*self.config.key, "op", "commit_ts", *payload_cols)
+            res = self.target.append_log(src, batch_id, lineage_rows=lineage_rows,
+                                         resolved_ts=hi)
+        elif self.config.sink_mode == "mor":
             src = mounted.select(*self.config.key, *payload_cols, *order_meta())
             res = self.target.append_delta(
                 src, batch_id, lineage_rows=lineage_rows, resolved_ts=hi
@@ -456,12 +440,6 @@ class Changefeed:
             for rts, v in self.target.syncpoints()
         ]
 
-    def _ddl_at(self, ts: int) -> dict | None:
-        for d in self.ddl_rows:
-            if int(d["commit_ts"]) == ts:
-                return d
-        return None
-
     # -------------- the driver loop --------------
 
     def run(self, max_merges: int | None = None) -> dict:
@@ -482,96 +460,59 @@ class Changefeed:
         self._cached_frontier = steps.frontier
         uppers = plan_windows(steps, ckpt, self.config)
 
-        merges = 0
-        events = 0
-        quarantined = 0
+        cfg = self.config
+        n = {"merges": 0, "events": 0, "quarantined": 0}
         last_expired = 0  # merges count at the last snapshot-expiry tick
 
-        def _ticks():
+        def cap() -> int:
+            # DDL-free spans run as ONE Spark job with per-window group
+            # commits; CoW takes the span path ONLY for the bootstrap span
+            # (empty table): the folded base write is mode-agnostic
+            if (cfg.force_replicate or cfg.max_windows_per_job <= 1
+                    or not (cfg.sink_mode == "mor"
+                            or bootstrap_ready(self.target, cfg))):
+                return 1
+            c = cfg.max_windows_per_job
+            return min(c, max_merges - n["merges"]) if max_merges else c
+
+        def apply(lo: int, ws: list) -> bool:
+            # a lone window stays per-window: 2 jobs vs 5 as a span of one
+            if len(ws) > 1:
+                res = self._apply_span(lo, ws)
+                n["merges"] += res.get("windows", 0)
+            else:
+                res = self._apply_window(lo, ws[0])
+                n["merges"] += res["status"] == "committed"
+            n["events"] += res.get("events", 0)
+            n["quarantined"] += res.get("quarantined", 0)
+            return bool(max_merges) and n["merges"] >= max_merges
+
+        def barrier(d) -> None:
+            # quiesce done (the window up to d committed): apply the ALTER
+            self.target.alter(d["ddl_type"], d["column"], d["old_column"],
+                              d["col_type"] or "string",
+                              schema_version=int(d["commit_ts"]))
+
+        def tick() -> None:
             nonlocal last_expired
-            if (
-                self.config.sink_mode == "mor"
-                and not self.config.force_replicate
-                and self.target.delta_depth() >= self.config.compact_every
-            ):
+            if (cfg.sink_mode == "mor" and not cfg.force_replicate
+                    and self.target.delta_depth() >= cfg.compact_every):
                 # resolved-ts mode: nothing older than the checkpoint can
                 # arrive → tombstones are droppable at compaction
                 self.target.compact(drop_tombstones=True)
             # span batching advances `merges` by the span size, so an exact
             # `merges % expire_every == 0` test would fire gcd-dependently;
             # fire whenever the counter CROSSES a multiple since last tick
-            ee = self.config.expire_every
-            if ee and merges // ee > last_expired // ee:
-                last_expired = merges
+            ee = cfg.expire_every
+            if ee and n["merges"] // ee > last_expired // ee:
+                last_expired = n["merges"]
                 self.target.expire_snapshots(
-                    keep_last=self.config.expire_keep_last,
-                    safepoint_ts=self.config.gc_safepoint_ts,
+                    keep_last=cfg.expire_keep_last,
+                    safepoint_ts=cfg.gc_safepoint_ts,
                 )
 
-        i = 0
-        while i < len(uppers):
-            r = uppers[i]
-            # barrier boundaries inside (ckpt, r]
-            bounds = [d for d in self.ddl_rows if ckpt < int(d["commit_ts"]) <= r]
-            if (
-                not bounds
-                and not self.config.force_replicate
-                and self.config.max_windows_per_job > 1
-                and (self.config.sink_mode == "mor"
-                     # CoW takes the span path ONLY for the bootstrap span
-                     # (empty table): the folded base write is mode-
-                     # agnostic; steady-state CoW stays per-window MERGE
-                     or bootstrap_ready(self.target, self.config))
-            ):
-                # DDL-free span: schedule up to max_windows_per_job windows
-                # as ONE Spark job with per-window group commits — the
-                # per-batch serial constant amortizes across the span
-                cap = self.config.max_windows_per_job
-                if max_merges:
-                    cap = min(cap, max_merges - merges)
-                j = span_end(uppers, i, cap, self.ddl_rows)
-                if j > i:
-                    res = self._apply_span(ckpt, uppers[i:j + 1])
-                    events += res.get("events", 0)
-                    quarantined += res.get("quarantined", 0)
-                    merges += res.get("windows", 0)
-                    ckpt = uppers[j]
-                    i = j + 1
-                    _ticks()
-                    if max_merges and merges >= max_merges:
-                        break
-                    continue
-            lo = ckpt
-            stop = False
-            for d in bounds:
-                hi = int(d["commit_ts"])
-                res = self._apply_window(lo, hi)
-                events += res.get("events", 0)
-                quarantined += res.get("quarantined", 0)
-                merges += res["status"] == "committed"
-                # the barrier: quiesce done (merge committed), apply ALTER
-                self.target.alter(
-                    d["ddl_type"], d["column"], d["old_column"],
-                    d["col_type"] or "string", schema_version=hi,
-                )
-                lo = hi
-                if max_merges and merges >= max_merges:
-                    return {"merges": merges, "events": events, "checkpoint": lo,
-                            "quarantined": quarantined}
-            if lo < r:
-                res = self._apply_window(lo, r)
-                events += res.get("events", 0)
-                quarantined += res.get("quarantined", 0)
-                merges += res["status"] == "committed"
-            ckpt = r
-            _ticks()
-            if max_merges and merges >= max_merges:
-                stop = True
-            i += 1
-            if stop:
-                break
-        return {"merges": merges, "events": events, "checkpoint": ckpt,
-                "quarantined": quarantined}
+        ckpt = walk(uppers, ckpt, self.ddl_rows, cap, apply, barrier, tick)
+        return {**n, "checkpoint": ckpt}
 
 
 def expected_final_state(

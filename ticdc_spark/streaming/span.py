@@ -29,9 +29,11 @@ Two halves:
   metadata-cardinality lineage job. The caller commits.
 
 The module-level helpers are the pieces every front end shares: window
-planning, span extent, the window tag, the LWW order-metadata columns,
-lineage rows (stats-job or Observation), the quarantine read and the
-empty-table gate.
+planning, span extent, the window walker (:func:`walk`, the driver loop of
+``Changefeed.run`` and ``MultiTableChangefeed.run``), the window tag, the
+decode-snapshot rule (:func:`mount_window`, CRTs−1), the LWW order-metadata
+columns, lineage rows (stats-job or Observation), the quarantine read and
+the empty-table gate.
 """
 
 from __future__ import annotations
@@ -86,6 +88,39 @@ def span_end(uppers: list, i: int, cap: int, ddl_rows: list) -> int:
     return j
 
 
+def walk(uppers: list, ckpt: int, ddl_rows: list, cap, apply, barrier,
+         tick) -> int:
+    """The driver loop of every front end — TiCDC's barrier-split tick
+    (cdc/owner/ddl_manager.go:346-532) — from checkpoint ``ckpt`` over the
+    planned window upper bounds ``uppers``. A DDL-free run of windows goes
+    to ``apply(lo, span)`` as one span of at most ``cap()`` windows; a
+    window holding DDLs splits at each commit-ts d into ``apply(lo, [d])``
+    then ``barrier(d)`` (the empty ``(d, d]`` window between two DDLs at
+    one commit-ts is skipped), then its remainder. ``tick()`` runs after
+    each planned window or span. ``apply`` returns True once the merge
+    budget is spent: the walk stops there (after the barrier of a barrier
+    sub-window, before its tick). Returns the checkpoint reached."""
+    i = 0
+    while i < len(uppers):
+        lo = ckpt
+        bounds = [d for d in ddl_rows if lo < int(d["commit_ts"]) <= uppers[i]]
+        j = i if bounds else span_end(uppers, i, cap(), ddl_rows)
+        for d in bounds:
+            hi = int(d["commit_ts"])
+            spent = lo < hi and apply(lo, [hi])
+            barrier(d)
+            lo = hi
+            if spent:
+                return lo
+        ckpt = uppers[j]
+        spent = lo < ckpt and apply(lo, uppers[i:j + 1])
+        tick()
+        if spent:
+            break
+        i = j + 1
+    return ckpt
+
+
 def tag_windows(df: DataFrame, uppers: list) -> DataFrame:
     """``_win`` = index of the first upper bound >= commit_ts."""
     w = F.lit(len(uppers) - 1)
@@ -100,6 +135,16 @@ def tag_windows(df: DataFrame, uppers: list) -> DataFrame:
 def op_from_rank() -> Column:
     return (F.when(F.col("op_rank") == 1, "D")
             .when(F.col("op_rank") == 2, "U").otherwise("I"))
+
+
+def mount_window(df: DataFrame, registry, hi: int, defaults: dict) -> tuple:
+    """Mount a window (or span) ending at ``hi``: (mounted df, payload
+    columns) against the snapshot at ``hi - 1`` — a DML at commit-ts c
+    decodes against the schema BEFORE any DDL at c (cdc/entry/mounter.go:173).
+    Exact for every window: windows split at every DDL commit-ts, so none
+    holds a DDL below its upper bound."""
+    return (mount(df, registry, as_of_ts=hi - 1, defaults=defaults),
+            mounted_columns(registry, hi - 1))
 
 
 def dedup(df: DataFrame, key) -> DataFrame:
@@ -220,9 +265,7 @@ class SpanExecutor:
             prev = u
 
     def _mount(self, df: DataFrame) -> tuple:
-        hi = self.uppers[-1]
-        return (mount(df, self.registry, as_of_ts=hi, defaults=self.defaults),
-                mounted_columns(self.registry, hi))
+        return mount_window(df, self.registry, self.uppers[-1], self.defaults)
 
     def _stats(self, df: DataFrame, n: Column, mx: Column) -> dict:
         by: dict = {}

@@ -36,7 +36,12 @@ from ticdc_spark.functions.mount import mount, mounted_columns
 from ticdc_spark.operators.sortdedup import lww_dedup, with_op_rank
 from ticdc_spark.plans.schema_registry import SchemaRegistry
 from ticdc_spark.sinks.lake import LakeTable
-from ticdc_spark.streaming.pipeline import ChangefeedConfig, table_fields
+from ticdc_spark.streaming.pipeline import (
+    ChangefeedConfig,
+    ddl_rows_of,
+    table_fields,
+    table_matches,
+)
 from ticdc_spark.streaming.span import (
     WIN,
     SpanExecutor,
@@ -79,11 +84,8 @@ def run_streaming(
     the resolved-ts driver loop."""
     config = config or ChangefeedConfig(changefeed_id="cf-stream")
     registry = registry or SchemaRegistry(config.payload_fields)
-    ddl_rows = []
-    if ddl_log is not None:
-        ddl_rows = ddl_log if isinstance(ddl_log, list) else ddl_log.collect()
-        ddl_rows = sorted(ddl_rows, key=lambda r: r["commit_ts"])
-        registry.replay(ddl_rows)
+    ddl_rows = ddl_rows_of(ddl_log)
+    registry.replay(ddl_rows)
     _epoch_reset_guard(target, config.changefeed_id, checkpoint_dir)
     if not target.exists():
         target.create(
@@ -225,13 +227,9 @@ def run_streaming_multi(
 
     from ticdc_spark.sinks.journal import FeedJournal
     from ticdc_spark.streaming.multi import fold_feed_journal
-    from ticdc_spark.streaming.pipeline import table_fields, table_matches
 
     config = config or ChangefeedConfig(changefeed_id="cf-multi-stream")
-    if isinstance(ddl_log, list) or ddl_log is None:
-        ddl_rows = sorted(ddl_log or [], key=lambda r: r["commit_ts"])
-    else:
-        ddl_rows = sorted(ddl_log.collect(), key=lambda r: r["commit_ts"])
+    ddl_rows = ddl_rows_of(ddl_log)
     lifecycle = [r for r in ddl_rows
                  if r["ddl_type"] in ("create_table", "drop_table",
                                       "rename_table", "exchange_table_partition")]
