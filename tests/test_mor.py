@@ -60,6 +60,26 @@ def test_mor_restart_resume(spark, tmp_path):
     _check(spark, spec, cf)
 
 
+def test_idle_table_compacts_zero_row_deltas(spark, tmp_path):
+    """A table that goes idle gets one empty window per run(); each lands
+    as a zero-row delta file. Compaction must clear those deltas and
+    commit: with no affected bucket there is nothing to rewrite (a
+    0-partition exchange here used to fail every retry of the same tick)."""
+    spec = BinlogSpec(n_events=1_000, n_convs=50)
+    binlog = gen_binlog(spark, spec)
+    cfg = ChangefeedConfig(changefeed_id="idle", sink_mode="mor", compact_every=2)
+    target = LakeTable(spark, str(tmp_path / "t"))
+    for k in range(1, 7):
+        marks = [(p, spec.base_ts + s * spec.block)
+                 for p in range(spec.n_partitions) for s in range(1, k + 1)]
+        resolved = spark.createDataFrame(marks, "partition_id int, resolved_ts long")
+        cf = Changefeed(spark, binlog, resolved, None, target, cfg)
+        cf.run()
+    assert target.checkpoint["resolved_ts"] == spec.base_ts + 6 * spec.block
+    assert target.delta_depth() < cfg.compact_every
+    _check(spark, spec, cf)
+
+
 def test_mor_ddl_during_dml(spark, tmp_path):
     ddl = DDLSpec(commit_ts=2_000, ddl_type="add_column", column="tool_args")
     spec = BinlogSpec(n_events=4_000, n_convs=100, ddls=(ddl,))

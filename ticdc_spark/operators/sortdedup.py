@@ -61,7 +61,8 @@ def sort_events(df: DataFrame, key: Sequence[str] = HANDLE_KEY) -> DataFrame:
     )
 
 
-def lww_dedup(df: DataFrame, key: Sequence[str] = HANDLE_KEY, stats: bool = False) -> DataFrame:
+def lww_dedup(df: DataFrame, key: Sequence[str] = HANDLE_KEY, stats: bool = False,
+              order: Sequence[str] = ORDER_COLS) -> DataFrame:
     """Last-writer-wins: one surviving event per handle key.
 
     Equivalent to
@@ -78,20 +79,24 @@ def lww_dedup(df: DataFrame, key: Sequence[str] = HANDLE_KEY, stats: bool = Fals
     (A2/A5) rolls up from the dedup output without a second scan of the
     raw batch (partition_id is a function of conv_id, so summing per-key
     counts grouped by partition_id is exact).
+
+    ``order`` names the order columns (commit-ts, start-ts, op rank):
+    stored MOR rows carry them as ``_commit_ts, _start_ts, _op_rank``.
     """
-    df = order_struct(df)
+    if tuple(order) == ORDER_COLS:
+        df = order_struct(df)
     key = list(key)
     payload_cols = [c for c in df.columns if c not in key]
     # ONE struct, order keys first: max(struct) compares lexicographically,
     # so this is max_by(payload, order) WITHOUT carrying the 20-byte order
     # tuple twice through the partial-aggregate buffers and the exchange —
     # and it is deterministic under order ties (payload breaks them)
-    ordered = list(ORDER_COLS) + [c for c in payload_cols if c not in ORDER_COLS]
+    ordered = list(order) + [c for c in payload_cols if c not in order]
     aggs = [F.max(F.struct(*[F.col(c) for c in ordered])).alias("_w")]
     if stats:
         aggs += [
             F.count(F.lit(1)).alias("_n_events"),
-            F.max("commit_ts").alias("_max_commit_ts"),
+            F.max(order[0]).alias("_max_commit_ts"),
         ]
     out = df.groupBy(*key).agg(*aggs)
     extra = ["_n_events", "_max_commit_ts"] if stats else []

@@ -41,10 +41,13 @@ import os
 import re
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ticdc_spark.operators.placement import placed_fold
 
 _TYPE = {
     "string": T.StringType(),
@@ -1092,76 +1095,123 @@ class LakeTable:
     def delta_depth(self) -> int:
         return len(self.manifest().get("deltas", []))
 
-    def compact(self, drop_tombstones: bool = True) -> dict:
-        """Fold deltas into the base — **per-bucket**: only buckets that a
-        delta key hashes into are rewritten; every other bucket's fileset is
-        carried forward untouched. Compaction cost is O(affected buckets),
-        not O(table) — at 100 TB a micro-batch touching 1% of buckets
-        rewrites 1% of the table, the leveling trade TiCDC's LSM sorter
-        makes (docs/design/2022-03-16-ticdc-db-sorter.md:28-47).
+    def compact(self, drop_tombstones: bool = True, *, with_tables=()) -> dict:
+        """Fold deltas into the base of this table and of ``with_tables`` —
+        **per-bucket**: only buckets that a delta key hashes into are
+        rewritten; every other bucket's fileset is carried forward untouched.
+        Compaction cost is O(affected buckets), not O(table) — at 100 TB a
+        micro-batch touching 1% of buckets rewrites 1% of the table, the
+        leveling trade TiCDC's LSM sorter makes
+        (docs/design/2022-03-16-ticdc-db-sorter.md:28-47).
+
+        The tables form a group (a plain call is a group of one); tables
+        sharing (key, current schema names and types, bucket count) are
+        compacted by ONE placed fold (:meth:`_fold_group`): one exchange,
+        one write, then one manifest commit per table.
 
         ``drop_tombstones`` is safe when no event older than the checkpoint
         can still arrive (the resolved-ts driver mode guarantees that; keep
-        tombstones in arrival-ordered mode)."""
-        m = self.manifest()
-        if m.get("append_only"):
-            # an insert log has no LWW to fold; filesets are already final
-            return {"status": "noop"}
-        key = m["key"]
-        n_buckets = m["n_buckets"]
-        if not m.get("deltas"):
-            return {"status": "noop"}
-        delta_fs: dict = {}
-        for d in m["deltas"]:
-            if d["files"]:
-                shared = tuple(d["shared"]) if d.get("shared") else None
-                delta_fs.setdefault((d["written_version"], shared), []).extend(d["files"])
-        if not delta_fs:
-            # only empty delta entries (empty windows): clear them, no data
+        tombstones in arrival-ordered mode). Returns this table's result;
+        with ``with_tables``, ``"tables"`` maps every path to its result."""
+        results: dict = {}
+        folds: dict = {}
+        for t in (self, *with_tables):
+            m = t.manifest()
+            if m.get("append_only") or not m.get("deltas"):
+                # an insert log has no LWW to fold; filesets are final
+                results[t.path] = {"status": "noop"}
+                continue
+            sig = json.dumps([m["key"], _nt(m["schema"]), m["n_buckets"]])
+            folds.setdefault(sig, []).append((t, m))
+        for members in folds.values():
+            results.update(self._fold_group(members, drop_tombstones))
+        out = dict(results[self.path])
+        if with_tables:
+            out["tables"] = results
+        return out
+
+    def _fold_group(self, members: list, drop_tombstones: bool) -> dict:
+        """Compact ``members`` ([(table, manifest)], one key, current
+        schema and bucket count) with the bootstrap's placed fold: every
+        table's affected-bucket base rows plus all its delta rows, tagged
+        with the table's index ``_t``, go through ONE exchange that places
+        each (table, bucket) slot in its own partition, the LWW fold per
+        (table, bucket, key) on (_commit_ts, _start_ts, _op_rank) in that
+        partitioning, and one ``partitionBy(_t, _bucket)`` write — one file
+        per slot. Each table's dir then moves into its own ``data_dir`` and
+        its manifest commits. Staging lives under this table's ``data_dir``,
+        where snapshot expiry reaps it if a crash orphans it.
+
+        Affected buckets: a bucketed table's come from its manifest (no
+        job); the flat and shared-fileset tables share one
+        metadata-cardinality job over the union of their deltas (shared
+        bucket files carry every table's rows, so their manifest lists
+        over-approximate). No affected bucket (only empty deltas): the
+        deltas clear with no write."""
+        key, nb = members[0][1]["key"], members[0][1]["n_buckets"]
+        bucket = self._bucket_expr(nb, key[0])
+        deltas, affected, derive = [], [], []
+        for i, (t, m) in enumerate(members):
+            fs: dict = {}
+            for d in m["deltas"]:
+                if d["files"]:
+                    shared = tuple(d["shared"]) if d.get("shared") else None
+                    fs.setdefault((d["written_version"], shared), []).extend(d["files"])
+            deltas.append(t._reconcile(fs, m))
+            if all("buckets" in d and not d.get("shared") for d in m["deltas"]):
+                affected.append({int(b) for d in m["deltas"]
+                                 for b, f in d["buckets"].items() if f})
+            else:
+                affected.append(set())
+                if deltas[i] is not None:
+                    derive.append(deltas[i].select(F.lit(i).alias("_t"), bucket.alias("_b")))
+        if derive:
+            for r in reduce(DataFrame.unionByName, derive).distinct().collect():
+                affected[r["_t"]].add(int(r["_b"]))
+        affected = [sorted(a) for a in affected]
+        slots = [(i, b) for i, bs in enumerate(affected) for b in bs]
+        staging = os.path.join(self.data_dir, uuid.uuid4().hex)
+        if slots:
+            parts = []
+            for i, (t, m) in enumerate(members):
+                base_fs: dict = {}
+                for b in affected[i]:
+                    info = m["buckets"][str(b)]
+                    if info["files"]:
+                        base_fs.setdefault((info["written_version"], None), []).extend(info["files"])
+                parts += [p.withColumn("_t", F.lit(i))
+                          for p in (t._reconcile(base_fs, m), deltas[i]) if p is not None]
+            rows = reduce(DataFrame.unionByName, parts).withColumn("_bucket", bucket)
+            slot_of = F.create_map(*[F.lit(x) for s, (i, b) in enumerate(slots)
+                                     for x in (i * nb + b, s)])
+            folded = placed_fold(
+                rows, F.element_at(slot_of, F.col("_t") * nb + F.col("_bucket")),
+                len(slots), ["_t", "_bucket", *key],
+                order=("_commit_ts", "_start_ts", "_op_rank"))
+            if drop_tombstones:
+                folded = folded.filter(
+                    (F.col("_deleted").isNull()) | (F.col("_deleted") != 1))
+            folded.write.partitionBy("_t", "_bucket").parquet(staging)
+        out = {}
+        for i, (t, m) in enumerate(members):
+            dest = os.path.join(staging, f"_t={i}")
+            if os.path.isdir(dest):
+                os.makedirs(t.data_dir, exist_ok=True)
+                dest, src = os.path.join(t.data_dir, uuid.uuid4().hex), dest
+                os.rename(src, dest)
+            for b in affected[i]:
+                # a bucket whose rows were all tombstones has no dir: []
+                m["buckets"][str(b)] = {
+                    "files": parquet_files(os.path.join(dest, f"_bucket={b}")),
+                    "written_version": m["schema_version"],
+                }
             m["deltas"] = []
             m["version"] += 1
-            self._commit(m)
-            return {"status": "compacted", "version": m["version"], "buckets": []}
-        delta = self._reconcile(delta_fs, m)
-        if all("buckets" in d and not d.get("shared") for d in m["deltas"]):
-            # bucketed delta layout: the affected-bucket list comes straight
-            # from the manifest — ZERO Spark jobs for it. (Shared filesets
-            # are excluded: their bucket files carry EVERY table's rows, so
-            # the manifest list over-approximates this table's buckets —
-            # derive from the filtered delta instead.)
-            affected = sorted({int(b) for d in m["deltas"] for b in d["buckets"] if d["buckets"][b]})
-        else:
-            # legacy layout: metadata-cardinality collect (≤ n_buckets rows)
-            affected = sorted(
-                int(r[0])
-                for r in delta.select(
-                    self._bucket_expr(n_buckets, key[0]).alias("_b")
-                ).distinct().collect()
-            )
-        # delta keys all hash into `affected`, so this bucket-pruned read
-        # sees every delta row; it is itself delta-scoped (untouched base
-        # rows of affected buckets flow through without the LWW shuffle)
-        merged = self.read(buckets=affected, include_deleted=True, include_meta=True)
-        if drop_tombstones:
-            merged = merged.filter(
-                (F.col("_deleted").isNull()) | (F.col("_deleted") != 1)
-            )
-        merged = merged.withColumn("_bucket", self._bucket_expr(n_buckets, key[0]))
-        commit_dir = os.path.join(self.data_dir, uuid.uuid4().hex)
-        (
-            merged.repartition(len(affected), F.col("_bucket"))
-            .write.partitionBy("_bucket")
-            .parquet(commit_dir)
-        )
-        for b in affected:
-            m["buckets"][str(b)] = {
-                "files": parquet_files(os.path.join(commit_dir, f"_bucket={b}")),
-                "written_version": m["schema_version"],
-            }
-        m["deltas"] = []
-        m["version"] += 1
-        self._commit(m)
-        return {"status": "compacted", "version": m["version"], "buckets": affected}
+            t._commit(m)
+            out[t.path] = {"status": "compacted", "version": m["version"],
+                           "buckets": affected[i]}
+        shutil.rmtree(staging, ignore_errors=True)
+        return out
 
     # ---------------- snapshot expiry (GC safepoint, W8) ----------------
 

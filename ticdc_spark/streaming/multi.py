@@ -602,8 +602,9 @@ class MultiTableChangefeed:
             ]
             if due:
                 self._fold_journal()
+                first, *rest = [self.feeds[t].target for t in due]
+                first.compact(drop_tombstones=True, with_tables=rest)
                 for t in due:
-                    self.feeds[t].target.compact(drop_tombstones=True)
                     self._load_state(t)
                 self._gc_shared()
 

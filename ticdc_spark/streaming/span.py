@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ticdc_spark.functions.mount import mount, mounted_columns
-from ticdc_spark.operators.placement import placement_token_column
+from ticdc_spark.operators.placement import placed_fold
 from ticdc_spark.operators.sortdedup import lww_dedup
 from ticdc_spark.sinks.lake import LakeTable, staged_files
 
@@ -321,10 +321,8 @@ class SpanExecutor:
                                   for x in (F.lit(name), F.lit(i))])
             idx = (F.coalesce(F.element_at(tmap, F.col(tc)), F.lit(0)) * n_buckets
                    + F.col("_bucket"))
-            raw = raw.withColumn(
-                "_pt", placement_token_column(self.spark, n_slots, idx)
-            ).repartition(n_slots, F.col("_pt"))
-            final = dedup(raw, ["_pt", tc, "_bucket", *key]).drop("_pt")
+            final = placed_fold(raw, idx, n_slots, [tc, "_bucket", *key],
+                                stats=True).withColumn("op", op_from_rank())
         else:
             spread = [F.col(tc)] if len(feeds) > 1 else []
             raw = raw.repartition(dp, *spread, F.col(key[0]))

@@ -369,11 +369,9 @@ def run_streaming_multi(
     from ticdc_spark.streaming.multi import gc_shared_filesets
 
     fold_feed_journal(spark, journal)
-    compacted = False
-    for t in tables:
-        if targets[t].delta_depth() >= config.compact_every:
-            targets[t].compact(drop_tombstones=False)
-            compacted = True
-    if compacted:
+    due = [targets[t] for t in tables
+           if targets[t].delta_depth() >= config.compact_every]
+    if due:
+        due[0].compact(drop_tombstones=False, with_tables=due[1:])
         gc_shared_filesets(spark, journal)
     return stats
