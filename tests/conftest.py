@@ -1,3 +1,4 @@
+import itertools
 import os
 import sys
 
@@ -17,6 +18,40 @@ def spark():
 @pytest.fixture()
 def tmp_table_path(tmp_path):
     return str(tmp_path / "lake_table")
+
+
+_groups = itertools.count()
+
+
+def in_job_group(spark, fn) -> tuple:
+    """``fn()`` run under a Spark job group of its own: (its result, the
+    group id), the listener bus drained so the status store holds every
+    job the group launched."""
+    sc = spark.sparkContext
+    group = f"test-group-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, group
+
+
+def write_stage_tasks(spark, group) -> list:
+    """Task count of each stage of job group ``group`` that reads a shuffle
+    and writes files: for a write straight out of an exchange (the placed
+    fold), the stage after that exchange."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for j in sc.statusTracker().getJobIdsForGroup(group):
+        for s in sc.statusTracker().getJobInfo(j).stageIds:
+            sd = store.lastStageAttempt(s)
+            if sd.shuffleReadRecords() > 0 and sd.outputRecords() > 0:
+                out.append(sd.numTasks())
+    return out
 
 
 def assert_df_equal(got, want, key_cols):

@@ -18,8 +18,9 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from tests.conftest import assert_df_equal
-from ticdc_spark.operators.placement import aligned_partition_tokens, murmur3_long
+from tests.conftest import assert_df_equal, in_job_group, write_stage_tasks
+from ticdc_spark.operators.placement import (aligned_partition_tokens, murmur3_long,
+                                             slot_partitions)
 from ticdc_spark.sinks.lake import LakeTable
 from ticdc_spark.sources.binlog_gen import BinlogSpec, gen_binlog, gen_resolved_log
 from ticdc_spark.streaming.multi import MultiTableChangefeed
@@ -31,23 +32,14 @@ META = ["_commit_ts", "_start_ts", "_op_rank", "_deleted"]
 _TYPES = {"conv_id": "string", "turn_idx": "int", "text": "string", "tool": "string",
           "_commit_ts": "long", "_start_ts": "long", "_op_rank": "int", "_deleted": "int"}
 
-_groups = itertools.count()
 _ts = itertools.count(1_000)
 
 
 def _jobs_in_group(spark, fn) -> tuple:
     """``fn()`` and the Spark jobs it launched, counted under a job group
     of its own."""
-    sc = spark.sparkContext
-    group = f"compact-test-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    out, group = in_job_group(spark, fn)
+    return out, len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
 def _create(spark, path, layout="flat", n_buckets=4, extra=False) -> LakeTable:
@@ -155,15 +147,20 @@ def _fleet(spark, root, layout, n):
 def test_flat_fleet_compaction_is_one_fold(spark, tmp_path, write_plans):
     t0, t1 = _fleet(spark, str(tmp_path), "flat", 2)
     write_plans.clear()
-    res, n = _jobs_in_group(spark, lambda: t0.compact(with_tables=[t1]))
+    res, group = in_job_group(spark, lambda: t0.compact(with_tables=[t1]))
+    n = len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
     assert n <= 4, f"compacting a 2-table flat fleet launched {n} Spark jobs"
     assert {r["status"] for r in res["tables"].values()} == {"compacted"}
     assert len(write_plans) == 1, "one write for the whole group"
     assert write_plans[0].count("Exchange") == 1, write_plans[0]
-    # one file per (table, bucket) slot
+    # the (table, bucket) slots share min(slots, cores) tasks of the fold's
+    # stage, and each slot still lands in one file
+    n_slots = sum(len(r["buckets"]) for r in res["tables"].values())
+    dp = spark.sparkContext.defaultParallelism
+    assert write_stage_tasks(spark, group) == [min(n_slots, dp)]
     for t in (t0, t1):
         for b in res["tables"][t.path]["buckets"]:
-            assert len(t.manifest()["buckets"][str(b)]["files"]) <= 1
+            assert len(t.manifest()["buckets"][str(b)]["files"]) == 1
 
 
 def test_bucketed_compaction_takes_buckets_from_manifest(spark, tmp_path, write_plans):
@@ -189,6 +186,22 @@ def test_mixed_signatures_fold_separately(spark, tmp_path):
     for t in (a, b, c):
         assert _snapshot(t) == before[t.path]
         assert t.delta_depth() == 0
+
+
+@given(st.integers(1, 300), st.integers(1, 64))
+@settings(max_examples=200, deadline=None)
+def test_slot_partitions_place_each_slot_once_balanced(n_slots, parallelism):
+    """Spark-free: the slots fill ``min(n_slots, parallelism)`` partitions,
+    each slot in one, per-partition slot counts within one of each other,
+    and each slot's token hashes (Spark's Murmur3, as ``HashPartitioning``
+    routes) into that slot's partition."""
+    parts = slot_partitions(n_slots, parallelism)
+    n = min(n_slots, parallelism)
+    assert len(parts) == n_slots
+    counts = [parts.count(p) for p in range(n)]
+    assert sum(counts) == n_slots and max(counts) - min(counts) <= 1
+    toks = aligned_partition_tokens(n)
+    assert [murmur3_long(toks[p]) % n for p in parts] == parts
 
 
 def test_placement_tokens_launch_no_job(spark):

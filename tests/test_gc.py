@@ -141,6 +141,19 @@ def test_expire_honors_safepoint_and_gcs_files(spark, tmp_table_path):
     for root, _, files in os.walk(t.data_dir):
         on_disk.update(os.path.join(root, f) for f in files if f.endswith(".parquet"))
     assert on_disk == live
+    # and nothing else is left behind: every other file is a live file's
+    # checksum sidecar or a write marker of a dir whose subtree still
+    # holds a live file, and no dir is empty
+    live_dirs = {os.path.dirname(f) for f in live}
+    for root, dirs, files in os.walk(t.data_dir):
+        holds_live = any(d == root or d.startswith(root + os.sep) for d in live_dirs)
+        assert files or dirs or root == t.data_dir, f"empty dir left: {root}"
+        for f in files:
+            p = os.path.join(root, f)
+            assert (p in live
+                    or (f.startswith(".") and f.endswith(".crc")
+                        and os.path.join(root, f[1:-4]) in live)
+                    or (f in ("_SUCCESS", "._SUCCESS.crc") and holds_live)), p
 
 
 def test_expire_never_removes_versions_at_or_after_safepoint(spark, tmp_table_path):

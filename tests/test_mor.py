@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import assert_df_equal
+from tests.conftest import assert_df_equal, in_job_group, write_stage_tasks
 from ticdc_spark.sinks.lake import LakeTable
 from ticdc_spark.sources.binlog_gen import BinlogSpec, DDLSpec, gen_binlog, gen_ddl_log, gen_resolved_log
 from ticdc_spark.streaming.pipeline import Changefeed, ChangefeedConfig, expected_final_state
@@ -153,7 +153,7 @@ def test_bucketed_delta_read_prunes_files(spark, tmp_table_path):
     assert got.count() > 0
 
 
-@pytest.mark.parametrize("n_buckets", [4, 2], ids=["aligned", "spread"])
+@pytest.mark.parametrize("n_buckets", [4, 2, None], ids=["aligned", "spread", "two_per_core"])
 def test_bootstrap_fast_path_state_identical_and_single_write(
         spark, tmp_path, write_plans, n_buckets):
     """Initial-load fast path: the first DDL-free span on an empty table
@@ -162,7 +162,8 @@ def test_bootstrap_fast_path_state_identical_and_single_write(
     the bootstrap table carries zero deltas and populated base buckets.
     With fewer bucket slots than cores the raw span spreads by key and the
     mounted rows align in a second exchange; otherwise one aligned
-    exchange carries the whole write."""
+    exchange carries the whole write, its bucket slots sharing one task
+    per core (``None``: two slots per core)."""
     from ticdc_spark.sinks.lake import LakeTable
     from ticdc_spark.sources.binlog_gen import BinlogSpec, gen_binlog, gen_resolved_log
     from ticdc_spark.streaming.pipeline import Changefeed, ChangefeedConfig
@@ -179,11 +180,15 @@ def test_bootstrap_fast_path_state_identical_and_single_write(
         cf.run()
         return cf.target
 
-    fast = run(f"{tmp_path}/fast", True)
-    # the whole feed is one span: ONE write, placed per the slot rule
+    dp = spark.sparkContext.defaultParallelism
+    n_buckets = n_buckets or 2 * dp
+    fast, group = in_job_group(spark, lambda: run(f"{tmp_path}/fast", True))
+    # the whole feed is one span: ONE write, placed per the slot rule, its
+    # stage min(slots, cores) tasks, one file per bucket slot
     assert len(write_plans) == 1
-    aligned = n_buckets >= spark.sparkContext.defaultParallelism
-    assert write_plans[0].count("Exchange") == (1 if aligned else 2), write_plans[0]
+    assert write_plans[0].count("Exchange") == (1 if n_buckets >= dp else 2), write_plans[0]
+    assert write_stage_tasks(spark, group) == [min(n_buckets, dp)]
+    assert all(len(i["files"]) == 1 for i in fast.manifest()["buckets"].values())
     slow = run(f"{tmp_path}/slow", False)
     from tests.conftest import assert_df_equal
     assert_df_equal(fast.read(), slow.read(), ["conv_id", "turn_idx"])

@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import assert_df_equal
+from tests.conftest import assert_df_equal, in_job_group, write_stage_tasks
 from ticdc_spark.sinks.lake import LakeTable
 from ticdc_spark.sources.binlog_gen import BinlogSpec, DDLSpec, gen_binlog, gen_ddl_log, gen_resolved_log
 from ticdc_spark.streaming.multi import MultiTableChangefeed, route_tables
@@ -852,16 +852,19 @@ def test_fleet_bootstrap_state_identical_and_single_pass(
         )
 
     fast = build(f"{tmp_path}/fast", True)
-    s_fast = fast.run()
+    s_fast, group = in_job_group(spark, fast.run)
     assert len(write_plans) == 1
-    aligned = n_tables * n_buckets >= spark.sparkContext.defaultParallelism
-    assert write_plans[0].count("Exchange") == (1 if aligned else 2), write_plans[0]
+    n_slots, dp = n_tables * n_buckets, spark.sparkContext.defaultParallelism
+    assert write_plans[0].count("Exchange") == (1 if n_slots >= dp else 2), write_plans[0]
+    # the (table, bucket) slots share min(slots, cores) tasks of the write's
+    # stage, and each slot still lands in one file
+    assert write_stage_tasks(spark, group) == [min(n_slots, dp)]
     slow = build(f"{tmp_path}/slow", False)
     slow.run()
     for t in specs:
         assert_df_equal(fast.read(t), slow.read(t), KEY)
         mf = fast.feeds[t].target.manifest()
-        assert any(i["files"] for i in mf["buckets"].values())
+        assert all(len(i["files"]) == 1 for i in mf["buckets"].values())
         assert not mf.get("deltas")
         assert (fast.feeds[t].target.checkpoint["resolved_ts"]
                 == slow.feeds[t].target.checkpoint["resolved_ts"])

@@ -71,6 +71,9 @@ BROADCAST_KEY_LIMIT = 500_000
 # on-disk delta byte size (known from the manifest's filesets — no extra job)
 DELTA_BROADCAST_BYTES = 32 * 1024 * 1024
 
+# the commit markers a Spark file write leaves in its output dir
+_WRITE_MARKERS = frozenset({"_SUCCESS", "._SUCCESS.crc"})
+
 
 def _struct(fields) -> T.StructType:
     return T.StructType([T.StructField(x[0], _TYPE[x[1]], True) for x in fields])
@@ -1135,7 +1138,8 @@ class LakeTable:
         schema and bucket count) with the bootstrap's placed fold: every
         table's affected-bucket base rows plus all its delta rows, tagged
         with the table's index ``_t``, go through ONE exchange that places
-        each (table, bucket) slot in its own partition, the LWW fold per
+        each (table, bucket) slot in exactly one of ``min(slots,
+        defaultParallelism)`` partitions, the LWW fold per
         (table, bucket, key) on (_commit_ts, _start_ts, _op_rank) in that
         partitioning, and one ``partitionBy(_t, _bucket)`` write — one file
         per slot. Each table's dir then moves into its own ``data_dir`` and
@@ -1246,14 +1250,24 @@ class LakeTable:
                 live.update(os.path.realpath(f) for f in info["files"])
             for d in m.get("deltas", []):
                 live.update(os.path.realpath(f) for f in d["files"])
+        # an unreferenced parquet file goes with its checksum sidecar, and a
+        # write dir whose subtree holds no live file goes with its markers
+        # (Spark's _SUCCESS and its sidecar) — else the dir never empties
         removed_files = 0
         if os.path.isdir(self.data_dir):
+            holds_live: set = set()
             for root, dirs, files in os.walk(self.data_dir, topdown=False):
+                kept = {f for f in files if f.endswith(".parquet")
+                        and os.path.realpath(os.path.join(root, f)) in live}
+                if kept or any(os.path.join(root, d) in holds_live for d in dirs):
+                    holds_live.add(root)
                 for f in files:
-                    p = os.path.realpath(os.path.join(root, f))
-                    if f.endswith(".parquet") and p not in live:
-                        os.remove(p)
-                        removed_files += 1
+                    # ``.x.crc`` is the checksum sidecar of ``x``
+                    base = f[1:-4] if f.startswith(".") and f.endswith(".crc") else f
+                    if ((base.endswith(".parquet") and base not in kept)
+                            or (f in _WRITE_MARKERS and root not in holds_live)):
+                        os.remove(os.path.join(root, f))
+                        removed_files += f.endswith(".parquet")
                 if root != self.data_dir and not os.listdir(root):
                     os.rmdir(root)
         for v in expired:

@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ticdc_spark.functions.mount import mount, mounted_columns
-from ticdc_spark.operators.placement import placed_fold
+from ticdc_spark.operators.placement import cluster_parallelism, placed_fold
 from ticdc_spark.operators.sortdedup import lww_dedup
 from ticdc_spark.sinks.lake import LakeTable, staged_files
 
@@ -300,7 +300,8 @@ class SpanExecutor:
         schema has it (CoW tables do not).
 
         Placement: with at least ``defaultParallelism`` (table, bucket)
-        slots, ONE exchange of the raw span places slot -> partition 1:1
+        slots, ONE exchange of the raw span places the slots onto
+        ``defaultParallelism`` partitions, each slot in exactly one
         (operators/placement.py); the (table, bucket, key) aggregate reuses
         that partitioning in a single sort pass and the write streams
         straight out of mount, one file per slot. With fewer slots than
@@ -313,7 +314,7 @@ class SpanExecutor:
         schema = next(iter(feeds.values()))[0].manifest()["schema"]
         meta = "_commit_ts" in [c[0] for c in schema]
         n_slots = len(feeds) * n_buckets
-        dp = self.spark.sparkContext.defaultParallelism
+        dp = cluster_parallelism(self.spark)
         raw = self.df.drop(WIN).withColumn(
             "_bucket", LakeTable._bucket_expr(n_buckets, key[0]))
         if n_slots >= dp:
