@@ -7,6 +7,7 @@ Usage:
   python bench_extra.py queries  [sf_dir] [repeats] [q1 q2 ...]
   python bench_extra.py replay   [n_events] [mor|cow]
   python bench_extra.py explain  <out_dir> [sf_dir] [q1 q2 ...]
+  python bench_extra.py cpu      [n_events] [mor|cow]
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from ticdc_spark.session import get_spark
 
 
 def _spark():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
     return get_spark("ticdc-bench-extra", cores=cpus, shuffle_partitions=cpus)
 
 
@@ -60,6 +61,30 @@ def cmd_queries(argv):
     print(json.dumps({"sf_dir": sf_dir, "results": out}))
 
 
+def _replay_spec(n_events: int):
+    """The engine-replay binlog shape of bench.py at ``n_events``."""
+    from ticdc_spark.sources.binlog_gen import BinlogSpec
+
+    return BinlogSpec(n_events=n_events, n_convs=max(n_events // 50, 100),
+                      n_turns=16, block=max(n_events // 10, 20_000),
+                      n_partitions=8)
+
+
+def _replay_feed(spark, binlog, spec, work: str, sink_mode: str):
+    """The replay's Changefeed over ``binlog`` into an empty table under
+    ``work`` (bootstrap span first, as in bench.py)."""
+    from ticdc_spark.sinks.lake import LakeTable
+    from ticdc_spark.sources.binlog_gen import gen_resolved_log
+    from ticdc_spark.streaming.pipeline import Changefeed, ChangefeedConfig
+
+    return Changefeed(
+        spark, binlog, gen_resolved_log(spark, spec), None,
+        LakeTable(spark, os.path.join(work, "t")),
+        ChangefeedConfig(changefeed_id=f"bx-{sink_mode}", n_buckets=32,
+                         sink_mode=sink_mode, compact_every=8),
+    )
+
+
 def cmd_replay(argv):
     """Engine-replay phase breakdown at a given event count (bench shape:
     MOR, empty table -> bootstrap span). Times each stage with the noop
@@ -67,13 +92,9 @@ def cmd_replay(argv):
     n_events = int(argv[0]) if argv else 4_000_000
     sink_mode = argv[1] if len(argv) > 1 else "mor"
     spark = _spark()
-    from ticdc_spark.sinks.lake import LakeTable
-    from ticdc_spark.sources.binlog_gen import BinlogSpec, gen_binlog, gen_resolved_log
-    from ticdc_spark.streaming.pipeline import Changefeed, ChangefeedConfig
+    from ticdc_spark.sources.binlog_gen import gen_binlog
 
-    spec = BinlogSpec(n_events=n_events, n_convs=max(n_events // 50, 100),
-                      n_turns=16, block=max(n_events // 10, 20_000),
-                      n_partitions=8)
+    spec = _replay_spec(n_events)
     work = tempfile.mkdtemp(prefix="ticdc_bx_")
     phases = {}
     try:
@@ -115,12 +136,7 @@ def cmd_replay(argv):
 
         # phase D: the full engine run (real sink)
         spark.sparkContext.setJobDescription("bx:replay-full")
-        cf = Changefeed(
-            spark, binlog, gen_resolved_log(spark, spec), None,
-            LakeTable(spark, os.path.join(work, "t")),
-            ChangefeedConfig(changefeed_id=f"bx-{sink_mode}", n_buckets=32,
-                             sink_mode=sink_mode, compact_every=8),
-        )
+        cf = _replay_feed(spark, binlog, spec, work, sink_mode)
         t0 = time.time()
         stats = cf.run()
         phases["full_run"] = round(time.time() - t0, 3)
@@ -165,7 +181,109 @@ def cmd_explain(argv):
         print(f"wrote {path} ({len(txt.splitlines())} lines)")
 
 
+# driver JVM thread classes by the thread name's first 15 bytes (/proc comm)
+_JVM_THREADS = (
+    ("jit", ("C1 CompilerThre", "C2 CompilerThre", "Sweeper thread")),
+    ("gc", ("GC Thread", "G1 ", "VM Thread")),
+    ("tasks", ("Executor task l",)),
+    ("py4j", ("Thread-",)),  # gateway connections: the driver's planning calls
+)
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def _ticks(stat_path: str, children: bool = False) -> int:
+    """utime + stime (+ cutime + cstime) from a /proc stat file; 0 if gone."""
+    try:
+        with open(stat_path) as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return 0
+    return sum(int(x) for x in fields[11:15 if children else 13])
+
+
+def _cpu_snapshot(jvm_pid: int) -> dict:
+    """CPU ticks of each driver JVM thread, of the whole JVM, of the Python
+    processes below it (the daemon counts its reaped workers) and of this
+    process, and the module each PySpark daemon runs; read from /proc only."""
+    from perfbench.host import descendants
+
+    threads = {}
+    for tid in os.listdir(f"/proc/{jvm_pid}/task"):
+        try:
+            with open(f"/proc/{jvm_pid}/task/{tid}/comm") as f:
+                comm = f.read().strip()
+        except OSError:
+            continue
+        threads[tid] = (comm, _ticks(f"/proc/{jvm_pid}/task/{tid}/stat"))
+    kids = descendants(jvm_pid)
+    daemons = set()
+    for p in kids:
+        try:
+            with open(f"/proc/{p}/cmdline", "rb") as f:
+                argv = f.read().decode().split("\0")
+        except OSError:
+            continue
+        if "-m" in argv[:-1]:  # a daemon: python -m <module>; workers are its forks
+            daemons.add(argv[argv.index("-m") + 1])
+    t = os.times()
+    return {"threads": threads, "jvm": _ticks(f"/proc/{jvm_pid}/stat"),
+            "python_workers": sum(_ticks(f"/proc/{p}/stat", children=True) for p in kids),
+            "driver_python": (t.user + t.system) * _TICK, "daemons": sorted(daemons)}
+
+
+def _cpu_split(a: dict, b: dict) -> dict:
+    """CPU seconds between two snapshots by class; ``jvm.exited`` is the JVM
+    time of threads that ended in between."""
+    out = {f"jvm.{c}": 0 for c, _ in _JVM_THREADS}
+    out["jvm.other"] = 0
+    for tid, (comm, ticks) in b["threads"].items():
+        cls = next((c for c, pre in _JVM_THREADS if comm.startswith(pre)), "other")
+        out[f"jvm.{cls}"] += ticks - a["threads"].get(tid, (comm, 0))[1]
+    out["jvm.exited"] = (b["jvm"] - a["jvm"]) - sum(out.values())
+    for k in ("python_workers", "driver_python"):
+        out[k] = b[k] - a[k]
+    return {k: round(v / _TICK, 2) for k, v in out.items()}
+
+
+def cmd_cpu(argv):
+    """One engine replay (bench.py's shape, WAL generated untimed) and the
+    CPU seconds of its run by thread class: the driver JVM's JIT compiler,
+    task, GC, py4j and other threads, the Python workers and this driver
+    Python, plus the module the PySpark daemons run (the effective
+    ``spark.python.daemon.module``). Read from /proc before and after the
+    run: no extra Spark job."""
+    n_events = int(argv[0]) if argv else 400_000
+    sink_mode = argv[1] if len(argv) > 1 else "mor"
+    spark = _spark()
+    from ticdc_spark.sources.binlog_gen import gen_binlog
+
+    jvm_pid = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
+    spec = _replay_spec(n_events)
+    work = tempfile.mkdtemp(prefix="ticdc_bx_")
+    try:
+        wal = os.path.join(work, "wal")
+        gen_binlog(spark, spec).write.parquet(wal)
+        cf = _replay_feed(spark, spark.read.parquet(wal), spec, work, sink_mode)
+        la0 = os.getloadavg()[0]
+        a, t0 = _cpu_snapshot(jvm_pid), time.time()
+        stats = cf.run()
+        wall, b = time.time() - t0, _cpu_snapshot(jvm_pid)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    split = _cpu_split(a, b)
+    total = sum(split.values())
+    print(json.dumps({
+        "n_events": n_events, "sink_mode": sink_mode, "events": stats["events"],
+        "wall_s": round(wall, 2), "cpu_s": split, "cpu_total_s": round(total, 2),
+        "jit_frac": round(split["jvm.jit"] / max(total, 1e-9), 3),
+        "python_daemon_modules": b["daemons"],
+        "spark.driver.extraJavaOptions":
+            spark.sparkContext.getConf().get("spark.driver.extraJavaOptions", ""),
+        "loadavg": [round(la0, 2), round(os.getloadavg()[0], 2)],
+    }))
+
+
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     {"queries": cmd_queries, "replay": cmd_replay, "multi": cmd_multi,
-     "explain": cmd_explain}[cmd](sys.argv[2:])
+     "explain": cmd_explain, "cpu": cmd_cpu}[cmd](sys.argv[2:])

@@ -3,6 +3,7 @@ import os
 import sys
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -48,7 +49,13 @@ def write_stage_tasks(spark, group) -> list:
     out = []
     for j in sc.statusTracker().getJobIdsForGroup(group):
         for s in sc.statusTracker().getJobInfo(j).stageIds:
-            sd = store.lastStageAttempt(s)
+            try:
+                sd = store.lastStageAttempt(s)
+            except Py4JJavaError:
+                # a stage the status store does not hold (seen once in a
+                # full-suite run); were it the write's stage, the caller's
+                # task-count assertion still fails
+                continue
             if sd.shuffleReadRecords() > 0 and sd.outputRecords() > 0:
                 out.append(sd.numTasks())
     return out

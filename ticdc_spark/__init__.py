@@ -18,7 +18,15 @@ engine declares the same computations with the DataFrame API and lets
 Catalyst/Tungsten pick physical strategies.
 """
 
-from ticdc_spark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name):
+    # lazy, so that importing the package (as the PySpark worker daemon
+    # does) loads neither pyspark.sql nor the session module
+    if name == "get_spark":
+        from ticdc_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

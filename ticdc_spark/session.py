@@ -2,6 +2,20 @@
 
 Local-mode testing stands in for a multi-executor cluster; every knob here
 is one that transfers (AQE, shuffle partitions sized to cores, Arrow on).
+
+Python workers fork from the engine's own daemon,
+``ticdc_spark.worker_daemon`` (``spark.python.daemon.module``), importable
+on the workers because the repo root is put on their ``PYTHONPATH``. It
+runs ``pyspark.daemon.manager()`` after two preparations that every
+forked worker inherits. First, lazy zip invalidation: PySpark calls
+``importlib.invalidate_caches()`` at the start of every task, and before
+Python 3.13 that re-parses the central directory of every zip importer
+(``pyspark.zip``, the spark-core jar, py4j), most of a reused worker's
+per-task CPU. The daemon's wrapper re-reads an archive only when its
+``(st_mtime_ns, st_size)`` changed since its last read. Second, it
+imports what every mount worker needs (``pyspark.worker``, the Arrow
+serializers, pandas, pyarrow) once, before the first fork, and freezes
+those objects out of the ``gc.collect()`` PySpark runs after each task.
 """
 
 from __future__ import annotations
@@ -25,7 +39,7 @@ def get_spark(
     micro-batch, not per 200-partition default.
     """
     # make the package importable in executor python workers regardless of
-    # the driver's launch directory (closures may reference repo modules)
+    # the driver's launch directory (the worker daemon is a repo module)
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if repo_root not in pp.split(":"):
@@ -62,6 +76,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "ticdc_spark.worker_daemon")
         .config("spark.driver.memory", os.environ.get("TICDC_SPARK_DRIVER_MEM", "48g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
