@@ -106,10 +106,10 @@ def main():
         seq_pt, ev2 = run_sequential(wal_bytable, "seq_pt")
 
         # per-table-DDL-CHURN scenario: every table gets its own scoped
-        # add_column early on, so chain digests diverge feed-wide and every
-        # later window takes the heterogeneous path. The round-5 write
-        # batching must keep write jobs O(windows) (union write per
-        # type-compatibility group — 1 group here), not O(windows*tables).
+        # add_column early on, so chain digests diverge feed-wide: every
+        # later span mounts once per chain and unions the mounts into one
+        # write per type-compatibility group (1 group here), so write jobs
+        # stay O(spans), not O(windows*tables).
         from ticdc_spark.sources.binlog_gen import DDLSpec
 
         churn_tables = int(os.environ.get("MT_CHURN_TABLES", "32"))

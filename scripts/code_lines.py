@@ -8,13 +8,16 @@ of its lines.
 
 Usage::
 
-    python scripts/code_lines.py ticdc_spark/streaming/*.py
+    python scripts/code_lines.py ticdc_spark/streaming        # a directory
+    python scripts/code_lines.py ticdc_spark/streaming/*.py   # or files
 
-prints one ``<lines>  <path>`` row per file and a ``total`` row.
+prints one ``<lines>  <path>`` row per file (a directory stands for every
+``*.py`` file below it, recursively) and a ``total`` row.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import tokenize
 
@@ -40,9 +43,17 @@ def code_lines(path: str) -> int:
     return len(lines)
 
 
+def py_files(path: str) -> list:
+    """``path`` itself, or every ``*.py`` file below a directory, sorted."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(path)
+                  for f in fs if f.endswith(".py"))
+
+
 def main(paths: list) -> int:
     total = 0
-    for p in paths:
+    for p in (f for path in paths for f in py_files(path)):
         n = code_lines(p)
         total += n
         print(f"{n:7d}  {p}")

@@ -141,7 +141,8 @@ def test_syncpoint_group_commit_validity(spark, tmp_table_path):
     surface later windows' rows."""
     t = LakeTable(spark, tmp_table_path + "_grp")
     t.create(key=KEY, fields=FIELDS, n_buckets=2, with_order_cols=True)
-    t.append_delta_files([], "w1", resolved_ts=10)
+    t.append_delta_files_group(
+        [{"batch_id": "w1", "files": [], "resolved_ts": 10, "lineage_rows": []}])
     v1 = t.manifest()["version"]
     t.append_delta_files_group([
         {"batch_id": "w2", "files": [], "resolved_ts": 20, "lineage_rows": []},

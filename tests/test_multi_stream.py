@@ -212,3 +212,46 @@ def test_stream_shared_fleet_filesets(spark, tmp_path):
         want = expected_final_state(gen_binlog(spark, s), SchemaRegistry(),
                                     s.max_commit_ts, KEY)
         assert_df_equal(factory(t).read(), want, KEY)
+
+
+@pytest.mark.parametrize("mode,scope", [("single", None), ("multi", None),
+                                        ("multi", "t0")],
+                         ids=["single", "multi-global", "multi-scoped"])
+def test_stream_truncate_matches_oracle(spark, tmp_path, mode, scope):
+    """A ``truncate_table`` in the DDL log deletes every row at or below it
+    in both streaming modes: each table equals the LWW oracle, which keeps
+    only the DML above the truncate. A scoped truncate also diverges t0's
+    schema chain from t1's inside one micro-batch."""
+    from ticdc_spark.plans.schema_registry import SchemaRegistry
+    from ticdc_spark.streaming.pipeline import expected_final_state
+    from ticdc_spark.streaming.structured import run_streaming
+
+    trunc = DDLSpec(commit_ts=3_000, ddl_type="truncate_table", table_name=scope)
+    ddl_rows = [{"commit_ts": trunc.commit_ts, "ddl_type": trunc.ddl_type,
+                 "query": trunc.query(), "column": None, "old_column": None,
+                 "col_type": None, "schema_version": trunc.commit_ts,
+                 "table_name": scope}]
+    specs = {t: BinlogSpec(n_events=3_000, n_convs=90, seed=700 + i)
+             for i, t in enumerate(["t0", "t1"] if mode == "multi" else ["t0"])}
+    parts = [gen_binlog(spark, s).withColumn("table_name", F.lit(t))
+             for t, s in specs.items()]
+    binlog = parts[0]
+    for p in parts[1:]:
+        binlog = binlog.unionByName(p)
+    wal = str(tmp_path / "wal")
+    binlog.repartition(6).write.parquet(wal)
+    factory = lambda t: LakeTable(spark, f"{tmp_path}/st/{t}")  # noqa: E731
+    cfg = ChangefeedConfig(changefeed_id="trunc", n_buckets=4)
+    if mode == "single":
+        run_streaming(spark, wal, factory("t0"), cfg, ddl_log=ddl_rows,
+                      checkpoint_dir=str(tmp_path / "ckpt"),
+                      max_files_per_trigger=2)
+    else:
+        run_streaming_multi(spark, wal, factory, cfg, ddl_rows,
+                            checkpoint_dir=str(tmp_path / "ckpt"),
+                            max_files_per_trigger=2)
+    for t, s in specs.items():
+        reg = SchemaRegistry()
+        reg.replay([r for r in ddl_rows if r["table_name"] in (None, t)])
+        want = expected_final_state(gen_binlog(spark, s), reg, s.max_commit_ts, KEY)
+        assert_df_equal(factory(t).read(), want, KEY)

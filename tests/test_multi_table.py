@@ -216,19 +216,19 @@ BOUND_DDL = DDLSpec(commit_ts=2_000, ddl_type="add_column", column="qscore")
 
 
 @pytest.mark.parametrize("ddl", [None, BOUND_DDL], ids=["no_ddl", "ddl_at_bound"])
-def test_homogeneous_window_is_one_write_for_all_tables(spark, tmp_path, monkeypatch, ddl):
-    """When tables share one schema chain (the fleet case), windows must
-    execute the single-write fast path: ONE partitionBy write + ONE
-    feed-journal append per window, the per-table append_delta write path
-    never runs, and per-table manifest I/O happens once per table at the
-    END-OF-RUN FOLD (append_delta_files_group), not once per window.
-    A global DDL at a window bound keeps the fast path for the barrier
-    window too (its DML decodes at the bound − 1, below the DDL): the union
-    write never runs, and the barrier adds one fold."""
-    calls = {"group": 0, "delta": 0, "union": 0}
+def test_homogeneous_window_is_one_write_for_all_tables(spark, tmp_path, monkeypatch,
+                                                        write_plans, ddl):
+    """When tables share one schema chain (the fleet case), a span executes
+    as ONE partitionBy write for every table + ONE feed-journal append per
+    window, the per-table append_delta write path never runs, and
+    per-table manifest I/O happens once per table at the END-OF-RUN FOLD
+    (append_delta_files_group), not once per window. A global DDL at a
+    window bound keeps the one write for the barrier window too (its DML
+    decodes at the bound − 1, below the DDL), and the barrier adds one
+    fold."""
+    calls = {"group": 0, "delta": 0}
     orig_g = LakeTable.append_delta_files_group
     orig_d = LakeTable.append_delta
-    orig_u = MultiTableChangefeed._sink_union_window
 
     def count_g(self, *a, **k):
         calls["group"] += 1
@@ -238,13 +238,8 @@ def test_homogeneous_window_is_one_write_for_all_tables(spark, tmp_path, monkeyp
         calls["delta"] += 1
         return orig_d(self, *a, **k)
 
-    def count_u(self, *a, **k):
-        calls["union"] += 1
-        return orig_u(self, *a, **k)
-
     monkeypatch.setattr(LakeTable, "append_delta_files_group", count_g)
     monkeypatch.setattr(LakeTable, "append_delta", count_d)
-    monkeypatch.setattr(MultiTableChangefeed, "_sink_union_window", count_u)
     ddls = (ddl,) if ddl else ()
     specs = {f"h{i}": BinlogSpec(n_events=2_000, n_convs=60, seed=300 + i, ddls=ddls)
              for i in range(4)}
@@ -269,7 +264,8 @@ def test_homogeneous_window_is_one_write_for_all_tables(spark, tmp_path, monkeyp
     stats = mt.run()
     assert stats["merges"] == 4 * stats["windows"]
     assert calls["delta"] == 0            # per-table write path never ran
-    assert calls["union"] == 0            # nor the heterogeneous union write
+    # one write per span: the whole run, or the barrier window + the rest
+    assert len(write_plans) == stats["write_jobs"] == 1 + len(ddls)
     # the whole run is one homogeneous streak -> exactly ONE fold per
     # barrier plus the end-of-run one: one group manifest commit per table
     # per fold, independent of window count
@@ -515,11 +511,11 @@ def test_partition_table_exchange(spark, tmp_path):
 
 def test_heterogeneous_window_write_batching(spark, tmp_path):
     """Per-table DDL churn (every table gets its OWN scoped add_column →
-    chain digests diverge feed-wide): the heterogeneous path must batch
-    each window's per-table mounts into type-compatibility-grouped UNION
-    write jobs — here every table adds a string column, so ONE group ⇒
-    ≤1 write job per window after the churn begins, not N — while final
-    states stay exactly right per table."""
+    chain digests diverge feed-wide): a span mounts once per chain and
+    unions the mounts into type-compatibility-grouped write jobs — here
+    every table adds a string column, so ONE group ⇒ one write per span,
+    not one per table or per window — while final states stay exactly
+    right per table."""
     n_tables = 6
     specs = {}
     ddl_rows = []
@@ -546,9 +542,11 @@ def test_heterogeneous_window_write_batching(spark, tmp_path):
     )
     stats = mt.run()
     assert stats["events"] == sum(s.n_events for s in specs.values())
-    # the scale property: write jobs stay O(windows), NOT O(windows*tables)
-    assert stats["write_jobs"] <= 2 * stats["windows"], stats
-    assert stats["write_jobs"] < stats["windows"] * n_tables / 2, stats
+    # the scale property: one write per span. The churn splits (1000,
+    # 2000] into 7 barrier windows; the DDL-free 3 windows after it are
+    # one span: 10 windows, 8 writes (not O(windows*tables))
+    assert stats["windows"] == 10, stats
+    assert stats["write_jobs"] <= 8, stats
     for t, spec in specs.items():
         want = expected_final_state(
             gen_binlog(spark, spec), mt.feeds[t].registry, spec.max_commit_ts, KEY)
@@ -576,7 +574,7 @@ def test_multi_target_ts_finish(spark, tmp_path):
         assert_df_equal(mt.read(t), want, KEY)
 
 
-def test_partition_add_truncate_reorganize_drop(spark, tmp_path):
+def test_partition_add_truncate_reorganize_drop(spark, tmp_path, monkeypatch):
     """The remaining upstream partition DDLs
     (/root/reference/cdc/entry/schema_storage_test.go:824-833):
     ADD PARTITION activates a new span at its barrier, TRUNCATE PARTITION
@@ -634,10 +632,24 @@ def test_partition_add_truncate_reorganize_drop(spark, tmp_path):
             partitions={"pt": ["p0", "p1"]},
         )
 
+    spans = []  # (span upper bound, write jobs)
+    orig = MultiTableChangefeed._apply_span_all
+
+    def record(self, lo, uppers):
+        out = orig(self, lo, uppers)
+        spans.append((uppers[-1], out["write_jobs"]))
+        return out
+
+    monkeypatch.setattr(MultiTableChangefeed, "_apply_span_all", record)
     mt = build()
     assert sorted(mt.feeds) == ["pt#p0", "pt#p1"]
     mt.run()
+    monkeypatch.undo()
     assert sorted(mt.feeds) == ["pt#p0a", "pt#p0b", "pt#p1"]
+    # the truncate diverges p1's schema chain from its siblings', yet every
+    # span after it still writes every span table in ONE job
+    after = [w for hi, w in spans if hi > X2]
+    assert after and set(after) == {1}, spans
     # the reorganize re-shards by the key predicate, so each family-0 key's
     # final LWW state lands in exactly one new span (per-span registries:
     # the truncate DDL is scoped to pt#p1 alone)

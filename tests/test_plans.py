@@ -122,56 +122,59 @@ def test_span_execution_single_exchange(spark, tmp_path):
     assert "GreaterThan(commit_ts" in pushed
 
 
-def test_heterogeneous_union_write_single_dedup_exchange(spark):
-    """Heterogeneous-window write batching (multi.py _sink_union_window):
-    the per-table mounts all read the SAME cached dedup output, so the
-    plan of the unioned write input must contain the dedup's single
-    exchange shape per branch and — critically — NO additional exchange
-    introduced by the union/mount/projection stack (the union write is
-    narrow above the shared dedup)."""
-    from ticdc_spark.functions.mount import mount, mounted_columns
-    from ticdc_spark.plans.schema_registry import SchemaRegistry
+def test_diverged_chain_span_one_write_per_type_group(spark, tmp_path, write_plans):
+    """A fleet span over diverged schema chains (multi.py ``_apply_mor``):
+    t1 and t2 each add a scoped ``xcol`` at the 2000 bound, t1 as string and
+    t2 as int, so after the barrier the span has three chains. The executor
+    mounts each chain off the SAME cached dedup and unions t0 with t1; t2
+    conflicts on xcol's type and writes apart. Each write's plan holds the
+    dedup's single exchange and nothing above the cache adds a shuffle.
+    Every table still equals its LWW oracle."""
+    import re
 
-    b = gen_binlog(spark, BinlogSpec(n_events=3_000))
-    wal = b.withColumn(
-        "table_name",
-        F.when(F.col("turn_idx") % 2 == 0, "t0").otherwise("t1"),
-    )
-    df = with_op_rank(wal).drop("pre_payload", "op")
-    deduped = lww_dedup(df, ["table_name", *KEY], stats=True).withColumn(
-        "op",
-        F.when(F.col("op_rank") == 1, "D").when(F.col("op_rank") == 2, "U").otherwise("I"),
-    ).persist()
-    try:
-        regs = {"t0": SchemaRegistry(), "t1": SchemaRegistry()}
-        union = None
-        for t, reg in regs.items():
-            sliced = deduped.filter(F.col("table_name") == t)
-            m = mount(sliced, reg, as_of_ts=2**62)
-            cols = mounted_columns(reg, 2**62)
-            src = m.select(
-                "table_name", *KEY, *cols,
-                F.col("commit_ts").alias("_commit_ts"),
-                F.col("start_ts").alias("_start_ts"),
-                F.col("op_rank").alias("_op_rank"),
-                (F.col("op") == "D").cast("int").alias("_deleted"),
-            )
-            union = src if union is None else union.unionByName(
-                src, allowMissingColumns=True)
-        plan = _plan(union)
-        # branches scan the shared InMemoryRelation; nothing above it may
-        # introduce a shuffle. The cached subplan's own build (the dedup)
-        # contains exactly ONE exchange, so every Exchange line in the
-        # rendered plan must be that same node (one distinct plan_id)
-        assert "InMemoryTableScan" in plan and "Union" in plan
-        import re
-        ex_ids = {
-            m.group(1)
-            for m in re.finditer(r"\bExchange .*?\[plan_id=(\d+)\]", plan)
-        }
-        assert len(ex_ids) == 1, plan[:2000]
-    finally:
-        deduped.unpersist()
+    from tests.conftest import assert_df_equal
+    from ticdc_spark.sources.binlog_gen import gen_resolved_log
+    from ticdc_spark.streaming.multi import MultiTableChangefeed
+    from ticdc_spark.streaming.pipeline import ChangefeedConfig, expected_final_state
+
+    spec = {t: BinlogSpec(n_events=2_000, n_convs=40, seed=60 + i)
+            for i, t in enumerate(["t0", "t1", "t2"])}
+    wal = None
+    for t, s in spec.items():
+        part = gen_binlog(spark, s).withColumn("table_name", F.lit(t))
+        wal = part if wal is None else wal.unionByName(part)
+    ddl = [{"commit_ts": 2_000, "ddl_type": "add_column", "query": "", "column": "xcol",
+            "old_column": None, "col_type": ty, "schema_version": 2_000,
+            "table_name": t} for t, ty in (("t1", "string"), ("t2", "int"))]
+    mt = MultiTableChangefeed(
+        spark, wal, gen_resolved_log(spark, spec["t0"]), ddl,
+        table_factory=lambda t: LakeTable(spark, f"{tmp_path}/{t}"),
+        config=ChangefeedConfig(changefeed_id="div", n_buckets=4), tables=list(spec))
+    stats = mt.run()
+    # the barrier window (one chain, one write), then the diverged span
+    assert len(write_plans) == stats["write_jobs"] == 3
+    for plan, n_mounts in zip(write_plans[1:], (2, 1)):
+        # the plan above the cached dedup: the mounts, their union and the
+        # projection — no shuffle there
+        above, cache_at = [], None
+        for line in plan.splitlines():
+            at = len(line) - len(line.lstrip(" :+-"))
+            if cache_at is not None and at > cache_at:
+                continue
+            cache_at = at if "InMemoryRelation" in line else None
+            above.append(line)
+        assert not any(re.search(r"\bExchange ", ln) for ln in above), plan
+        assert sum("InMemoryTableScan" in ln for ln in above) == n_mounts, plan
+        assert any("Union" in ln for ln in above) == (n_mounts > 1), plan
+        # below it, every mount reads the SAME cached dedup: one shuffle
+        # (rendered once per scan, and as AQE's final and initial plan)
+        shuffles = set(re.findall(r"\bExchange (.*?), \[plan_id", plan))
+        assert len(shuffles) == 1, plan
+    for t, s in spec.items():
+        want = expected_final_state(gen_binlog(spark, s), mt.feeds[t].registry,
+                                    s.max_commit_ts, KEY)
+        assert_df_equal(mt.read(t), want, KEY)
+    assert dict(mt.read("t2").dtypes)["xcol"] == "int"
 
 
 def test_pii_scrub_is_narrow_no_shuffle(spark):

@@ -2688,7 +2688,7 @@ def q_cdc_multi_table_stream_e2e(spark, sf_dir):
     ``run_streaming_multi`` (file-source readStream + foreachBatch,
     single-pass dedup keyed by table + feed-journal commit tail; the
     scoped DDL diverges tbl_1's chain, so this also exercises the
-    per-table heterogeneous fallback e2e). Final state must be
+    per-chain mount e2e). Final state must be
     IDENTICAL to the driver loop's — one oracle serves both modes.
     Reference anchor: sink manager multiplexing
     (/root/reference/cdc/processor/sinkmanager/manager.go:489-663)."""

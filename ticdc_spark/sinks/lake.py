@@ -244,15 +244,23 @@ class LakeTable:
         same table (or a feed restarted on a fresh checkpoint) must not have
         its epoch 0 judged against another feed's high-water mark."""
         self._record_batch(m, batch_id, resolved_ts, n_src, mode=mode, epoch=epoch)
+        self._commit_tail(m, [resolved_ts], rows)
+
+    def _commit_tail(self, m: dict, resolved: list, rows: list) -> None:
+        """The one commit tail of every batch entry point: bump the version,
+        append each batch's (source resolved-ts -> lake snapshot version)
+        syncpoint (K8, mysql_syncpoint_store.go:133-180) to an APPEND-ONLY
+        sidecar, write the lineage ``rows`` to another, then commit the
+        manifest. Sidecars, NOT the manifest — a million-batch history must
+        not ride along in every manifest rewrite. ``resolved`` holds one
+        resolved-ts (or None) per recorded batch."""
         m["version"] += 1
-        if resolved_ts is not None:
-            # (source resolved-ts -> lake snapshot version): the syncpoint
-            # store (K8, mysql_syncpoint_store.go:133-180). Append-only
-            # sidecar, NOT the manifest — a million-batch history must not
-            # ride along in every manifest rewrite.
-            os.makedirs(self.meta_dir, exist_ok=True)
+        os.makedirs(self.meta_dir, exist_ok=True)
+        syncs = [rts for rts in resolved if rts is not None]
+        if syncs:
             with open(os.path.join(self.meta_dir, "syncpoints.jsonl"), "a") as f:
-                f.write(json.dumps([resolved_ts, m["version"]]) + "\n")
+                for rts in syncs:
+                    f.write(json.dumps([rts, m["version"]]) + "\n")
         if rows:
             os.makedirs(self.lineage_dir, exist_ok=True)
             with open(os.path.join(self.lineage_dir, f"v{m['version']:08d}.jsonl"), "w") as f:
@@ -925,34 +933,6 @@ class LakeTable:
         return {"status": "committed", "batch_id": batch_id, "version": m["version"],
                 "lineage": rows}
 
-    def append_delta_files(
-        self,
-        files: list,
-        batch_id: str,
-        lineage_rows: list | None = None,
-        resolved_ts: int | None = None,
-        epoch: int | None = None,
-    ) -> dict:
-        """Commit ALREADY-WRITTEN delta files — the multi-table single-pass
-        driver writes every table's delta in ONE Spark job (partitionBy
-        table) and hands each table its file list; this is the metadata
-        half of :meth:`append_delta`. Caller owns placement: files must
-        live under this table's ``data_dir`` (snapshot expiry walks it).
-        Same exactly-once recognition as every other sink entry point."""
-        m = self.manifest()
-        if self._recognized(m, batch_id, resolved_ts, epoch):
-            return {"status": "skipped", "batch_id": batch_id}
-        if "_commit_ts" not in [x[0] for x in m["schema"]]:
-            raise ValueError("append_delta_files needs a table created with_order_cols=True")
-        m.setdefault("deltas", []).append(
-            {"files": sorted(files), "written_version": m["schema_version"]}
-        )
-        rows = lineage_rows() if callable(lineage_rows) else (lineage_rows or [])
-        n_src = sum(r.get("event_count", 0) for r in rows)
-        self._commit_batch(m, batch_id, resolved_ts, n_src, rows, mode="mor", epoch=epoch)
-        return {"status": "committed", "batch_id": batch_id, "version": m["version"],
-                "lineage": rows}
-
     def bootstrap_base_group(self, batches: list, bucket_files: dict) -> dict:
         """Initial-load (bootstrap) commit: the first span's cross-window
         LWW fold lands ONCE as the compacted BASE. On an empty table the
@@ -991,18 +971,7 @@ class LakeTable:
         for bs, files in bucket_files.items():
             m["buckets"][str(bs)] = {"files": sorted(files),
                                      "written_version": m["schema_version"]}
-        m["version"] += 1
-        os.makedirs(self.meta_dir, exist_ok=True)
-        with open(os.path.join(self.meta_dir, "syncpoints.jsonl"), "a") as f:
-            for b in batches:
-                if b.get("resolved_ts") is not None:
-                    f.write(json.dumps([b["resolved_ts"], m["version"]]) + "\n")
-        if all_rows:
-            os.makedirs(self.lineage_dir, exist_ok=True)
-            with open(os.path.join(self.lineage_dir, f"v{m['version']:08d}.jsonl"), "w") as f:
-                for r in all_rows:
-                    f.write(json.dumps(r) + "\n")
-        self._commit(m)
+        self._commit_tail(m, [b.get("resolved_ts") for b in batches], all_rows)
         return {"status": "committed", "batches": len(batches), "rows": n_total,
                 "version": m["version"], "lineage": all_rows}
 
@@ -1044,21 +1013,10 @@ class LakeTable:
             self._record_batch(m, b["batch_id"], rts, n_src, mode="mor", epoch=ep)
             all_rows.extend(rows)
             n_total += n_src
-            applied.append((b["batch_id"], rts))
+            applied.append(rts)
         if not applied:
             return {"status": "skipped", "batches": 0, "lineage": []}
-        m["version"] += 1
-        os.makedirs(self.meta_dir, exist_ok=True)
-        with open(os.path.join(self.meta_dir, "syncpoints.jsonl"), "a") as f:
-            for _, rts in applied:
-                if rts is not None:
-                    f.write(json.dumps([rts, m["version"]]) + "\n")
-        if all_rows:
-            os.makedirs(self.lineage_dir, exist_ok=True)
-            with open(os.path.join(self.lineage_dir, f"v{m['version']:08d}.jsonl"), "w") as f:
-                for r in all_rows:
-                    f.write(json.dumps(r) + "\n")
-        self._commit(m)
+        self._commit_tail(m, applied, all_rows)
         return {"status": "committed", "batches": len(applied), "rows": n_total,
                 "version": m["version"], "lineage": all_rows}
 

@@ -15,13 +15,14 @@ streaming/span.py. The window walker (``span.walk``, shared with the
 single-table feed) schedules the windows, and every window — a DDL-free
 span, a lone window or a barrier sub-window — runs as a span: the shared WAL
 is scanned ONCE and LWW-deduped ONCE with ``table_name`` prepended to the
-handle key — one shuffle for all N tables. Homogeneous fleets (one schema
-chain below the span's upper bound, so barrier windows too) mount once and
-write every table in one job; the initial load onto empty tables writes
-every table's compacted base in one job; each window commits with one
-feed-journal append. Diverged chains take the per-window union write (one
-job per type-compatible group). Work per window is O(window events), not N
-full WAL scans. Store the WAL partitioned by ``table_name``
+handle key — one shuffle for all N tables. A MOR span mounts once per
+schema chain below its upper bound (one mount for a fleet on one chain,
+barrier windows too) and writes every table in one job per type-compatible
+write group (one group unless chains disagree on a column's type); each
+(window, write group) commits with one feed-journal append. The initial
+load onto empty tables writes every table's compacted base in one job. CoW
+rewrites each table's base per window. Work per window is O(window events),
+not N full WAL scans. Store the WAL partitioned by ``table_name``
 (:func:`write_wal_partitioned`) so any residual per-table scan
 partition-prunes.
 
@@ -69,9 +70,6 @@ from ticdc_spark.streaming.span import (
     WIN,
     SpanExecutor,
     bootstrap_ready,
-    lineage_rows,
-    mount_window,
-    order_meta,
     part_dirs,
     plan_windows,
     quarantined,
@@ -312,14 +310,13 @@ class MultiTableChangefeed:
     def _load_state(self, t: str) -> None:
         """ONE manifest read per (feed, load point) — refreshed only at
         resume, create barriers, and compactions. Everything the window
-        loop consults per window (checkpoint, truncate incarnation, delta
-        layout, delta depth) lives here so per-window driver cost is
+        loop consults per window (checkpoint, delta layout, bucket count,
+        delta depth) lives here so per-window driver cost is
         independent of both table count and manifest size."""
         f = self.feeds[t]
         m = f.target.manifest()
         self._state[t] = {
             "ckpt": max(m["checkpoint"]["resolved_ts"], f.config.start_ts),
-            "truncate": bool(m.get("truncate_ts", 0)),
             "layout": m.get("delta_layout", "flat"),
             "n_buckets": m["n_buckets"],
             "depth": len(m.get("deltas", [])),
@@ -508,9 +505,9 @@ class MultiTableChangefeed:
                 d["col_type"] or "string", schema_version=ts,
             )
             if d["ddl_type"] == "truncate_table" and t in self._state:
-                # new table incarnation: fast path must re-check stale-DML
-                # drops per table; truncate also cleared every delta fileset
-                self._state[t]["truncate"] = True
+                # truncate cleared every delta fileset. No stale-DML filter
+                # is needed downstream: windows split at the truncate, so
+                # every later window holds only DML above it
                 self._state[t]["depth"] = 0
 
     # -------------- the single-pass driver loop --------------
@@ -562,7 +559,7 @@ class MultiTableChangefeed:
         cfg = self.config
         budget = max_merges_per_table
         stats = {"tables": len(self.feeds), "merges": 0, "events": 0,
-                 "windows": 0, "wal_scans_per_window": 1}
+                 "windows": 0, "write_jobs": 0, "wal_scans_per_window": 1}
         merged_windows = 0
 
         def cap() -> int:
@@ -577,10 +574,9 @@ class MultiTableChangefeed:
         def apply(lo: int, ws: list) -> bool:
             nonlocal merged_windows
             s = self._apply_span_all(lo, ws)
-            stats["merges"] += s["merges"]
-            stats["events"] += s["events"]
+            for k in ("merges", "events", "write_jobs"):
+                stats[k] += s[k]
             stats["windows"] += len(ws)
-            stats["write_jobs"] = stats.get("write_jobs", 0) + s.get("write_jobs", 0)
             merged_windows += s["windows_merged"]
             return bool(budget) and merged_windows >= budget
 
@@ -619,15 +615,16 @@ class MultiTableChangefeed:
 
     def _apply_span_all(self, lo: int, uppers: list) -> dict:
         """A DDL-free SPAN of windows, all tables: ONE WAL scan + ONE dedup
-        exchange + (homogeneous fast path) ONE write job for the whole
-        span x table cross-product through the span executor (span.py) —
-        each (window, table) still commits its own batch id through the
-        journal. A single-window call is the degenerate span."""
+        exchange through the span executor (span.py), then (MOR) one write
+        job per type-compatible write group — one in practice — for the
+        whole span x table cross-product, each (window, table) still
+        committing its own batch id through the journal. A single-window
+        call is the degenerate span."""
         hi = uppers[-1]
         live = {
             t: f for t, f in self.feeds.items() if hi > self._state[t]["ckpt"]
         }
-        out = {"merges": 0, "events": 0, "windows_merged": 0}
+        out = {"merges": 0, "events": 0, "windows_merged": 0, "write_jobs": 0}
         if not live:
             return out
         wal = self.binlog.filter(
@@ -639,7 +636,8 @@ class MultiTableChangefeed:
         wal = wal.filter(F.col(self.table_col).isin(*names))
         probe = next(iter(live.values()))
         df, qobs = probe._prepare_window(wal, f"{self.config.changefeed_id}:{lo}:{hi}")
-        span = SpanExecutor(self.spark, df, lo, uppers, probe.registry,
+        span = SpanExecutor(self.spark, df, lo, uppers,
+                            {name: live[t].registry for name, t in names.items()},
                             self.config, self.table_col)
         nb = self._bootstrap_gate(live, names, uppers)
         if nb is not None:
@@ -654,59 +652,32 @@ class MultiTableChangefeed:
                 out["merges"] += len(uppers)
                 self._state[names[name]]["ckpt"] = hi
             out["windows_merged"] += len(uppers)
-            out["write_jobs"] = out.get("write_jobs", 0) + 1
+            out["write_jobs"] += 1
             out["quarantined"] = quarantined(qobs)
             return out
         # cluster the cached dedup output by table WITHIN partitions (no
-        # extra exchange): cache batches become single-table runs, so each
+        # extra exchange): cache batches become single-table runs, so a
         # table's slice filter prunes other tables' batches via the
         # in-memory scan's per-batch column stats instead of rescanning the
         # whole cache N times
         deduped = span.dedup().sortWithinPartitions(self.table_col).persist()
         try:
-            if not self._apply_homogeneous(live, names, span, deduped, out):
-                # heterogeneous (diverged schema chains, truncate, CoW
-                # mode): per window, MOR tables without a truncate
-                # incarnation still share ONE union write job per
-                # type-compatibility group (mount per table, union by name,
-                # partitionBy(table), one journal append) — per-table DDL
-                # churn no longer degrades to N write jobs per window.
-                # Serial per-table sink remains only for CoW (base rewrite
-                # is per-table by nature) and truncate tables (their
-                # stale-DML drop lives inside append_delta). Manifests must
-                # be CURRENT before any direct per-table commit — it would
-                # advance the checkpoint past an unfolded journal window,
-                # whose later fold would be wrongly recognized as replay.
-                self._fold_journal()
+            if self.config.sink_mode == "mor":
+                self._apply_mor(live, names, span, deduped, out)
+            else:
+                # CoW rewrites each table's base: per window, per table
                 for i, prev, u in span.windows():
                     wdf = deduped.filter(F.col(WIN) == i).drop(WIN)
-                    batched, serial = [], []
-                    for name, t in sorted(names.items()):
-                        if (live[t].config.sink_mode == "mor"
-                                and not self._state[t]["truncate"]):
-                            if u > self._state[t]["ckpt"]:
-                                batched.append((name, t))
-                        else:
-                            serial.append((name, t))
                     w_merged = 0
-                    if batched:
-                        w_merged += self._sink_union_window(
-                            live, batched, wdf, prev, u, out)
-                    for name, t in serial:
-                        feed = live[t]
-                        sliced = wdf.filter(
-                            F.col(self.table_col) == name
-                        ).drop(self.table_col)
-                        res = feed._sink_deduped(sliced, prev, u)
+                    for name, t in sorted(names.items()):
+                        res = live[t]._sink_deduped(
+                            wdf.filter(F.col(self.table_col) == name)
+                            .drop(self.table_col), prev, u)
                         out["events"] += res.get("events", 0)
-                        committed = res["status"] == "committed"
-                        out["merges"] += committed
-                        w_merged += committed
-                        out["write_jobs"] = out.get("write_jobs", 0) + 1
-                        st = self._state[t]
-                        st["ckpt"] = max(st["ckpt"], u)
-                        if committed and feed.config.sink_mode == "mor":
-                            st["depth"] += 1
+                        w_merged += res["status"] == "committed"
+                        out["write_jobs"] += 1
+                        self._state[t]["ckpt"] = max(self._state[t]["ckpt"], u)
+                    out["merges"] += w_merged
                     out["windows_merged"] += w_merged > 0
         finally:
             deduped.unpersist()
@@ -722,20 +693,19 @@ class MultiTableChangefeed:
         every window as deltas and write the data again at the first fold
         + compaction. A span of 2+ windows never holds a DDL (the walker
         splits barrier windows off as spans of one). Excluded: CoW,
-        diverged schema chains, truncate incarnations, shared fleet
-        filesets (their per-bucket mixed files have no per-table split
-        yet) and mixed bucket counts — those fleets take the normal path,
-        correct either way. Returns the common bucket count, or None."""
+        diverged schema chains, truncate incarnations (``bootstrap_ready``),
+        shared fleet filesets (their per-bucket mixed files have no
+        per-table split yet) and mixed bucket counts — those fleets take
+        the normal path, correct either way. Returns the common bucket
+        count, or None."""
         cfg = self.config
         hi = uppers[-1]
         if (len(uppers) < 2 or not cfg.bootstrap_fast_path
                 or cfg.sink_mode != "mor" or len(names) >= cfg.shared_deltas_after):
             return None
         ts = list(names.values())
-        if any(self._state[t]["truncate"]
-               # resumes mid-span: the per-window path handles it
-               or self._state[t]["ckpt"] >= uppers[0] for t in ts):
-            return None
+        if any(self._state[t]["ckpt"] >= uppers[0] for t in ts):
+            return None  # resumes mid-span: the per-window path handles it
         if len({live[t].registry.chain_digest(hi - 1) for t in ts}) > 1:
             return None  # diverged chains: one mount can't decode all
         nbs = {self._state[t]["n_buckets"] for t in ts}
@@ -747,190 +717,74 @@ class MultiTableChangefeed:
             return None
         return nbs.pop()
 
-    def _apply_homogeneous(self, live: dict, names: dict, span: SpanExecutor,
-                           deduped, out: dict) -> bool:
-        """HOMOGENEOUS-window fast path: when every live table shares the
-        SAME schema chain below ``hi`` (the 100k-table fleet case — one
-        transcript schema, global DDLs only), the span executor mounts
-        ONCE at the decode snapshot ``hi − 1`` and writes every table's
-        delta files in ONE Spark job (partitionBy table — plus ``_bucket``
-        when tables use the bucketed delta layout, so the 7.9x point-read
-        dial survives multi-table mode); each window then commits with ONE
-        feed-journal append.
-        Driver cost per window: 1 jsonl append — independent of table
-        count; per-table manifest I/O is amortized into group folds at
-        barriers/compactions/run end. A barrier window (a DDL at ``hi``)
-        qualifies too: its DML decodes below the DDL. Falls back (returns
-        False) on diverged chain digests, truncate incarnations, mixed
-        bucket counts, or CoW mode."""
+    def _apply_mor(self, live: dict, names: dict, span: SpanExecutor,
+                   deduped, out: dict) -> None:
+        """The MOR write of every non-bootstrap span: the span executor
+        mounts once per schema chain at the decode snapshot ``hi − 1`` and
+        writes every table's delta files in ONE Spark job per write group
+        (partitionBy table — plus ``_bucket`` when the group's tables use
+        the bucketed delta layout, so the 7.9x point-read dial survives
+        multi-table mode); each (window, write group) then commits with ONE
+        feed-journal append. A fleet on one schema chain (the 100k-table
+        case — one transcript schema, global DDLs only) is one group;
+        per-table DDL churn and truncates only add mounts, not writes.
+        Driver cost per window: one jsonl append per group — independent
+        of table count; per-table manifest I/O is amortized into group
+        folds at barriers/compactions/run end."""
         cfg = self.config
-        hi = span.uppers[-1]
-        if cfg.sink_mode != "mor":
-            return False
-        applying: dict = {}
-        digests = set()
-        for name, t in sorted(names.items()):
-            f = live[t]
-            st = self._state[t]
-            if st["truncate"]:
-                return False
-            # equal chain digests below hi ⇒ identical writer maps at the
-            # decode snapshot (hi − 1) ⇒ one mount decodes every table's
-            # events correctly, a DDL at hi included (O(1) per table per
-            # window off the registry's cached cumulative hashes)
-            digests.add(f.registry.chain_digest(hi - 1))
-            if hi <= st["ckpt"]:
-                continue  # this table already has the window
-            applying[name] = t
-        if len(digests) > 1:
-            return False
-        if not applying:
-            return True
-        nb_all = {self._state[t]["n_buckets"] for t in applying.values()}
-        nb_set = {
-            self._state[t]["n_buckets"] for t in applying.values()
-            if self._state[t]["layout"] == "bucketed"
-        }
-        if len(nb_set) > 1:
-            return False  # mixed bucket counts can't share one staged layout
-        # fleet mode: above the threshold, per-table partition dirs would
-        # write O(tasks x tables) tiny files per window — switch to ONE
-        # SHARED per-bucket fileset (file count O(tasks x buckets),
-        # independent of table count; per-table split deferred to the
-        # compactor). Requires one common bucket count.
-        shared = (
-            len(applying) >= cfg.shared_deltas_after and len(nb_all) == 1
-        )
-        bucketed = bool(nb_set) or shared
-        nb = next(iter(nb_all if shared else nb_set)) if bucketed else None
         # per-table checkpoint snapshot BEFORE updates: a table resuming
         # mid-span applies only windows above its own mark (the others'
         # batches are recognized as replays at fold anyway)
-        ckpt0 = {t: self._state[t]["ckpt"] for t in applying.values()}
-        sliced = deduped.filter(F.col(self.table_col).isin(*applying))
-        staging = self.journal.span_staging()
-        # THE one write job for all tables in the whole span
-        span.stage(sliced, staging, nb, shared)
-        out["write_jobs"] = out.get("write_jobs", 0) + 1
-        stats = span.lineage(sliced)
+        ckpt0 = {t: self._state[t]["ckpt"] for t in names.values()}
+        staged = []
+        for group, src in span.write_groups(deduped, names):
+            st = [self._state[names[n]] for n in group]
+            nbs = {s["n_buckets"] for s in st}
+            # fleet mode: above the threshold, per-table partition dirs
+            # would write O(tasks x tables) tiny files per window — write
+            # ONE SHARED per-bucket fileset instead (file count
+            # O(tasks x buckets), per-table split deferred to the
+            # compactor). Bucketed files need one common bucket count.
+            shared = len(group) >= cfg.shared_deltas_after and len(nbs) == 1
+            bucketed = len(nbs) == 1 and (
+                shared or any(s["layout"] == "bucketed" for s in st))
+            staging = self.journal.span_staging()
+            span.stage(src, staging, next(iter(nbs)) if bucketed else None, shared)
+            out["write_jobs"] += 1
+            staged.append((group, staging, bucketed, shared))
+        stats = span.lineage(deduped)
         commits = {name: span.commits(live[t].config.changefeed_id, name, stats,
                                      None, False)
-                   for name, t in applying.items()}
+                   for name, t in names.items()}
         for i, prev, u in span.windows():
-            # the window's partition dir becomes its own journal staging
-            # (cheap rename; a crash before the append leaves an orphan
-            # dir above the newest journal seq — reaped)
-            seq = self.journal.adopt(os.path.join(staging, f"{WIN}={i}"))
-            entry_tables: dict = {}
-            for name in sorted(applying):
-                t = applying[name]
-                if u <= ckpt0[t]:
-                    continue  # this table already has this window
-                b = commits[name][i]
-                entry_tables[t] = {"src": name, "path": live[t].target.path,
-                                   "bid": b["batch_id"], "lineage": b["lineage_rows"]}
-                st = self._state[t]
-                st["ckpt"] = u
-                st["depth"] += 1
-                out["events"] += sum(r["event_count"] for r in b["lineage_rows"])
-                out["merges"] += 1
-            out["windows_merged"] += bool(entry_tables)
-            if entry_tables:
-                # the window's commit point: ONE durable append for all N
-                self.journal.append_window(seq, prev, u, bucketed,
-                                           entry_tables, self.table_col,
-                                           shared=shared)
-        shutil.rmtree(staging, ignore_errors=True)
-        return True
-
-    def _sink_union_window(self, live: dict, items: list, wdf, lo: int,
-                           hi: int, out: dict) -> int:
-        """Heterogeneous-window WRITE BATCHING: each table mounts against
-        its OWN registry snapshot at ``hi − 1`` (diverged chains welcome),
-        the mounted frames union
-        by name into ONE ``partitionBy(table)`` write + ONE journal append.
-        The staged files carry the UNION of the group's payload columns;
-        that is safe because the per-table read projects files through the
-        writer-version schema by explicit column name (``_reconcile``) —
-        a column the table never had is simply not read.
-
-        Tables whose payload schemas conflict in TYPE for a shared column
-        name (e.g. a modify_column divergence) cannot share one parquet
-        schema, so the group splits by type-compatibility — in practice
-        one or two groups, so a 32-table fleet with per-table DDL churn
-        runs ≤2 write jobs per window instead of 32 (measured:
-        scripts/bench_multi_table.py churn scenario). Returns the number
-        of tables committed."""
-        cfg = self.config
-        frames: dict = {}
-        for name, t in items:
-            sliced = wdf.filter(F.col(self.table_col) == name)
-            mounted, pcols = mount_window(sliced, live[t].registry, hi,
-                                          cfg.defaults)
-            src = mounted.select(self.table_col, *cfg.key, *pcols, *order_meta())
-            frames[name] = (t, src, dict(src.dtypes))
-        # greedy type-compatibility grouping: frames join a group iff no
-        # shared column name carries a different type there
-        groups: list = []
-        for name in sorted(frames):
-            _, _, types = frames[name]
-            for g in groups:
-                if all(g["types"].get(c, ty) == ty for c, ty in types.items()):
-                    g["names"].append(name)
-                    g["types"].update(types)
-                    break
-            else:
-                groups.append({"names": [name], "types": dict(types)})
-        # per-(table, source partition) lineage for the whole window in ONE
-        # metadata-cardinality job off the cached dedup
-        stats = (
-            wdf.filter(F.col(self.table_col).isin(*[n for n, _ in items]))
-            .groupBy(self.table_col, "partition_id")
-            .agg(F.sum("_n_events").alias("n"),
-                 F.max("_max_commit_ts").alias("mx"))
-            .collect()
-        )
-        by_table: dict = {}
-        for r in stats:
-            by_table.setdefault(r[self.table_col], []).append(
-                (r["partition_id"], r["n"], r["mx"]))
-        committed = 0
-        for g in groups:
-            gnames = g["names"]
-            # honor the bucketed dial only when the whole group shares it
-            layouts = {self._state[frames[n][0]]["layout"] for n in gnames}
-            nbs = {self._state[frames[n][0]]["n_buckets"] for n in gnames}
-            bucketed = layouts == {"bucketed"} and len(nbs) == 1
-            union = None
-            for n in gnames:
-                src = frames[n][1]
-                union = src if union is None else union.unionByName(
-                    src, allowMissingColumns=True)
-            pcols = [self.table_col]
-            if bucketed:
-                union = union.withColumn(
-                    "_bucket", LakeTable._bucket_expr(nbs.pop(), cfg.key[0]))
-                pcols.append("_bucket")
-            seq, staging = self.journal.new_staging()
-            union.write.partitionBy(*pcols).parquet(staging)
-            out["write_jobs"] = out.get("write_jobs", 0) + 1
-            entry_tables: dict = {}
-            for n in gnames:
-                t = frames[n][0]
-                feed = live[t]
-                batch_id = f"{feed.config.changefeed_id}:{lo}:{hi}"
-                rows = lineage_rows(batch_id, by_table.get(n, []), hi)
-                entry_tables[t] = {"src": n, "path": feed.target.path,
-                                   "bid": batch_id, "lineage": rows}
-                st = self._state[t]
-                st["ckpt"] = max(st["ckpt"], hi)
-                st["depth"] += 1
-                out["events"] += sum(r["event_count"] for r in rows)
-                out["merges"] += 1
-                committed += 1
-            self.journal.append_window(seq, lo, hi, bucketed, entry_tables,
-                                       self.table_col)
-        return committed
+            merged = False
+            for group, staging, bucketed, shared in staged:
+                # the window's partition dir becomes its own journal staging
+                # (cheap rename; a crash before the append leaves an orphan
+                # dir above the newest journal seq — reaped)
+                seq = self.journal.adopt(os.path.join(staging, f"{WIN}={i}"))
+                entry_tables: dict = {}
+                for name in group:
+                    t = names[name]
+                    if u <= ckpt0[t]:
+                        continue  # this table already has this window
+                    b = commits[name][i]
+                    entry_tables[t] = {"src": name, "path": live[t].target.path,
+                                       "bid": b["batch_id"],
+                                       "lineage": b["lineage_rows"]}
+                    self._state[t]["ckpt"] = u
+                    self._state[t]["depth"] += 1
+                    out["events"] += sum(r["event_count"] for r in b["lineage_rows"])
+                    out["merges"] += 1
+                if entry_tables:
+                    # the commit point: ONE durable append for the group
+                    self.journal.append_window(seq, prev, u, bucketed,
+                                               entry_tables, self.table_col,
+                                               shared=shared)
+                    merged = True
+            out["windows_merged"] += merged
+        for _, staging, _, _ in staged:
+            shutil.rmtree(staging, ignore_errors=True)
 
     def _fold_journal(self) -> None:
         """Fold pending journal windows into per-table manifests — see

@@ -327,7 +327,7 @@ class Changefeed:
         df = self.binlog.filter((F.col("commit_ts") > lo) & (F.col("commit_ts") <= hi))
         df, qobs = self._prepare_window(df, f"{cid}:{lo}:{hi}:span")
         span = SpanExecutor(self.spark, df.withColumn(_TABLE, F.lit(_SELF)), lo,
-                            uppers, self.registry, self.config, _TABLE)
+                            uppers, {_SELF: self.registry}, self.config, _TABLE)
         m = self.target.manifest()
         staging = os.path.join(self.target.data_dir, uuid.uuid4().hex)
         if bootstrap_ready(self.target, self.config):
@@ -341,7 +341,8 @@ class Changefeed:
             bucketed = m.get("delta_layout", "flat") == "bucketed"
             deduped = span.dedup().persist()
             try:
-                span.stage(deduped, staging, m["n_buckets"] if bucketed else None, False)
+                (_, src), = span.write_groups(deduped, [_SELF])
+                span.stage(src, staging, m["n_buckets"] if bucketed else None, False)
                 res = self.target.append_delta_files_group(span.commits(
                     cid, _SELF, span.lineage(deduped), staging, bucketed))
             finally:

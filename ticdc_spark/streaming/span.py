@@ -10,10 +10,10 @@ executor never knows which front end it serves:
 
 - ``pipeline.Changefeed`` commits the staged windows with one group
   manifest rewrite (``LakeTable.append_delta_files_group``);
-- ``multi.MultiTableChangefeed`` commits each window with one feed-journal
-  append;
+- ``multi.MultiTableChangefeed`` commits each (window, write group) with
+  one feed-journal append;
 - ``structured.run_streaming_multi`` commits each micro-batch (a span of one
-  window) with one journal append carrying its epoch.
+  window) with one journal append per write group, carrying its epoch.
 
 Two halves:
 
@@ -23,10 +23,17 @@ Two halves:
   tombstones, mount the survivors, write every table's compacted BASE in one
   ``partitionBy(table, _bucket)`` job, take lineage from one column-pruned
   re-scan and commit with ``bootstrap_base_group`` per table.
-- :meth:`SpanExecutor.stage` + :meth:`SpanExecutor.lineage` — the delta
-  span: dedup per (window, table, key), mount once, one ``partitionBy``
-  write (flat, bucketed or a shared per-bucket fileset) and one
-  metadata-cardinality lineage job. The caller commits.
+- :meth:`SpanExecutor.write_groups` + :meth:`SpanExecutor.stage` +
+  :meth:`SpanExecutor.lineage` — the delta span: dedup per (window, table,
+  key), mount once per schema chain, one ``partitionBy`` write (flat,
+  bucketed or a shared per-bucket fileset) per type-compatible write group
+  and one metadata-cardinality lineage job. The caller commits.
+
+Each table brings its own schema registry. Tables whose chains agree below
+the span's upper bound mount together; a fleet on one chain (the common
+case, and every single-table feed) mounts once with no filter, union or
+extra exchange. Diverged chains mount per chain and union by name, and
+only a TYPE conflict on a shared column name splits the write.
 
 The module-level helpers are the pieces every front end shares: window
 planning, span extent, the window walker (:func:`walk`, the driver loop of
@@ -244,15 +251,15 @@ def part_dirs(parent: str, col: str) -> dict:
 
 class SpanExecutor:
     """One DDL-free span: windows ``(lo, uppers[0]], (uppers[0], uppers[1]],
-    ...`` over the tables named in ``df``'s ``table_col``, mounted with one
-    ``registry`` (callers guarantee the tables share its schema chain)."""
+    ...`` over the tables named in ``df``'s ``table_col``; ``registries``
+    maps each table value to the schema registry its rows decode with."""
 
     def __init__(self, spark: SparkSession, df: DataFrame, lo: int,
-                 uppers: list, registry, config, table_col: str):
+                 uppers: list, registries: dict, config, table_col: str):
         self.spark = spark
         self.df = tag_windows(df, uppers)
         self.lo, self.uppers = lo, list(uppers)
-        self.registry = registry
+        self.registries = registries
         self.key = list(config.key)
         self.defaults = config.defaults
         self.tc = table_col
@@ -264,8 +271,22 @@ class SpanExecutor:
             yield i, prev, u
             prev = u
 
-    def _mount(self, df: DataFrame) -> tuple:
-        return mount_window(df, self.registry, self.uppers[-1], self.defaults)
+    def _mounts(self, df: DataFrame, tables) -> list:
+        """[(table values, mounted df, payload columns)], one per schema
+        chain of ``tables`` below the span's upper bound: the rows decode
+        against the snapshot at ``hi - 1`` of their own chain. ``df`` holds
+        rows of ``tables`` only, so one chain mounts it whole."""
+        hi = self.uppers[-1]
+        chains: dict = {}
+        for name in sorted(tables):
+            reg = self.registries[name]
+            chains.setdefault(reg.chain_digest(hi - 1), (reg, []))[1].append(name)
+        if len(chains) == 1:
+            (reg, names), = chains.values()
+            return [(names, *mount_window(df, reg, hi, self.defaults))]
+        return [(names, *mount_window(df.filter(F.col(self.tc).isin(*names)),
+                                      reg, hi, self.defaults))
+                for reg, names in chains.values()]
 
     def _stats(self, df: DataFrame, n: Column, mx: Column) -> dict:
         by: dict = {}
@@ -297,7 +318,8 @@ class SpanExecutor:
         (LakeTable, feed id)}; one write job + one lineage job, then one
         ``bootstrap_base_group`` per table. Returns {table value: commit
         result}. The rows carry LWW order metadata only if the targets'
-        schema has it (CoW tables do not).
+        schema has it (CoW tables do not). The tables share one schema
+        chain (callers gate on it): the base is one mount.
 
         Placement: with at least ``defaultParallelism`` (table, bucket)
         slots, ONE exchange of the raw span places the slots onto
@@ -330,7 +352,8 @@ class SpanExecutor:
             final = dedup(raw, [tc, "_bucket", *key])
         # final-state tombstones leave the base entirely — exactly what
         # compact(drop_tombstones=True) produces in resolved-ts mode
-        mounted, payload = self._mount(final.filter(F.col("op_rank") != 1))
+        (_, mounted, payload), = self._mounts(
+            final.filter(F.col("op_rank") != 1), feeds)
         src = mounted.select(tc, "_bucket", *key, *payload,
                              *(order_meta() if meta else []))
         if n_slots < dp:
@@ -362,15 +385,33 @@ class SpanExecutor:
         :meth:`stage` and :meth:`lineage` both read it."""
         return dedup(self.df, [WIN, self.tc, *self.key])
 
-    def stage(self, deduped: DataFrame, staging: str,
+    def write_groups(self, deduped: DataFrame, tables) -> list:
+        """[(table values, rows to stage)] for the span's ``tables``: one
+        group per type-compatible column set. Mounted chains union by name
+        (a column a table never had is NULL there, and the per-table read
+        projects by name, so it is never read); only chains that disagree
+        on the TYPE of a shared column name write apart."""
+        groups: list = []
+        for names, mounted, payload in self._mounts(deduped, tables):
+            src = mounted.select(WIN, self.tc, *self.key, *payload, *order_meta())
+            types = dict(src.dtypes)
+            for g in groups:
+                if all(g[2].get(c, ty) == ty for c, ty in types.items()):
+                    g[0].extend(names)
+                    g[1] = g[1].unionByName(src, allowMissingColumns=True)
+                    g[2].update(types)
+                    break
+            else:
+                groups.append([list(names), src, types])
+        return [(names, src) for names, src, _ in groups]
+
+    def stage(self, src: DataFrame, staging: str,
               n_buckets: int | None, shared: bool) -> None:
-        """Mount once and write the whole span in ONE job under
-        ``staging``: ``_win=i/<table>=v/`` (+ ``_bucket=b/`` when
+        """Write one :meth:`write_groups` group for the whole span in ONE
+        job under ``staging``: ``_win=i/<table>=v/`` (+ ``_bucket=b/`` when
         ``n_buckets``), or with ``shared`` one per-bucket fileset per window
-        holding every table, clustered by table within each file (file count
-        independent of table count)."""
-        mounted, payload = self._mount(deduped)
-        src = mounted.select(WIN, self.tc, *self.key, *payload, *order_meta())
+        holding every table of the group, clustered by table within each
+        file (file count independent of table count)."""
         pcols = [WIN, self.tc]
         if n_buckets:
             src = src.withColumn(

@@ -16,8 +16,13 @@ Two execution modes exist for the same engine:
 
 The multi-table twin (:func:`run_streaming_multi`) runs each micro-batch
 through the span executor (streaming/span.py) as a span of one window —
-the same dedup, mount and staged write the driver loops use — and commits
-it with one feed-journal append carrying the epoch.
+the same dedup, per-chain mount and staged write the driver loops use —
+and commits it with one feed-journal append per write group (one unless
+tables' chains disagree on a column's type) carrying the epoch.
+
+Both create their targets at the base schema version and replay every DDL
+row onto them (as ``Changefeed.ensure_target`` + ``_reconcile_ddl`` do),
+so a ``truncate_table`` takes effect and its stale DML is dropped.
 
 Exactly-once: Spark's streaming checkpoint provides offset tracking;
 re-delivered epochs are no-ops via the batch_id registry committed
@@ -87,22 +92,7 @@ def run_streaming(
     ddl_rows = ddl_rows_of(ddl_log)
     registry.replay(ddl_rows)
     _epoch_reset_guard(target, config.changefeed_id, checkpoint_dir)
-    if not target.exists():
-        target.create(
-            key=list(config.key),
-            fields=table_fields(registry, _FAR_FUTURE, config.key),
-            n_buckets=config.n_buckets,
-            schema_version=registry.resolved_ts,
-            with_order_cols=True,
-            delta_layout=config.delta_layout,
-        )
-    # evolve an existing target to the registry's newest schema (idempotent
-    # by schema_version — the streaming twin of _reconcile_ddl)
-    for d in ddl_rows:
-        target.alter(
-            d["ddl_type"], d["column"], d["old_column"],
-            (d["col_type"] or "string"), schema_version=int(d["commit_ts"]),
-        )
+    _ensure_target(target, registry, config, ddl_rows)
     payload_cols = mounted_columns(registry, _FAR_FUTURE)
     # source partition ids, ONCE per run (metadata-cardinality): enables the
     # observe-based per-partition lineage with no per-batch aggregation job
@@ -144,6 +134,28 @@ def run_streaming(
 
 
 MULTI_BINLOG_SCHEMA = BINLOG_SCHEMA + ", table_name string"
+
+
+def _ensure_target(target: LakeTable, registry: SchemaRegistry, config,
+                   ddl_rows: list) -> None:
+    """Create ``target`` at the base schema version and evolve it to the
+    newest one DDL by DDL (idempotent by schema_version — the streaming twin
+    of ``Changefeed.ensure_target`` + ``_reconcile_ddl``). Creating at the
+    newest version instead would make every DDL foregone, a
+    ``truncate_table`` included, and its stale DML would survive."""
+    if not target.exists():
+        target.create(
+            key=list(config.key),
+            fields=table_fields(registry, 0, config.key),
+            n_buckets=config.n_buckets,
+            with_order_cols=True,
+            delta_layout=config.delta_layout,
+        )
+    for d in ddl_rows:
+        target.alter(
+            d["ddl_type"], d["column"], d["old_column"],
+            (d["col_type"] or "string"), schema_version=int(d["commit_ts"]),
+        )
 
 
 def _epoch_reset_guard(target: LakeTable, feed_id: str,
@@ -195,9 +207,10 @@ def run_streaming_multi(
     ``multi.MultiTableChangefeed``: tail ONE WAL directory carrying a whole
     fleet's change events and drain it (Trigger.AvailableNow) with the same
     single-pass execution shape as the driver loop — per micro-batch ONE
-    LWW-dedup exchange keyed (table, conv, turn), ONE mount, ONE write job
-    partitioned by table, and ONE fsync'd feed-journal append for every
-    table in the batch; per-table manifests group-fold at the end of the
+    LWW-dedup exchange keyed (table, conv, turn), one mount per schema
+    chain, and ONE write job partitioned by table plus ONE fsync'd
+    feed-journal append per write group (one unless chains disagree on a
+    column's type); per-table manifests group-fold at the end of the
     drain. Reference anchor: the processor's sink manager multiplexing N
     tables' sinks through one worker pool
     (/root/reference/cdc/processor/sinkmanager/manager.go:489-663).
@@ -217,12 +230,13 @@ def run_streaming_multi(
       ``run_streaming`` does (per-row ``schema_version`` decodes each
       event against its writer schema); barrier-exact intermediate states
       need the driver loop. Lifecycle DDL (create/drop/rename/exchange)
-      requires barriers by nature -> rejected here.
+      requires barriers by nature -> rejected here;
+    - a table's events at or below its ``truncate_table`` are stale DML
+      of the dead incarnation and are dropped before the dedup (the
+      journal fold has no stale-DML filter).
 
-    Homogeneous chains (the fleet case) take the span executor's
-    one-write-job path; if table-scoped DDLs diverge the chains, the batch
-    falls back to per-table mount + ``append_delta`` (epoch-recognized),
-    mirroring the driver loop's heterogeneous fallback."""
+    Each table decodes with its own registry (global DDL rows plus its
+    scoped ones)."""
     import re
 
     from ticdc_spark.sinks.journal import FeedJournal
@@ -269,41 +283,28 @@ def run_streaming_multi(
     registries: dict = {}
     targets: dict = {}
     for t in tables:
-        reg = SchemaRegistry(config.payload_fields)
-        reg.replay([r for r in ddl_rows
-                    if r.get(table_col) is None or r[table_col] == t])
-        registries[t] = reg
-        tgt = table_factory(t)
-        feed_id = f"{config.changefeed_id}/{t}"
-        _epoch_reset_guard(tgt, feed_id, checkpoint_dir)
-        if not tgt.exists():
-            tgt.create(
-                key=list(config.key),
-                fields=table_fields(reg, _FAR_FUTURE, config.key),
-                n_buckets=config.n_buckets,
-                schema_version=reg.resolved_ts,
-                with_order_cols=True,
-                delta_layout=config.delta_layout,
-            )
-        for d in [r for r in ddl_rows
-                  if r.get(table_col) is None or r[table_col] == t]:
-            tgt.alter(d["ddl_type"], d["column"], d["old_column"],
-                      (d["col_type"] or "string"),
-                      schema_version=int(d["commit_ts"]))
-        targets[t] = tgt
-    homogeneous = len({
-        reg.chain_digest(_FAR_FUTURE) for reg in registries.values()
-    }) == 1
+        rows = [r for r in ddl_rows
+                if r.get(table_col) is None or r[table_col] == t]
+        registries[t] = SchemaRegistry(config.payload_fields)
+        registries[t].replay(rows)
+        targets[t] = table_factory(t)
+        _epoch_reset_guard(targets[t], f"{config.changefeed_id}/{t}",
+                           checkpoint_dir)
+        _ensure_target(targets[t], registries[t], config, rows)
+    stale = [(F.col(table_col) == t) & (F.col("commit_ts") <= reg.truncate_ts)
+             for t, reg in registries.items() if reg.truncate_ts]
 
     stats = {"tables": len(tables), "batches": 0, "events": 0,
              "wal_scans_per_batch": 1}
 
     def process(batch_df, epoch_id: int):
-        df = with_op_rank(batch_df.filter(F.col(table_col).isin(*tables)))
+        df = batch_df.filter(F.col(table_col).isin(*tables))
+        for cond in stale:
+            df = df.filter(~cond)
         # the micro-batch is a span of one window, mounted at the newest
         # schema (per-row schema_version picks each event's writer)
-        span = SpanExecutor(spark, df, 0, [_FAR_FUTURE], registries[tables[0]],
-                            config, table_col)
+        span = SpanExecutor(spark, with_op_rank(df), 0, [_FAR_FUTURE],
+                            registries, config, table_col)
         deduped = span.dedup().persist()
         try:
             # per-(table, source partition) lineage off the cached dedup —
@@ -311,44 +312,28 @@ def run_streaming_multi(
             by_table = {t: rows for (_, t), rows in span.lineage(deduped).items()}
             if not by_table:
                 return  # empty batch
-            commits = {}
-            for t in sorted(by_table):
-                bid = f"{config.changefeed_id}/{t}:epoch-{int(epoch_id)}"
-                commits[t] = (bid, lineage_rows(bid, by_table[t], None))
-                stats["events"] += sum(r["event_count"] for r in commits[t][1])
-            if homogeneous:
-                # the fleet fast path: one mount + ONE write job for every
-                # table in the batch + ONE journal append (commit point).
-                # Fleet mode (the driver loop's rule, applied per batch):
-                # at/above shared_deltas_after applying tables, ONE SHARED
-                # per-bucket fileset caps the file count at O(tasks x
-                # buckets), independent of table count
-                shared = len(by_table) >= config.shared_deltas_after
+            for group, src in span.write_groups(deduped, by_table):
+                # one write job + ONE journal append (the commit point) per
+                # write group. Fleet mode (the driver loop's rule, applied
+                # per batch): at/above shared_deltas_after tables, ONE
+                # SHARED per-bucket fileset caps the file count at
+                # O(tasks x buckets), independent of table count
+                shared = len(group) >= config.shared_deltas_after
                 bucketed = shared or config.delta_layout == "bucketed"
                 staging = journal.span_staging()
-                span.stage(deduped, staging,
+                span.stage(src, staging,
                            config.n_buckets if bucketed else None, shared)
                 seq = journal.adopt(os.path.join(staging, f"{WIN}=0"))
                 shutil.rmtree(staging, ignore_errors=True)
-                journal.append_window(
-                    seq, 0, 0, bucketed,
-                    {t: {"src": t, "path": targets[t].path, "bid": bid,
-                         "lineage": rows} for t, (bid, rows) in commits.items()},
-                    table_col, shared=shared, epoch=int(epoch_id))
-            else:
-                # diverged chains: per-table mount + epoch-recognized MOR
-                # append (the streaming twin of the driver loop's
-                # heterogeneous fallback)
-                for t, (bid, rows) in commits.items():
-                    reg = registries[t]
-                    sliced = deduped.filter(F.col(table_col) == t)
-                    mounted = mount(sliced, reg, as_of_ts=_FAR_FUTURE,
-                                    defaults=config.defaults)
-                    src = mounted.select(*config.key,
-                                         *mounted_columns(reg, _FAR_FUTURE),
-                                         *order_meta())
-                    targets[t].append_delta(src, bid, lineage_rows=rows,
-                                            epoch=int(epoch_id))
+                entry = {}
+                for t in group:
+                    bid = f"{config.changefeed_id}/{t}:epoch-{int(epoch_id)}"
+                    rows = lineage_rows(bid, by_table[t], None)
+                    entry[t] = {"src": t, "path": targets[t].path, "bid": bid,
+                                "lineage": rows}
+                    stats["events"] += sum(r["event_count"] for r in rows)
+                journal.append_window(seq, 0, 0, bucketed, entry, table_col,
+                                      shared=shared, epoch=int(epoch_id))
             stats["batches"] += 1
         finally:
             deduped.unpersist()
