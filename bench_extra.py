@@ -8,6 +8,7 @@ Usage:
   python bench_extra.py replay   [n_events] [mor|cow]
   python bench_extra.py explain  <out_dir> [sf_dir] [q1 q2 ...]
   python bench_extra.py cpu      [n_events] [mor|cow]
+  python bench_extra.py windows  [n] [span]
 """
 
 from __future__ import annotations
@@ -283,7 +284,110 @@ def cmd_cpu(argv):
     }))
 
 
+def _quartiles(xs: list) -> dict:
+    import statistics
+
+    if len(xs) < 2:
+        return {"median": round(xs[0], 3) if xs else None, "iqr": 0.0}
+    q1, q2, q3 = statistics.quantiles(xs, n=4)
+    return {"median": round(q2, 3), "iqr": round(q3 - q1, 3)}
+
+
+def _flat_from(jit: list) -> int:
+    """First index from which JIT CPU per window has flattened: the mean of
+    the next three windows is within 1.5x (+ 20 ms) of the median of the
+    last half."""
+    import statistics
+
+    tail = statistics.median(jit[len(jit) // 2:])
+    for i in range(len(jit)):
+        head = jit[i:i + 3]
+        if sum(head) / len(head) <= 1.5 * tail + 0.02:
+            return i
+    return len(jit) // 2
+
+
+def cmd_windows(argv):
+    """Steady-state cost of a MOR window in one warm JVM: a bootstrap span
+    of 8 windows, then ``n`` ``run()`` calls that each find ``span`` new
+    resolved windows of 4,000 events (8 source partitions, 8 buckets), so a
+    call is one lone window (``span`` 1) or one span. Compaction is off, so
+    every call is the same write. The first calls are dropped until JIT CPU
+    per window flattens (:func:`_flat_from`); the rest report, per window,
+    the Spark jobs (the frontier scan's apart) and CPU seconds by thread
+    class (:func:`_cpu_split`) as median and IQR, with the effective JVM
+    options and Spark conf."""
+    n = int(argv[0]) if argv else 30
+    span = int(argv[1]) if len(argv) > 1 else 1
+    spark = _spark()
+    sc = spark.sparkContext
+    from pyspark.sql import functions as F
+
+    from ticdc_spark.sinks.lake import LakeTable
+    from ticdc_spark.sources.binlog_gen import BinlogSpec, gen_binlog, gen_resolved_log
+    from ticdc_spark.streaming.pipeline import Changefeed, ChangefeedConfig
+
+    boot, ev = 8, 4_000
+    spec = BinlogSpec(n_events=(boot + n * span) * ev, n_convs=2_000, n_turns=16,
+                      block=ev, n_partitions=8)
+    jvm_pid = int(sc._jvm.java.lang.ProcessHandle.current().pid())
+    store = sc._jsc.sc().statusStore()
+    work = tempfile.mkdtemp(prefix="ticdc_bx_")
+    rows = []
+    try:
+        wal, res = os.path.join(work, "wal"), os.path.join(work, "resolved")
+        gen_binlog(spark, spec).write.parquet(wal)
+        gen_resolved_log(spark, spec).write.parquet(res)
+        resolved = spark.read.parquet(res)
+        cf = Changefeed(spark, spark.read.parquet(wal), None, None,
+                        LakeTable(spark, os.path.join(work, "t")),
+                        ChangefeedConfig(changefeed_id="bx-win", n_buckets=8,
+                                         compact_every=10**9, max_windows_per_job=span))
+
+        def upto(k: int) -> None:
+            cf.resolved_log = resolved.filter(
+                F.col("resolved_ts") <= spec.base_ts + k * ev)
+
+        upto(boot)
+        cf.run()
+        la0 = os.getloadavg()[0]
+        for i in range(n):
+            upto(boot + (i + 1) * span)
+            group = f"bx-win-{i}"
+            sc.setJobGroup(group, group)
+            a, t0 = _cpu_snapshot(jvm_pid), time.time()
+            stats = cf.run()
+            wall, b = time.time() - t0, _cpu_snapshot(jvm_pid)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert stats["merges"] == span, stats
+            names = [store.job(j).name() for j in sc.statusTracker().getJobIdsForGroup(group)]
+            frontier = sum("frontier.py" in x for x in names)
+            rows.append({"cpu": _cpu_split(a, b), "wall": wall,
+                         "jobs": len(names) - frontier, "frontier_jobs": frontier})
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    k = _flat_from([r["cpu"]["jvm.jit"] / span for r in rows])
+    kept = rows[k:]
+    classes = list(kept[0]["cpu"])
+    per = {c: _quartiles([r["cpu"][c] / span for r in kept]) for c in classes}
+    conf = {key: v for key, v in sc.getConf().getAll()
+            if not any(w in key.lower() for w in ("secret", "token", "password"))}
+    print(json.dumps({
+        "n": n, "span": span, "events_per_window": ev, "dropped": k, "kept": len(kept),
+        "cpu_s": _quartiles([sum(r["cpu"].values()) / span for r in kept]),
+        "cpu_s_by_class": per,
+        "wall_s": _quartiles([r["wall"] / span for r in kept]),
+        "jobs_per_window": _quartiles([r["jobs"] / span for r in kept]),
+        "frontier_jobs_per_call": _quartiles([r["frontier_jobs"] for r in kept]),
+        "python_daemon_modules": _cpu_snapshot(jvm_pid)["daemons"],
+        "spark.driver.extraJavaOptions": conf.get("spark.driver.extraJavaOptions", ""),
+        "spark_conf": dict(sorted(conf.items())),
+        "loadavg": [round(la0, 2), round(os.getloadavg()[0], 2)],
+    }))
+
+
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     {"queries": cmd_queries, "replay": cmd_replay, "multi": cmd_multi,
-     "explain": cmd_explain, "cpu": cmd_cpu}[cmd](sys.argv[2:])
+     "explain": cmd_explain, "cpu": cmd_cpu, "windows": cmd_windows}[cmd](sys.argv[2:])

@@ -19,14 +19,57 @@ from __future__ import annotations
 import json
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.accumulators import AddingAccumulatorParam
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ticdc_spark.plans.schema_registry import SchemaRegistry, SchemaSnapshot
 
 
-def _decode_udf(current: SchemaSnapshot, writer_maps: dict, writer_types: dict | None = None):
+# drained tap accumulators, reused: PySpark keeps every accumulator it ever
+# made in its driver registry, so a fresh one per window would grow with
+# the feed's age
+_IDLE: list = []
+
+
+class LineageTap:
+    """Lineage counted where the mount UDF already sees every row: per
+    Arrow batch the UDF sums the rows' event counts (``_n_events`` of a
+    deduped row, 1 of a raw event) and takes their max commit-ts per value
+    of ``keys``, and adds those groups to a driver accumulator — no Spark
+    job of its own.
+
+    Exact where Spark applies each task's update once: a result-stage
+    task's accumulator update is applied once per partition (the
+    DAGScheduler merges only the first successful attempt), so a tapped
+    mount must sit in its write's result stage, with no exchange above it.
+    Under a ``persist`` (the CoW merges, ``run_streaming``) the mount runs
+    in whichever stage first materializes the cache: a map stage that
+    re-runs, or a lost cache block recomputed, counts its rows again."""
+
+    def __init__(self, spark: SparkSession, keys: list):
+        self.keys = list(keys)
+        try:
+            self.acc = _IDLE.pop()
+        except IndexError:
+            self.acc = spark.sparkContext.accumulator([], AddingAccumulatorParam([]))
+
+    def counts(self) -> dict:
+        """{key values: (events, max commit-ts)} of every row tapped; call
+        once, after the tapped writes (the accumulator goes back idle)."""
+        acc, self.acc = self.acc, None
+        rows, acc.value = acc.value, []
+        _IDLE.append(acc)
+        out: dict = {}
+        for *k, n, mx in rows:
+            n0, mx0 = out.get(tuple(k), (0, mx))
+            out[tuple(k)] = (n0 + n, max(mx0, mx))
+        return out
+
+
+def _decode_udf(current: SchemaSnapshot, writer_maps: dict, writer_types: dict | None = None,
+                acc=None):
     """Build the pandas UDF for one micro-batch. ``writer_maps`` is
     {writer_version: {current_field: writer_field}} and ``writer_types``
     {writer_version: {current_field: writer_type}} (small dicts captured in
@@ -39,6 +82,10 @@ def _decode_udf(current: SchemaSnapshot, writer_maps: dict, writer_types: dict |
     (``read_json(lines=True)``) — no per-row Python. Safe because the
     payloads are produced by JSON encoders that escape control characters,
     so a physical newline never occurs inside a payload.
+
+    With ``acc`` (a :class:`LineageTap` accumulator) the UDF takes the tap's
+    key columns, then the event count and the max commit-ts, after the
+    payload and the version, and adds one row per key group of each batch.
     """
     import io
 
@@ -91,10 +138,15 @@ def _decode_udf(current: SchemaSnapshot, writer_maps: dict, writer_types: dict |
             return col
         return pd.Series([None] * n_rows, dtype=object)
 
-    def decode(payload: pd.Series, version: pd.Series) -> pd.DataFrame:
+    def decode(payload: pd.Series, version: pd.Series, *tap: pd.Series) -> pd.DataFrame:
         n_rows = len(payload)
         if n_rows == 0:
             return pd.DataFrame({n: pd.Series([], dtype=object) for n in names})
+        if tap:
+            k = len(tap) - 2
+            g = pd.concat(tap, axis=1, keys=range(len(tap))).groupby(
+                list(range(k)), sort=False, dropna=False).agg({k: "sum", k + 1: "max"})
+            acc.add(list(g.reset_index().itertuples(index=False, name=None)))
         buf = "\n".join(p if isinstance(p, str) else "{}" for p in payload.tolist())
         # dtype=False preserves the JSON types: a column of all-numeric
         # STRINGS (e.g. text="100") must not be coerced to int64
@@ -145,7 +197,8 @@ def _decode_udf(current: SchemaSnapshot, writer_maps: dict, writer_types: dict |
 
     # asNondeterministic stops Catalyst's projection collapse from inlining
     # the struct extraction — without it the UDF is re-evaluated once PER
-    # EXTRACTED FIELD (5x decode cost for a 5-column payload)
+    # EXTRACTED FIELD (5x decode cost for a 5-column payload); a lineage
+    # tap relies on one evaluation per row
     return F.pandas_udf(decode, returnType=udf_schema).asNondeterministic()
 
 
@@ -156,6 +209,7 @@ def mount(
     payload_col: str = "payload",
     version_col: str = "schema_version",
     defaults: dict | None = None,
+    tap: LineageTap | None = None,
 ) -> DataFrame:
     """Decode ``payload`` (JSON string, writer-versioned) into typed
     columns of the snapshot at ``as_of_ts``.
@@ -171,11 +225,21 @@ def mount(
     (getDefaultOrZeroValue, mounter.go:909-965) — pass ``defaults``.
     Delete events (payload NULL) yield an all-NULL struct; MERGE only
     needs their keys.
+
+    ``tap`` counts every decoded row's events by its key columns (see
+    :class:`LineageTap`); a deduped row carries its own ``_n_events`` /
+    ``_max_commit_ts``, a raw event counts 1 at its ``commit_ts``.
     """
     current = registry.snapshot_at(as_of_ts)
     writer_maps = registry.writer_field_map(current)
     writer_types = registry.writer_type_map(current)
-    udf = _decode_udf(current, writer_maps, writer_types)
+    args = [F.col(payload_col), F.col(version_col)]
+    if tap is not None:
+        stats = ([F.col("_n_events"), F.col("_max_commit_ts")] if "_n_events" in df.columns
+                 else [F.lit(1).cast("long"), F.col("commit_ts")])
+        args += [*map(F.col, tap.keys), *stats]
+    udf = _decode_udf(current, writer_maps, writer_types,
+                      tap.acc if tap is not None else None)
     field_names = {n for n, _ in current.fields}
     # ONE select, not a withColumn per field: each withColumn adds a plan
     # node the analyzer re-walks — at one mount per micro-batch the loop
@@ -198,7 +262,7 @@ def mount(
         c for c in df.columns
         if c not in field_names and c not in (payload_col, "pre_payload", version_col)
     ]
-    return df.withColumn("_m", udf(F.col(payload_col), F.col(version_col))).select(
+    return df.withColumn("_m", udf(*args)).select(
         *keep, *exprs
     )
 

@@ -410,7 +410,6 @@ class MultiTableChangefeed:
         f = self.feeds[t]
         f.ensure_target()
         f._reconcile_ddl(ts)
-        f._partitions = getattr(self, "_partitions", [])
         self._load_state(t)
 
     def _retire(self, t: str):
@@ -548,10 +547,6 @@ class MultiTableChangefeed:
             self.resolved_log, low=ckpt,
             expected_partitions=self.config.expected_partitions,
         )
-        # source partition ids from the same scan (observe-based lineage)
-        self._partitions = steps.partitions
-        for f in self.feeds.values():
-            f._partitions = self._partitions
         # finish-at (changefeed_finish): the whole fleet stops AT
         # target_ts — same clamp rule as the single-table feed
         uppers = plan_windows(steps, ckpt, self.config)
@@ -618,8 +613,8 @@ class MultiTableChangefeed:
         exchange through the span executor (span.py), then (MOR) one write
         job per type-compatible write group — one in practice — for the
         whole span x table cross-product, each (window, table) still
-        committing its own batch id through the journal. A single-window
-        call is the degenerate span."""
+        committing its own batch id through the journal. A lone window and
+        a barrier sub-window are spans of one, in the same form."""
         hi = uppers[-1]
         live = {
             t: f for t, f in self.feeds.items() if hi > self._state[t]["ckpt"]
@@ -653,19 +648,17 @@ class MultiTableChangefeed:
                 self._state[names[name]]["ckpt"] = hi
             out["windows_merged"] += len(uppers)
             out["write_jobs"] += 1
-            out["quarantined"] = quarantined(qobs)
-            return out
-        # cluster the cached dedup output by table WITHIN partitions (no
-        # extra exchange): cache batches become single-table runs, so a
-        # table's slice filter prunes other tables' batches via the
-        # in-memory scan's per-batch column stats instead of rescanning the
-        # whole cache N times
-        deduped = span.dedup().sortWithinPartitions(self.table_col).persist()
-        try:
-            if self.config.sink_mode == "mor":
-                self._apply_mor(live, names, span, deduped, out)
-            else:
-                # CoW rewrites each table's base: per window, per table
+        elif self.config.sink_mode == "mor":
+            self._apply_mor(live, names, span, out)
+        else:
+            # CoW rewrites each table's base: per window, per table, off one
+            # cached dedup clustered by table WITHIN partitions (no extra
+            # exchange): cache batches become single-table runs, so a
+            # table's slice filter prunes other tables' batches via the
+            # in-memory scan's per-batch column stats instead of rescanning
+            # the whole cache N times
+            deduped = span.dedup().sortWithinPartitions(self.table_col).persist()
+            try:
                 for i, prev, u in span.windows():
                     wdf = deduped.filter(F.col(WIN) == i).drop(WIN)
                     w_merged = 0
@@ -679,8 +672,8 @@ class MultiTableChangefeed:
                         self._state[t]["ckpt"] = max(self._state[t]["ckpt"], u)
                     out["merges"] += w_merged
                     out["windows_merged"] += w_merged > 0
-        finally:
-            deduped.unpersist()
+            finally:
+                deduped.unpersist()
         out["quarantined"] = quarantined(qobs)
         return out
 
@@ -718,14 +711,16 @@ class MultiTableChangefeed:
         return nbs.pop()
 
     def _apply_mor(self, live: dict, names: dict, span: SpanExecutor,
-                   deduped, out: dict) -> None:
+                   out: dict) -> None:
         """The MOR write of every non-bootstrap span: the span executor
         mounts once per schema chain at the decode snapshot ``hi − 1`` and
         writes every table's delta files in ONE Spark job per write group
         (partitionBy table — plus ``_bucket`` when the group's tables use
         the bucketed delta layout, so the 7.9x point-read dial survives
-        multi-table mode); each (window, write group) then commits with ONE
-        feed-journal append. A fleet on one schema chain (the 100k-table
+        multi-table mode), with lineage from the mount's tap — two Spark
+        jobs for a one-group span; the dedup is cached only for 2+ groups;
+        each (window, write group) then commits with ONE feed-journal
+        append. A fleet on one schema chain (the 100k-table
         case — one transcript schema, global DDLs only) is one group;
         per-table DDL churn and truncates only add mounts, not writes.
         Driver cost per window: one jsonl append per group — independent
@@ -736,8 +731,8 @@ class MultiTableChangefeed:
         # mid-span applies only windows above its own mark (the others'
         # batches are recognized as replays at fold anyway)
         ckpt0 = {t: self._state[t]["ckpt"] for t in names.values()}
-        staged = []
-        for group, src in span.write_groups(deduped, names):
+
+        def layout(group) -> tuple:
             st = [self._state[names[n]] for n in group]
             nbs = {s["n_buckets"] for s in st}
             # fleet mode: above the threshold, per-table partition dirs
@@ -748,11 +743,11 @@ class MultiTableChangefeed:
             shared = len(group) >= cfg.shared_deltas_after and len(nbs) == 1
             bucketed = len(nbs) == 1 and (
                 shared or any(s["layout"] == "bucketed" for s in st))
-            staging = self.journal.span_staging()
-            span.stage(src, staging, next(iter(nbs)) if bucketed else None, shared)
-            out["write_jobs"] += 1
-            staged.append((group, staging, bucketed, shared))
-        stats = span.lineage(deduped)
+            return (self.journal.span_staging(),
+                    next(iter(nbs)) if bucketed else None, shared)
+
+        staged, stats = span.stage_groups(names, layout)
+        out["write_jobs"] += len(staged)
         commits = {name: span.commits(live[t].config.changefeed_id, name, stats,
                                      None, False)
                    for name, t in names.items()}

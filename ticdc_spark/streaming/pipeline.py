@@ -16,13 +16,14 @@ per micro-batch
      lineage + the new checkpoint in the same atomic manifest
 
 A single-table front end over streaming/span.py: the window walker
-(``span.walk``, shared with the multi-table feed) schedules the windows; a
-DDL-free run of 2+ windows executes as one span with this table as a fleet
-of one — a literal table column, the same executor the multi-table feed
-uses — and commits with one group manifest rewrite. A lone window, a window
-that ends at a DDL barrier, force-replicate and steady-state CoW take the
-per-window sink. Every window decodes at its upper bound − 1
-(``span.mount_window``).
+(``span.walk``, shared with the multi-table feed) schedules the windows,
+and every MOR window — a DDL-free run of windows, a lone window, a window
+that ends at a DDL barrier — executes as a span with this table as a fleet
+of one (a literal table column, the same executor the multi-table feed
+uses) and commits with one group manifest rewrite. Only force-replicate
+and steady-state CoW take the per-window sink. Lineage rides in the mount
+UDF (``LineageTap``) in both forms. Every window decodes at its upper
+bound − 1 (``span.mount_window``).
 
 Exactly-once across restarts: the batch_id is derived from the window
 bounds, recorded in the manifest commit; replaying a window after a crash
@@ -54,15 +55,15 @@ from ticdc_spark.plans.schema_registry import BASE_PAYLOAD_FIELDS, SchemaRegistr
 from ticdc_spark.sinks.lake import LakeTable
 from ticdc_spark.sources.frontier import frontier_steps
 from ticdc_spark.streaming.span import (
+    LineageTap,
     SpanExecutor,
     bootstrap_ready,
     dedup,
     mount_window,
-    observe_lineage,
     op_from_rank,
-    order_meta,
     plan_windows,
     quarantined,
+    tapped_lineage,
     walk,
 )
 
@@ -112,7 +113,8 @@ class ChangefeedConfig:
     # fileset/batch-id/syncpoint/lineage via one group manifest rewrite).
     # This amortizes the per-job serial constant (~1s of plan/codegen/
     # commit) across up to this many windows — the single-table twin of
-    # the multi-table feed journal. 1 disables batching.
+    # the multi-table feed journal. 1 = spans of one window (the same
+    # write form, one window per job).
     max_windows_per_job: int = 16
     # initial-load fast path: when the FIRST span lands on an EMPTY table
     # (no base, no deltas, no truncate incarnation), fold it across
@@ -309,67 +311,68 @@ class Changefeed:
         return with_op_rank(df).drop("pre_payload", "op"), qobs
 
     def _apply_span(self, lo: int, uppers: list) -> dict:
-        """Execute a DDL-free SPAN of resolved windows as ONE Spark job —
-        this feed as a fleet of one through the span executor (span.py):
-        the initial load on an empty table writes the folded BASE once;
+        """Execute a DDL-free SPAN of resolved windows (a lone window is a
+        span of one) as ONE Spark job — this feed as a fleet of one through
+        the span executor (span.py): the initial load (2+ windows on an
+        empty table, the fleet's gate too) writes the folded BASE once;
         otherwise the span dedups per (window, key), mounts once, writes
         once partitioned by window, and every window's fileset, batch id,
         syncpoint and lineage commit in ONE group manifest rewrite
-        (:meth:`LakeTable.append_delta_files_group`). Semantics are
-        bit-identical to the per-window path (windows dedup independently;
-        the LWW read re-resolves across them).
+        (:meth:`LakeTable.append_delta_files_group`). Windows dedup
+        independently; the LWW read re-resolves across them. CoW and
+        force-replicate windows (``cap()`` keeps them lone outside the
+        bootstrap) go to :meth:`_apply_window`.
 
         Crash contract: the group commit is atomic — a crash before it
         leaves only unreferenced staged files (reaped by snapshot expiry),
         after it every window is durable with its own batch id."""
-        cid = self.config.changefeed_id
+        cfg = self.config
+        cid = cfg.changefeed_id
+        boot = len(uppers) > 1 and bootstrap_ready(self.target, cfg)
+        if not boot and (cfg.force_replicate or cfg.sink_mode != "mor"):
+            (hi,) = uppers
+            return self._apply_window(lo, hi)
         hi = uppers[-1]
         df = self.binlog.filter((F.col("commit_ts") > lo) & (F.col("commit_ts") <= hi))
         df, qobs = self._prepare_window(df, f"{cid}:{lo}:{hi}:span")
         span = SpanExecutor(self.spark, df.withColumn(_TABLE, F.lit(_SELF)), lo,
-                            uppers, {_SELF: self.registry}, self.config, _TABLE)
+                            uppers, {_SELF: self.registry}, cfg, _TABLE)
         m = self.target.manifest()
         staging = os.path.join(self.target.data_dir, uuid.uuid4().hex)
-        if bootstrap_ready(self.target, self.config):
+        if boot:
             res = span.bootstrap({_SELF: (self.target, cid)}, m["n_buckets"],
                                  staging)[_SELF]
-        elif self.config.sink_mode != "mor":
-            raise RuntimeError(
-                "span execution on a non-empty CoW table — the span "
-                "gate only admits CoW for the bootstrap span")
         else:
-            bucketed = m.get("delta_layout", "flat") == "bucketed"
-            deduped = span.dedup().persist()
-            try:
-                (_, src), = span.write_groups(deduped, [_SELF])
-                span.stage(src, staging, m["n_buckets"] if bucketed else None, False)
-                res = self.target.append_delta_files_group(span.commits(
-                    cid, _SELF, span.lineage(deduped), staging, bucketed))
-            finally:
-                deduped.unpersist()
-        return {"status": "committed" if res["status"] == "committed" else "skipped",
-                "windows": res.get("batches", 0),
+            nb = m["n_buckets"] if m.get("delta_layout") == "bucketed" else None
+            ((_, _, bucketed, _),), stats = span.stage_groups(
+                [_SELF], lambda _: (staging, nb, False))
+            res = self.target.append_delta_files_group(span.commits(
+                cid, _SELF, stats, staging, bucketed))
+        return {"status": res["status"], "windows": res.get("batches", 0),
                 "events": sum(r["event_count"] for r in res.get("lineage", [])),
                 "quarantined": quarantined(qobs)}
 
     def _apply_window(self, lo: int, hi: int) -> dict:
+        """One CoW or force-replicate window through :meth:`_sink_deduped`."""
         df = self.binlog.filter((F.col("commit_ts") > lo) & (F.col("commit_ts") <= hi))
         df, qobs = self._prepare_window(df, f"{self.config.changefeed_id}:{lo}:{hi}")
         if self.config.force_replicate:
             # keyless insert log: no dedup shuffle, every event is a row
-            return self._sink_deduped(df.withColumn("op", op_from_rank()),
-                                      lo, hi, qobs=qobs)
-        # dedup BEFORE mount: the decode then touches only surviving rows
-        return self._sink_deduped(dedup(df, self.config.key), lo, hi, qobs=qobs)
+            df = df.withColumn("op", op_from_rank())
+        else:
+            # dedup BEFORE mount: the decode then touches only surviving rows
+            df = dedup(df, self.config.key)
+        res = self._sink_deduped(df, lo, hi)
+        res["windows"] = int(res["status"] == "committed")
+        res["quarantined"] = quarantined(qobs)
+        return res
 
-    def _sink_deduped(self, deduped: DataFrame, lo: int, hi: int,
-                      qobs=None) -> dict:
-        """Mount + exactly-once sink of a window slice: MOR delta append,
-        CoW merge, or — force-replicate — an ``append_log`` of the raw
+    def _sink_deduped(self, deduped: DataFrame, lo: int, hi: int) -> dict:
+        """Mount + exactly-once sink of one CoW or force-replicate window:
+        a CoW merge, or — force-replicate — an ``append_log`` of the raw
         events (the cheapest sink; the degradation the reference applies
-        to no-PK tables). Split out of :meth:`_apply_window` so the
-        multi-table driver can dedup ALL tables in one shuffle and feed
-        each table's slice here (streaming/multi.py)."""
+        to no-PK tables). The multi-table CoW loop dedups ALL tables in one
+        shuffle and feeds each table's slice here (streaming/multi.py)."""
         batch_id = f"{self.config.changefeed_id}:{lo}:{hi}"
         # recognition is two-tier: the monotone-window rule (a window whose
         # upper bound is at/below the checkpoint was already applied — lets
@@ -379,26 +382,21 @@ class Changefeed:
             batch_id in self.target.committed_batch_ids()
         ):
             return {"status": "skipped", "batch_id": batch_id}
-        # per-source-partition lineage (A2/A5) rides on the sink's own
-        # action — NO extra Spark job per micro-batch. partition_id is a
-        # function of conv_id, so per-key stats aggregate exactly.
-        deduped, lineage_rows = observe_lineage(deduped, self._partitions, batch_id, hi)
+        # per-source-partition lineage (A2/A5) rides in the mount UDF — NO
+        # extra Spark job per micro-batch; a key's events count at its
+        # winning row's partition_id
+        tap = LineageTap(self.spark, ["partition_id"])
         mounted, payload_cols = mount_window(deduped, self.registry, hi,
-                                             self.config.defaults)
+                                             self.config.defaults, tap)
+        lineage = tapped_lineage(tap, batch_id, hi)
         if self.config.force_replicate:
             src = mounted.select(*self.config.key, "op", "commit_ts", *payload_cols)
-            res = self.target.append_log(src, batch_id, lineage_rows=lineage_rows,
+            res = self.target.append_log(src, batch_id, lineage_rows=lineage,
                                          resolved_ts=hi)
-        elif self.config.sink_mode == "mor":
-            src = mounted.select(*self.config.key, *payload_cols, *order_meta())
-            res = self.target.append_delta(
-                src, batch_id, lineage_rows=lineage_rows, resolved_ts=hi
-            )
         else:
             src = mounted.select(*self.config.key, "op", *payload_cols)
-            res = self.target.merge(src, batch_id, lineage_rows=lineage_rows, resolved_ts=hi)
+            res = self.target.merge(src, batch_id, lineage_rows=lineage, resolved_ts=hi)
         res["events"] = sum(r["event_count"] for r in res.get("lineage", []))
-        res["quarantined"] = quarantined(qobs)
         return res
 
     def is_synced(self, use_cached_frontier: bool = True) -> bool:
@@ -453,11 +451,8 @@ class Changefeed:
             self.resolved_log, low=ckpt,
             expected_partitions=self.config.expected_partitions,
         )
-        # the same scan gave the source partition ids (they drive the
-        # observe-based per-partition lineage without a per-batch
-        # aggregation job) and the frontier, cached so run -> is_synced
-        # costs no extra frontier job
-        self._partitions = steps.partitions
+        # the same scan gave the frontier, cached so run -> is_synced costs
+        # no extra frontier job
         self._cached_frontier = steps.frontier
         uppers = plan_windows(steps, ckpt, self.config)
 
@@ -477,13 +472,8 @@ class Changefeed:
             return min(c, max_merges - n["merges"]) if max_merges else c
 
         def apply(lo: int, ws: list) -> bool:
-            # a lone window stays per-window: 2 jobs vs 5 as a span of one
-            if len(ws) > 1:
-                res = self._apply_span(lo, ws)
-                n["merges"] += res.get("windows", 0)
-            else:
-                res = self._apply_window(lo, ws[0])
-                n["merges"] += res["status"] == "committed"
+            res = self._apply_span(lo, ws)
+            n["merges"] += res.get("windows", 0)
             n["events"] += res.get("events", 0)
             n["quarantined"] += res.get("quarantined", 0)
             return bool(max_merges) and n["merges"] >= max_merges

@@ -23,11 +23,13 @@ Two halves:
   tombstones, mount the survivors, write every table's compacted BASE in one
   ``partitionBy(table, _bucket)`` job, take lineage from one column-pruned
   re-scan and commit with ``bootstrap_base_group`` per table.
-- :meth:`SpanExecutor.write_groups` + :meth:`SpanExecutor.stage` +
-  :meth:`SpanExecutor.lineage` — the delta span: dedup per (window, table,
+- :meth:`SpanExecutor.stage_groups` — the delta span, the one MOR write form of every feed shape (a lone window
+  and a barrier sub-window are spans of one): dedup per (window, table,
   key), mount once per schema chain, one ``partitionBy`` write (flat,
-  bucketed or a shared per-bucket fileset) per type-compatible write group
-  and one metadata-cardinality lineage job. The caller commits.
+  bucketed or a shared per-bucket fileset) per type-compatible write
+  group. Lineage comes from the mount's tap (:class:`LineageTap`) inside
+  each write's result stage: no job of its own, and the dedup is cached
+  only when 2+ write groups read it. The caller commits.
 
 Each table brings its own schema registry. Tables whose chains agree below
 the span's upper bound mount together; a fleet on one chain (the common
@@ -39,8 +41,7 @@ The module-level helpers are the pieces every front end shares: window
 planning, span extent, the window walker (:func:`walk`, the driver loop of
 ``Changefeed.run`` and ``MultiTableChangefeed.run``), the window tag, the
 decode-snapshot rule (:func:`mount_window`, CRTs−1), the LWW order-metadata
-columns, lineage rows (stats-job or Observation), the quarantine read and
-the empty-table gate.
+columns, lineage rows, the quarantine read and the empty-table gate.
 """
 
 from __future__ import annotations
@@ -50,10 +51,10 @@ import shutil
 import uuid
 from urllib.parse import unquote
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ticdc_spark.functions.mount import mount, mounted_columns
+from ticdc_spark.functions.mount import LineageTap, mount, mounted_columns
 from ticdc_spark.operators.placement import cluster_parallelism, placed_fold
 from ticdc_spark.operators.sortdedup import lww_dedup
 from ticdc_spark.sinks.lake import LakeTable, staged_files
@@ -144,13 +145,14 @@ def op_from_rank() -> Column:
             .when(F.col("op_rank") == 2, "U").otherwise("I"))
 
 
-def mount_window(df: DataFrame, registry, hi: int, defaults: dict) -> tuple:
+def mount_window(df: DataFrame, registry, hi: int, defaults: dict,
+                 tap: LineageTap | None = None) -> tuple:
     """Mount a window (or span) ending at ``hi``: (mounted df, payload
     columns) against the snapshot at ``hi - 1`` — a DML at commit-ts c
     decodes against the schema BEFORE any DDL at c (cdc/entry/mounter.go:173).
     Exact for every window: windows split at every DDL commit-ts, so none
-    holds a DDL below its upper bound."""
-    return (mount(df, registry, as_of_ts=hi - 1, defaults=defaults),
+    holds a DDL below its upper bound. ``tap`` counts the rows' lineage."""
+    return (mount(df, registry, as_of_ts=hi - 1, defaults=defaults, tap=tap),
             mounted_columns(registry, hi - 1))
 
 
@@ -184,34 +186,11 @@ def lineage_rows(batch_id: str, stats, resolved_ts: int | None) -> list:
     ]
 
 
-def observe_lineage(df: DataFrame, partitions: list, batch_id: str,
-                    resolved_ts: int | None) -> tuple:
-    """Per-source-partition lineage riding on the sink's own action via
-    the Observation API — zero extra Spark jobs. Deduped rows carry
-    per-key ``_n_events``/``_max_commit_ts``; raw events count one each.
-    Returns (observed df, thunk of lineage rows). An empty slice schedules
-    zero tasks, so the Observation never fires: no rows."""
-    n, mx = ((F.col("_n_events"), F.col("_max_commit_ts"))
-             if "_n_events" in df.columns else (F.lit(1), F.col("commit_ts")))
-    obs = Observation(f"lineage-{batch_id}")
-    aggs = []
-    for p in partitions:
-        hit = F.col("partition_id") == p
-        aggs += [F.sum(F.when(hit, n)).alias(f"n_{p}"),
-                 F.max(F.when(hit, mx)).alias(f"mx_{p}")]
-    df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"), *aggs)
-
-    def rows() -> list:
-        try:
-            vals = obs.get
-        except Exception:
-            return []
-        return lineage_rows(batch_id, [
-            (p, vals[f"n_{p}"], vals[f"mx_{p}"]) for p in partitions
-            if vals.get(f"n_{p}") is not None
-        ], resolved_ts)
-
-    return df, rows
+def tapped_lineage(tap: LineageTap, batch_id: str, resolved_ts: int | None):
+    """Thunk of one window's lineage rows from a ``["partition_id"]`` tap,
+    read after the sink's write (an empty slice taps nothing: no rows)."""
+    return lambda: lineage_rows(batch_id, [
+        (p, n, mx) for (p,), (n, mx) in sorted(tap.counts().items())], resolved_ts)
 
 
 def quarantined(qobs) -> int:
@@ -271,7 +250,7 @@ class SpanExecutor:
             yield i, prev, u
             prev = u
 
-    def _mounts(self, df: DataFrame, tables) -> list:
+    def _mounts(self, df: DataFrame, tables, tap: LineageTap | None = None) -> list:
         """[(table values, mounted df, payload columns)], one per schema
         chain of ``tables`` below the span's upper bound: the rows decode
         against the snapshot at ``hi - 1`` of their own chain. ``df`` holds
@@ -283,18 +262,10 @@ class SpanExecutor:
             chains.setdefault(reg.chain_digest(hi - 1), (reg, []))[1].append(name)
         if len(chains) == 1:
             (reg, names), = chains.values()
-            return [(names, *mount_window(df, reg, hi, self.defaults))]
+            return [(names, *mount_window(df, reg, hi, self.defaults, tap))]
         return [(names, *mount_window(df.filter(F.col(self.tc).isin(*names)),
-                                      reg, hi, self.defaults))
+                                      reg, hi, self.defaults, tap))
                 for reg, names in chains.values()]
-
-    def _stats(self, df: DataFrame, n: Column, mx: Column) -> dict:
-        by: dict = {}
-        for r in (df.groupBy(WIN, self.tc, "partition_id")
-                  .agg(n.alias("n"), mx.alias("mx")).collect()):
-            by.setdefault((int(r[WIN]), r[self.tc]), []).append(
-                (r["partition_id"], r["n"], r["mx"]))
-        return by
 
     def commits(self, feed_id: str, name: str, stats: dict,
                 staging: str | None, bucketed: bool) -> list:
@@ -361,8 +332,14 @@ class SpanExecutor:
         src.write.partitionBy(tc, "_bucket").parquet(staging)
         # lineage re-scans the WAL pruned to (win, table, partition, ts)
         # instead of caching the undeduped span (at a 100-TB initial load
-        # that cache would hold the whole corpus)
-        stats = self._stats(self.df, F.count(F.lit(1)), F.max("commit_ts"))
+        # that cache would hold the whole corpus); the fold spans windows,
+        # so no row the mount sees carries a per-window count
+        stats: dict = {}
+        for r in (self.df.groupBy(WIN, tc, "partition_id")
+                  .agg(F.count(F.lit(1)).alias("n"), F.max("commit_ts").alias("mx"))
+                  .collect()):
+            stats.setdefault((int(r[WIN]), r[tc]), []).append(
+                (r["partition_id"], r["n"], r["mx"]))
         staged = part_dirs(staging, tc)
         out = {}
         for name in sorted(feeds):
@@ -381,18 +358,18 @@ class SpanExecutor:
     # ---------------- delta half ----------------
 
     def dedup(self) -> DataFrame:
-        """The span deduped per (window, table, key); callers cache it —
-        :meth:`stage` and :meth:`lineage` both read it."""
+        """The span deduped per (window, table, key)."""
         return dedup(self.df, [WIN, self.tc, *self.key])
 
-    def write_groups(self, deduped: DataFrame, tables) -> list:
+    def write_groups(self, deduped: DataFrame, tables, tap: LineageTap) -> list:
         """[(table values, rows to stage)] for the span's ``tables``: one
         group per type-compatible column set. Mounted chains union by name
         (a column a table never had is NULL there, and the per-table read
         projects by name, so it is never read); only chains that disagree
-        on the TYPE of a shared column name write apart."""
+        on the TYPE of a shared column name write apart. Every mount feeds
+        ``tap``."""
         groups: list = []
-        for names, mounted, payload in self._mounts(deduped, tables):
+        for names, mounted, payload in self._mounts(deduped, tables, tap):
             src = mounted.select(WIN, self.tc, *self.key, *payload, *order_meta())
             types = dict(src.dtypes)
             for g in groups:
@@ -411,7 +388,9 @@ class SpanExecutor:
         job under ``staging``: ``_win=i/<table>=v/`` (+ ``_bucket=b/`` when
         ``n_buckets``), or with ``shared`` one per-bucket fileset per window
         holding every table of the group, clustered by table within each
-        file (file count independent of table count)."""
+        file (file count independent of table count). No layout adds an
+        exchange above the mount, so its lineage tap stays in the write's
+        result stage (see :class:`LineageTap`)."""
         pcols = [WIN, self.tc]
         if n_buckets:
             src = src.withColumn(
@@ -422,7 +401,28 @@ class SpanExecutor:
             pcols.remove(self.tc)
         src.write.partitionBy(*pcols).parquet(staging)
 
-    def lineage(self, deduped: DataFrame) -> dict:
-        """ONE metadata-cardinality job: {(window, table value):
-        [(partition_id, events, max_commit_ts)]}."""
-        return self._stats(deduped, F.sum("_n_events"), F.max("_max_commit_ts"))
+    def stage_groups(self, tables, layout) -> tuple:
+        """Dedup the span and stage each :meth:`write_groups` group of
+        ``tables`` with its own write job; ``layout(group)`` gives the
+        group's (staging dir, bucket count or None, shared). The dedup is
+        cached only while 2+ groups' writes read it. Returns ([(group,
+        staging dir, bucketed, shared)], {(window, table value):
+        [(partition_id, events, max_commit_ts)]}) — the lineage every
+        staged row's mount tapped."""
+        tap = LineageTap(self.spark, [WIN, self.tc, "partition_id"])
+        deduped = self.dedup()
+        groups = self.write_groups(deduped, tables, tap)
+        if len(groups) > 1:
+            deduped.persist()
+        staged = []
+        try:
+            for group, src in groups:
+                staging, n_buckets, shared = layout(group)
+                self.stage(src, staging, n_buckets, shared)
+                staged.append((group, staging, n_buckets is not None, shared))
+        finally:
+            deduped.unpersist()
+        stats: dict = {}
+        for (w, t, p), (n, mx) in sorted(tap.counts().items()):
+            stats.setdefault((w, t), []).append((p, n, mx))
+        return staged, stats

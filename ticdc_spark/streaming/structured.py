@@ -16,9 +16,11 @@ Two execution modes exist for the same engine:
 
 The multi-table twin (:func:`run_streaming_multi`) runs each micro-batch
 through the span executor (streaming/span.py) as a span of one window —
-the same dedup, per-chain mount and staged write the driver loops use —
-and commits it with one feed-journal append per write group (one unless
-tables' chains disagree on a column's type) carrying the epoch.
+the same dedup, per-chain mount, staged write and mount-tap lineage the
+driver loops use, two Spark jobs for a one-group batch — and commits it
+with one feed-journal append per write group (one unless tables' chains
+disagree on a column's type) carrying the epoch. Both modes take lineage
+from the mount UDF's tap (``functions/mount.py::LineageTap``).
 
 Both create their targets at the base schema version and replay every DDL
 row onto them (as ``Changefeed.ensure_target`` + ``_reconcile_ddl`` do),
@@ -37,7 +39,7 @@ import shutil
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ticdc_spark.functions.mount import mount, mounted_columns
+from ticdc_spark.functions.mount import LineageTap, mount, mounted_columns
 from ticdc_spark.operators.sortdedup import lww_dedup, with_op_rank
 from ticdc_spark.plans.schema_registry import SchemaRegistry
 from ticdc_spark.sinks.lake import LakeTable
@@ -51,8 +53,8 @@ from ticdc_spark.streaming.span import (
     WIN,
     SpanExecutor,
     lineage_rows,
-    observe_lineage,
     order_meta,
+    tapped_lineage,
 )
 
 BINLOG_SCHEMA = (
@@ -94,29 +96,23 @@ def run_streaming(
     _epoch_reset_guard(target, config.changefeed_id, checkpoint_dir)
     _ensure_target(target, registry, config, ddl_rows)
     payload_cols = mounted_columns(registry, _FAR_FUTURE)
-    # source partition ids, ONCE per run (metadata-cardinality): enables the
-    # observe-based per-partition lineage with no per-batch aggregation job
-    partitions = sorted(
-        int(r[0])
-        for r in spark.read.schema(BINLOG_SCHEMA).parquet(binlog_dir)
-        .select("partition_id").distinct().collect()
-    )
     stats = {"batches": 0, "events": 0}
 
     def process(batch_df, epoch_id: int):
         batch_id = f"{config.changefeed_id}:epoch-{epoch_id}"
         deduped = lww_dedup(with_op_rank(batch_df), config.key, stats=True)
-        # lineage rides on the sink's own write via the Observation API —
-        # zero extra Spark jobs per micro-batch (same pattern as the
-        # resolved-ts driver loop, streaming/pipeline.py)
-        deduped, lineage_rows = observe_lineage(deduped, partitions, batch_id, None)
-        mounted = mount(deduped, registry, as_of_ts=_FAR_FUTURE, defaults=config.defaults)
+        # lineage rides in the mount UDF — zero extra Spark jobs per
+        # micro-batch (same tap as the resolved-ts driver loop)
+        tap = LineageTap(spark, ["partition_id"])
+        mounted = mount(deduped, registry, as_of_ts=_FAR_FUTURE,
+                        defaults=config.defaults, tap=tap)
         src = mounted.select(*config.key, "op", *payload_cols, *order_meta())
         # epoch rides into the commit so the manifest can PRUNE old epoch
         # batch_ids by the monotone epoch high-water mark (foreachBatch
         # epochs are monotone; only the newest can be re-delivered) — the
         # arrival-ordered twin of the monotone-window rule
-        res = target.merge_lww(src, batch_id, lineage_rows=lineage_rows,
+        res = target.merge_lww(src, batch_id,
+                               lineage_rows=tapped_lineage(tap, batch_id, None),
                                epoch=int(epoch_id))
         stats["batches"] += 1
         stats["events"] += sum(r["event_count"] for r in res.get("lineage", []))
@@ -305,38 +301,38 @@ def run_streaming_multi(
         # schema (per-row schema_version picks each event's writer)
         span = SpanExecutor(spark, with_op_rank(df), 0, [_FAR_FUTURE],
                             registries, config, table_col)
-        deduped = span.dedup().persist()
-        try:
-            # per-(table, source partition) lineage off the cached dedup —
-            # ONE metadata-cardinality aggregate for the whole batch
-            by_table = {t: rows for (_, t), rows in span.lineage(deduped).items()}
-            if not by_table:
-                return  # empty batch
-            for group, src in span.write_groups(deduped, by_table):
-                # one write job + ONE journal append (the commit point) per
-                # write group. Fleet mode (the driver loop's rule, applied
-                # per batch): at/above shared_deltas_after tables, ONE
-                # SHARED per-bucket fileset caps the file count at
-                # O(tasks x buckets), independent of table count
-                shared = len(group) >= config.shared_deltas_after
-                bucketed = shared or config.delta_layout == "bucketed"
-                staging = journal.span_staging()
-                span.stage(src, staging,
-                           config.n_buckets if bucketed else None, shared)
+
+        def layout(group) -> tuple:
+            # one write job + ONE journal append (the commit point) per
+            # write group. Fleet mode (the driver loop's rule, applied per
+            # batch): at/above shared_deltas_after tables, ONE SHARED
+            # per-bucket fileset caps the file count at O(tasks x buckets),
+            # independent of table count
+            shared = len(group) >= config.shared_deltas_after
+            bucketed = shared or config.delta_layout == "bucketed"
+            return (journal.span_staging(),
+                    config.n_buckets if bucketed else None, shared)
+
+        staged, by = span.stage_groups(tables, layout)
+        landed = False
+        for group, staging, bucketed, shared in staged:
+            # a table commits the batch only if it had events in it
+            entry = {}
+            for t in group:
+                if (0, t) not in by:
+                    continue
+                bid = f"{config.changefeed_id}/{t}:epoch-{int(epoch_id)}"
+                rows = lineage_rows(bid, by[(0, t)], None)
+                entry[t] = {"src": t, "path": targets[t].path, "bid": bid,
+                            "lineage": rows}
+                stats["events"] += sum(r["event_count"] for r in rows)
+            if entry:
                 seq = journal.adopt(os.path.join(staging, f"{WIN}=0"))
-                shutil.rmtree(staging, ignore_errors=True)
-                entry = {}
-                for t in group:
-                    bid = f"{config.changefeed_id}/{t}:epoch-{int(epoch_id)}"
-                    rows = lineage_rows(bid, by_table[t], None)
-                    entry[t] = {"src": t, "path": targets[t].path, "bid": bid,
-                                "lineage": rows}
-                    stats["events"] += sum(r["event_count"] for r in rows)
                 journal.append_window(seq, 0, 0, bucketed, entry, table_col,
                                       shared=shared, epoch=int(epoch_id))
-            stats["batches"] += 1
-        finally:
-            deduped.unpersist()
+                landed = True
+            shutil.rmtree(staging, ignore_errors=True)
+        stats["batches"] += landed
 
     reader = spark.readStream.schema(MULTI_BINLOG_SCHEMA)
     if max_files_per_trigger:
