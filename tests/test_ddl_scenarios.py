@@ -137,12 +137,12 @@ def test_truncate_drops_stale_late_dml_in_arrival_mode(spark, tmp_table_path):
         "conv_id string, turn_idx int, text string, op string, _commit_ts long, "
         "_start_ts long, _op_rank int, _deleted int",
     )
-    t.merge_lww(rows(("c", 1, "v10", "I", 10, 9, 3, 0)), "b1")
+    t.merge(rows(("c", 1, "v10", "I", 10, 9, 3, 0)), "b1")
     t.alter("truncate_table", None, schema_version=20)
     assert t.read().count() == 0
     # late stale event (commit 15 < truncate 20) must be dropped
-    t.merge_lww(rows(("c", 2, "v15", "I", 15, 14, 3, 0)), "b2")
+    t.merge(rows(("c", 2, "v15", "I", 15, 14, 3, 0)), "b2")
     assert t.read().count() == 0
     # post-truncate event applies normally
-    t.merge_lww(rows(("c", 3, "v25", "I", 25, 24, 3, 0)), "b3")
+    t.merge(rows(("c", 3, "v25", "I", 25, 24, 3, 0)), "b3")
     assert [r["turn_idx"] for r in t.read().collect()] == [3]

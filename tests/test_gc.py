@@ -32,7 +32,7 @@ def test_manifest_size_bounded_across_batches(spark, tmp_table_path):
     t = _mk(spark, tmp_table_path)
     sizes = []
     for i in range(1, 101):
-        t.merge_lww(
+        t.merge(
             _batch(spark, i), f"b{i}",
             lineage_rows=[{"batch_id": f"b{i}", "partition_id": 0, "resolved_ts": i,
                            "event_count": 1, "max_commit_ts": i}],
@@ -58,7 +58,7 @@ def test_manifest_flat_in_streaming_epoch_mode(spark, tmp_table_path):
     t = _mk(spark, tmp_table_path)
     sizes = []
     for e in range(60):
-        t.merge_lww(_batch(spark, e + 1), f"cf:epoch-{e}", epoch=e)
+        t.merge(_batch(spark, e + 1), f"cf:epoch-{e}", epoch=e)
         mf = os.path.join(t.meta_dir, f"v{t.manifest()['version']:08d}.json")
         sizes.append(os.path.getsize(mf))
     m = t.manifest()
@@ -72,13 +72,13 @@ def test_manifest_flat_in_streaming_epoch_mode(spark, tmp_table_path):
     # rather than silently skip what may be new data
     import pytest as _pytest
     with _pytest.raises(RuntimeError, match="epoch regression"):
-        t.merge_lww(_batch(spark, 3), "cf:epoch-3", epoch=3)
+        t.merge(_batch(spark, 3), "cf:epoch-3", epoch=3)
     # re-delivery of the NEWEST epoch (the only one Spark can re-deliver)
-    res = t.merge_lww(_batch(spark, 777), "cf:epoch-59", epoch=59)
+    res = t.merge(_batch(spark, 777), "cf:epoch-59", epoch=59)
     assert res["status"] == "skipped"
     # a SECOND changefeed's epochs are an independent namespace: its epoch 0
     # must apply, not be judged against cf's high-water mark of 59
-    res = t.merge_lww(_batch(spark, 70), "cf2:epoch-0", epoch=0)
+    res = t.merge(_batch(spark, 70), "cf2:epoch-0", epoch=0)
     assert res["status"] == "committed"
     final = {r["_commit_ts"] for r in t.read(include_meta=True).collect()}
     assert final == {70}
@@ -91,24 +91,24 @@ def test_manifest_flat_in_resolved_ts_mode(spark, tmp_table_path):
     t = _mk(spark, tmp_table_path)
     sizes = []
     for i in range(1, 61):
-        t.merge_lww(_batch(spark, i), f"b{i}", resolved_ts=i)
+        t.merge(_batch(spark, i), f"b{i}", resolved_ts=i)
         mf = os.path.join(t.meta_dir, f"v{t.manifest()['version']:08d}.json")
         sizes.append(os.path.getsize(mf))
     assert sizes[-1] - sizes[10] < 50  # flat up to counter digit-width
     sp = t.syncpoints()
     assert len(sp) == 60 and sp[0][0] == 1 and sp[-1][0] == 60
     # new batch SHARING the checkpoint ts is NOT silently dropped (strict <)
-    res = t.merge_lww(_batch(spark, 999), "b-extra", resolved_ts=60)
+    res = t.merge(_batch(spark, 999), "b-extra", resolved_ts=60)
     assert res["status"] == "committed"
     # but replaying an already-committed batch at the checkpoint is
-    res = t.merge_lww(_batch(spark, 60), "b60", resolved_ts=60)
+    res = t.merge(_batch(spark, 60), "b60", resolved_ts=60)
     assert res["status"] == "skipped"
 
 
 def test_expire_honors_safepoint_and_gcs_files(spark, tmp_table_path):
     t = _mk(spark, tmp_table_path)
     for i in range(1, 9):
-        t.merge_lww(_batch(spark, i), f"b{i}", resolved_ts=i)
+        t.merge(_batch(spark, i), f"b{i}", resolved_ts=i)
     vs = t._versions()
     assert len(vs) == 9  # create + 8 commits
     # safepoint at resolved_ts 6: versions with checkpoint >= 6 are protected
@@ -161,7 +161,7 @@ def test_expire_never_removes_versions_at_or_after_safepoint(spark, tmp_table_pa
     >= safepoint is still replayable (its manifest version exists)."""
     t = _mk(spark, tmp_table_path)
     for i in range(1, 6):
-        t.merge_lww(_batch(spark, i), f"b{i}", resolved_ts=i)
+        t.merge(_batch(spark, i), f"b{i}", resolved_ts=i)
     before = {v: t.manifest(v)["checkpoint"]["resolved_ts"] for v in t._versions()}
     t.expire_snapshots(keep_last=1, safepoint_ts=3)
     after = set(t._versions())
@@ -194,9 +194,9 @@ def test_pruned_batch_replay_still_skipped(spark, tmp_table_path):
     — the monotone-checkpoint rule, not just the id set, guards it."""
     t = _mk(spark, tmp_table_path)
     for i in range(1, 6):
-        t.merge_lww(_batch(spark, i), f"b{i}", resolved_ts=i)
+        t.merge(_batch(spark, i), f"b{i}", resolved_ts=i)
     assert "b1" not in t.committed_batch_ids()  # pruned
-    res = t.merge_lww(_batch(spark, 1), "b1", resolved_ts=1)  # replay attempt
+    res = t.merge(_batch(spark, 1), "b1", resolved_ts=1)  # replay attempt
     assert res["status"] == "skipped"
     final = {r["_commit_ts"] for r in t.read(include_meta=True).collect()}
     assert final == {5}  # newest image intact, stale replay ignored
@@ -216,7 +216,7 @@ def test_batch_resolved_mode_sub_batches_at_one_ts(spark, tmp_table_path):
             "conv_id string, turn_idx int, text string, op string, _commit_ts long, "
             "_start_ts long, _op_rank int, _deleted int",
         )
-        res = t.merge_lww(df, f"b:{rts}:{part}", resolved_ts=rts)
+        res = t.merge(df, f"b:{rts}:{part}", resolved_ts=rts)
         assert res["status"] == "committed", part
     # all three sub-batches landed
     assert t.read().count() == 3
@@ -227,5 +227,5 @@ def test_batch_resolved_mode_sub_batches_at_one_ts(spark, tmp_table_path):
             "conv_id string, turn_idx int, text string, op string, _commit_ts long, "
             "_start_ts long, _op_rank int, _deleted int",
         )
-        assert t.merge_lww(df, f"b:{rts}:{part}", resolved_ts=rts)["status"] == "skipped"
+        assert t.merge(df, f"b:{rts}:{part}", resolved_ts=rts)["status"] == "skipped"
     assert t.read().filter("text = 'REPLAYED'").count() == 0

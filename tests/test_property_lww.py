@@ -6,7 +6,8 @@ Mirrors the reference's randomized sorter tests
 resolved windows, the engine's final state equals the one-shot batch LWW.
 """
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from ticdc_spark.operators.sortdedup import OP_RANK, lww_dedup, with_op_rank
@@ -180,7 +181,64 @@ def test_merge_lww_batch_boundary_independence(spark, tmp_path_factory, raw, rnd
             "conv_id string, turn_idx int, payload string, op string, "
             "_commit_ts long, _start_ts long, _op_rank int, _deleted int",
         )
-        t.merge_lww(src, f"e{e}", epoch=e)
+        t.merge(src, f"e{e}", epoch=e)
     got = {(r["conv_id"], r["turn_idx"]): r["payload"] for r in t.read().collect()}
     want = {k: v[3] for k, v in _py_lww(rows).items() if v[2] != "D"}
     assert got == want
+
+
+PLAIN_FIELDS = [("conv_id", "string"), ("turn_idx", "int"), ("payload", "string")]
+
+
+def _plain_batches_strategy():
+    """1-4 deduped batches: at most one I/U/D row per key per batch, keys
+    over six conv ids so a batch spans buckets."""
+    key = st.tuples(st.sampled_from("abcdef"), st.integers(min_value=0, max_value=1))
+    return st.lists(st.dictionaries(key, st.sampled_from(["I", "U", "D"]), min_size=1, max_size=8),
+                    min_size=1, max_size=4)
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(_plain_batches_strategy())
+@example([
+    {("a", 0): "I", ("b", 0): "I", ("c", 1): "D"},     # c/1: delete of a missing key
+    {("a", 0): "D", ("d", 0): "U", ("e", 1): "I"},     # d/0: update of a missing key
+    {("a", 0): "I", ("f", 0): "D", ("b", 0): "U"},     # a/0: re-insert after a delete
+])
+def test_merge_plain_matches_merge_into_model(spark, tmp_path_factory, batches):
+    """Differential check of the plain (no order columns) branch of
+    ``LakeTable.merge`` against a plain-Python MERGE INTO: batches applied
+    in order, 'D' deletes the key (a no-op when it is missing), anything
+    else upserts it."""
+    from ticdc_spark.sinks.lake import LakeTable
+
+    t = LakeTable(spark, str(tmp_path_factory.mktemp("merge_plain") / "t"))
+    t.create(key=["conv_id", "turn_idx"], fields=PLAIN_FIELDS, n_buckets=4)
+    want: dict = {}
+    for i, batch in enumerate(batches):
+        rows = [(conv, turn, op, f"b{i}-{op}") for (conv, turn), op in batch.items()]
+        t.merge(spark.createDataFrame(rows, "conv_id string, turn_idx int, op string, payload string"),
+                f"b{i}", resolved_ts=i + 1)
+        for conv, turn, op, payload in rows:
+            if op == "D":
+                want.pop((conv, turn), None)
+            else:
+                want[(conv, turn)] = payload
+    got = {(r["conv_id"], r["turn_idx"]): r["payload"] for r in t.read().collect()}
+    assert got == want
+
+
+def test_merge_order_table_refuses_src_without_order_columns(spark, tmp_path):
+    from ticdc_spark.sinks.lake import LakeTable
+
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(key=["conv_id", "turn_idx"], fields=PLAIN_FIELDS, n_buckets=2,
+             with_order_cols=True)
+    src = spark.createDataFrame(
+        [("a", 0, "p", "I", 5, 4, 0)],
+        "conv_id string, turn_idx int, payload string, op string, "
+        "_commit_ts long, _start_ts long, _deleted int",
+    )
+    with pytest.raises(ValueError, match="_op_rank"):
+        t.merge(src, "b1", resolved_ts=5)
+    assert t.read().count() == 0

@@ -195,10 +195,9 @@ def _decode_udf(current: SchemaSnapshot, writer_maps: dict, writer_types: dict |
                 out[n] = col.where(pd.notna(col), None)
         return pd.DataFrame(out)
 
-    # asNondeterministic stops Catalyst's projection collapse from inlining
-    # the struct extraction — without it the UDF is re-evaluated once PER
-    # EXTRACTED FIELD (5x decode cost for a 5-column payload); a lineage
-    # tap relies on one evaluation per row
+    # asNondeterministic: the UDF feeds the side-effecting LineageTap, so
+    # the optimizer must never duplicate its evaluation or reorder it past
+    # a filter — the tap counts each row exactly once
     return F.pandas_udf(decode, returnType=udf_schema).asNondeterministic()
 
 

@@ -30,19 +30,6 @@ def detect_heavy_keys(df: DataFrame, key: Sequence[str], threshold: int) -> Data
     )
 
 
-def with_salt(df: DataFrame, key: Sequence[str], heavy: DataFrame, n_salts: int = 8) -> DataFrame:
-    """Add a `salt` column: 0 for normal keys, hash(start_ts)%n for heavy
-    keys, so a later ``repartition(key, salt)`` spreads one hot
-    conversation over ``n_salts`` tasks (hot-span split analog)."""
-    heavy = F.broadcast(heavy.select(*key).withColumn("_heavy", F.lit(True)))
-    out = df.join(heavy, list(key), "left")
-    salt = F.when(
-        F.col("_heavy").isNotNull(),
-        F.pmod(F.xxhash64(F.col("start_ts"), F.col("commit_ts")), F.lit(n_salts)),
-    ).otherwise(F.lit(0))
-    return out.withColumn("salt", salt.cast("int")).drop("_heavy")
-
-
 def salted_two_phase_lww(df: DataFrame, key: Sequence[str], n_salts: int = 8) -> DataFrame:
     """Two-phase LWW: reduce per (key, salt), then per key.
 

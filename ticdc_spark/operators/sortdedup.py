@@ -50,17 +50,6 @@ def order_struct(df: DataFrame) -> DataFrame:
     return df
 
 
-def sort_events(df: DataFrame, key: Sequence[str] = HANDLE_KEY) -> DataFrame:
-    """Cluster events by key and order within partitions — the sorter analog
-    (event_sorter.go:140-168). Only needed when a consumer requires ordered
-    iteration (e.g. txn-atomic sinks); the MERGE path skips it entirely.
-    """
-    df = order_struct(df)
-    return df.repartition(*[F.col(k) for k in key]).sortWithinPartitions(
-        *key, "commit_ts", "start_ts", "op_rank"
-    )
-
-
 def lww_dedup(df: DataFrame, key: Sequence[str] = HANDLE_KEY, stats: bool = False,
               order: Sequence[str] = ORDER_COLS) -> DataFrame:
     """Last-writer-wins: one surviving event per handle key.
@@ -77,8 +66,11 @@ def lww_dedup(df: DataFrame, key: Sequence[str] = HANDLE_KEY, stats: bool = Fals
     ``stats=True`` additionally emits per-key ``_n_events`` and
     ``_max_commit_ts`` in the SAME aggregate, so per-partition lineage
     (A2/A5) rolls up from the dedup output without a second scan of the
-    raw batch (partition_id is a function of conv_id, so summing per-key
-    counts grouped by partition_id is exact).
+    raw batch. A key's events all count at its winning row's
+    partition_id: per-window totals are exact, but per-partition counts
+    move when a key's events come from two partitions, as the delete half
+    of a key-changing update does (the strict xfail
+    tests/test_lineage_tap.py::test_key_changes_per_partition).
 
     ``order`` names the order columns (commit-ts, start-ts, op rank):
     stored MOR rows carry them as ``_commit_ts, _start_ts, _op_rank``.

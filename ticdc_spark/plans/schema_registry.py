@@ -17,17 +17,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import types as T
-
-_TYPE = {
-    "string": T.StringType(),
-    "int": T.IntegerType(),
-    "long": T.LongType(),
-    "bigint": T.LongType(),
-    "double": T.DoubleType(),
-    "timestamp": T.TimestampType(),
-}
-
 # transcript payload (BASELINE.json input_hint): non-key columns; `ts` is
 # transported as epoch-micros long inside the JSON payload and cast to
 # timestamp natively after decode.
@@ -56,9 +45,6 @@ class SchemaSnapshot:
     # retires it, re-adding the same NAME mints a NEW id, so data written
     # under a dropped column can never leak into its re-added namesake
     col_ids: tuple[int, ...] = ()
-
-    def struct_type(self) -> T.StructType:
-        return T.StructType([T.StructField(n, _TYPE[t], True) for n, t in self.fields])
 
     def id_of(self) -> dict:
         return dict(zip(self.col_ids, (n for n, _ in self.fields)))

@@ -17,8 +17,9 @@ module is that tool on Spark, against the codecs in :mod:`ticdc_spark.sinks.mq`:
 - flush takes rows with ``commit_ts <= watermark``
   (cmd/kafka-consumer/event_group.go:40-52 ``Resolve``); rows above the
   flush point are HELD (they stay in the event group until a later marker).
-- apply is an arrival-ordered LWW MERGE (:meth:`LakeTable.merge_lww`) — the
-  generalization of the reference MySQL writer's REPLACE idempotency
+- apply is an arrival-ordered LWW MERGE (:meth:`LakeTable.merge` into an
+  order-column table) — the generalization of the reference MySQL
+  writer's REPLACE idempotency
   (cdc/sink/dmlsink/txn/mysql/mysql.go:516,533-537), so duplicated frames
   (at-least-once delivery) and re-consumed batches are value-level no-ops,
   and each resolved step commits under an exactly-once batch id.
@@ -158,7 +159,7 @@ def consume_apply(
         batch = src_all.filter(
             (F.col("_commit_ts") > F.lit(prev)) & (F.col("_commit_ts") <= F.lit(r))
         )
-        res = target.merge_lww(batch, f"{batch_prefix}:r-{r}", resolved_ts=r)
+        res = target.merge(batch, f"{batch_prefix}:r-{r}", resolved_ts=r)
         if res.get("status") == "committed":
             applied += int(res.get("rows", 0))
         batches += 1

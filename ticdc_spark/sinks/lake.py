@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ticdc_spark.operators.placement import placed_fold
+from ticdc_spark.operators.sortdedup import lww_dedup
 
 _TYPE = {
     "string": T.StringType(),
@@ -73,6 +74,10 @@ DELTA_BROADCAST_BYTES = 32 * 1024 * 1024
 
 # the commit markers a Spark file write leaves in its output dir
 _WRITE_MARKERS = frozenset({"_SUCCESS", "._SUCCESS.crc"})
+
+# the LWW order metadata an order-column table stores with every row
+# (order first: commit ts, start ts, op rank)
+ORDER_META = ("_commit_ts", "_start_ts", "_op_rank", "_deleted")
 
 
 def _struct(fields) -> T.StructType:
@@ -155,10 +160,10 @@ class LakeTable:
         cdc/entry/schema_storage.go:297-333).
 
         ``with_order_cols=True`` adds the LWW metadata columns
-        (_commit_ts, _start_ts, _op_rank, _deleted) required by
-        :meth:`merge_lww` — the arrival-ordered/streaming mode, where
-        deletes persist as tombstones so a late older event cannot
-        resurrect a deleted key.
+        (_commit_ts, _start_ts, _op_rank, _deleted), which switch
+        :meth:`merge` to its order-aware step — the arrival-ordered/
+        streaming mode, where deletes persist as tombstones so a late
+        older event cannot resurrect a deleted key.
 
         ``delta_layout`` picks the MOR delta trade-off (measured,
         BENCH/OPERATORS.md): "flat" (default) writes each batch straight
@@ -220,7 +225,7 @@ class LakeTable:
     def _commit_batch(self, m: dict, batch_id: str, resolved_ts: int | None,
                       n_src: int, rows: list, mode: str | None = None,
                       epoch: int | None = None) -> None:
-        """Shared commit tail for merge/merge_lww/append_delta: record the
+        """Shared commit tail for merge/append_delta: record the
         batch, advance the checkpoint, PRUNE recognized-forever batch ids,
         append the syncpoint to an APPEND-ONLY sidecar, and write lineage to
         another — the manifest JSON stays O(live batches), not O(history),
@@ -690,7 +695,7 @@ class LakeTable:
         if not include_meta:
             # the LWW order metadata is engine plumbing; readers see the
             # logical table (internal merge/compact paths pass include_meta)
-            out = out.drop("_commit_ts", "_start_ts", "_op_rank", "_deleted")
+            out = out.drop(*ORDER_META)
         return out
 
     # ---------------- MERGE ----------------
@@ -701,20 +706,32 @@ class LakeTable:
         batch_id: str,
         lineage_rows: list | None = None,
         resolved_ts: int | None = None,
-        op_col: str = "op",
         epoch: int | None = None,
     ) -> dict:
-        """Exactly-once upsert of one deduplicated micro-batch.
+        """Exactly-once copy-on-write apply of one deduplicated micro-batch:
+        the batch's buckets are rewritten whole.
 
         ``src`` must carry the merge-key columns, ``op`` ('I'/'U'/'D') and
-        the current payload columns — at most ONE row per key (run
+        the current table columns — at most ONE row per key (run
         lww_dedup first; guarantees conflict-freedom, replacing the
         causality conflict detector,
         /root/reference/pkg/causality/conflict_detector.go:31-120).
 
-        Semantics = MERGE INTO target USING src ON key:
-        WHEN MATCHED AND op='D' THEN DELETE;
-        WHEN MATCHED THEN UPDATE; WHEN NOT MATCHED AND op!='D' THEN INSERT.
+        The table's schema picks the upsert step:
+
+        - without order columns, MERGE INTO target USING src ON key:
+          WHEN MATCHED AND op='D' THEN DELETE; WHEN MATCHED THEN UPDATE;
+          WHEN NOT MATCHED AND op!='D' THEN INSERT (batches must arrive in
+          commit-ts order, as resolved-ts windows do);
+        - with the order columns ``_commit_ts, _start_ts, _op_rank,
+          _deleted`` (``create(with_order_cols=True)``; ``src`` must carry
+          them too), batches may arrive in ANY commit-ts interleaving: a
+          stored row only loses to a strictly NEWER event, and deletes
+          persist as ``_deleted = 1`` tombstones so a late older event
+          cannot resurrect a deleted key — the MySQL sink's
+          safe-mode/REPLACE idempotency
+          (cdc/sink/dmlsink/txn/mysql/mysql.go:516,533-537) generalized
+          to a lake table.
         """
         m = self.manifest()
         if m.get("append_only"):
@@ -725,13 +742,13 @@ class LakeTable:
             raise RuntimeError("table has uncompacted MOR deltas; run compact() before CoW merge")
         key = m["key"]
         n_buckets = m["n_buckets"]
-        cur_fields = _nt(m["schema"])
-        cur_names = [n for n, _ in cur_fields]
-        if m.get("truncate_ts", 0) and "_commit_ts" in cur_names:
-            # stale-DML drop (see merge_lww): a direct-API caller applying a
-            # late pre-truncate batch must not resurrect truncated rows
-            src = src.filter(F.col("_commit_ts") > int(m["truncate_ts"]))
+        cur_names = [x[0] for x in m["schema"]]
+        lww = set(ORDER_META) <= set(cur_names)
+        missing = [c for c in ORDER_META if c not in src.columns] if lww else []
+        if missing:
+            raise ValueError(f"merge into an order-column table: src lacks {missing}")
 
+        src = self._drop_stale(m, src)
         src = src.withColumn("_bucket", self._bucket_expr(n_buckets, key[0]))
         src = src.persist()
         try:
@@ -745,113 +762,31 @@ class LakeTable:
             n_src = sum(int(r["count"]) for r in stats)
 
             if affected:
-                live = self.read(buckets=affected, include_meta=True).withColumn(
-                    "_bucket", self._bucket_expr(n_buckets, key[0])
-                )
-                keys_df = src.select(*key)
-                if n_src <= BROADCAST_KEY_LIMIT:
-                    keys_df = F.broadcast(keys_df)
-                keep = live.join(keys_df, on=key, how="left_anti")
-                upserts = src.filter(F.col(op_col) != "D").select(*cur_names, "_bucket")
-                out = keep.select(*cur_names, "_bucket").unionByName(upserts)
-
-                commit_dir = os.path.join(self.data_dir, uuid.uuid4().hex)
-                (
-                    out.repartition(len(affected), F.col("_bucket"))
-                    .write.partitionBy("_bucket")
-                    .parquet(commit_dir)
-                )
-                for b in affected:
-                    m["buckets"][str(b)] = {
-                        "files": parquet_files(os.path.join(commit_dir, f"_bucket={b}")),
-                        "written_version": m["schema_version"],
-                    }
-        finally:
-            src.unpersist()
-
-        rows = lineage_rows() if callable(lineage_rows) else (lineage_rows or [])
-        self._commit_batch(m, batch_id, resolved_ts, n_src, rows, epoch=epoch)
-        return {"status": "committed", "batch_id": batch_id, "rows": n_src,
-                "buckets": affected, "version": m["version"], "lineage": rows}
-
-    def merge_lww(
-        self,
-        src: DataFrame,
-        batch_id: str,
-        lineage_rows: list | None = None,
-        resolved_ts: int | None = None,
-        op_col: str = "op",
-        epoch: int | None = None,
-    ) -> dict:
-        """Order-aware MERGE for arrival-ordered (Structured Streaming)
-        batches: a matched target row only loses to a strictly NEWER event.
-
-        Requires the table to carry the order metadata columns
-        ``_commit_ts, _start_ts, _op_rank`` (create the table with
-        ``with_order_cols=True``). ``src`` must carry them too, plus ``op``.
-        Unlike :meth:`merge`, batches may arrive in ANY commit-ts
-        interleaving — the LWW law is re-established per key against the
-        stored order columns, which is exactly the MySQL sink's
-        safe-mode/REPLACE idempotency
-        (/root/reference/cdc/sink/dmlsink/txn/mysql/mysql.go:516,533-537)
-        generalized to a lake table.
-        """
-        from ticdc_spark.operators.sortdedup import lww_dedup
-
-        m = self.manifest()
-        if m.get("append_only"):
-            raise ValueError("append-only (force-replicate) table: use append_log")
-        if self._recognized(m, batch_id, resolved_ts, epoch):
-            return {"status": "skipped", "batch_id": batch_id}
-        if m.get("deltas"):
-            raise RuntimeError("table has uncompacted MOR deltas; run compact() before CoW merge")
-        key = m["key"]
-        n_buckets = m["n_buckets"]
-        cur_names = [x[0] for x in m["schema"]]
-        for c in ("_commit_ts", "_start_ts", "_op_rank"):
-            if c not in cur_names:
-                raise ValueError("merge_lww needs a table created with_order_cols=True")
-        if m.get("truncate_ts", 0):
-            # stale-DML drop: an event of the pre-truncate table incarnation
-            # arriving late must not resurrect truncated rows
-            # (cdc/entry/schema/snapshot.go:503-509)
-            src = src.filter(F.col("_commit_ts") > int(m["truncate_ts"]))
-
-        src = src.withColumn("_bucket", self._bucket_expr(n_buckets, key[0]))
-        src = src.persist()
-        try:
-            stats = src.groupBy("_bucket").count().collect()
-            affected = sorted(int(r["_bucket"]) for r in stats)
-            n_src = sum(int(r["count"]) for r in stats)
-            if affected:
-                live = self.read(buckets=affected, include_deleted=True, include_meta=True).withColumn(
+                live = self.read(buckets=affected, include_deleted=lww, include_meta=True).withColumn(
                     "_bucket", self._bucket_expr(n_buckets, key[0])
                 )
                 keys_df = src.select(*key)
                 if n_src <= BROADCAST_KEY_LIMIT:
                     keys_df = F.broadcast(keys_df)
                 keep = live.join(keys_df, on=key, how="left_anti").select(*cur_names, "_bucket")
-                # contested keys: the stored row competes as an event whose
-                # op reflects its tombstone state, so a stored delete keeps
-                # deleting unless a strictly newer event arrives
-                contested = live.join(keys_df, on=key, how="left_semi").select(
-                    *cur_names, "_bucket"
-                ).withColumn(
-                    op_col, F.when(F.col("_deleted") == 1, "D").otherwise("I")
-                )
-                combined = contested.unionByName(
-                    src.select(*cur_names, "_bucket", op_col)
-                ).withColumnsRenamed(
-                    {"_commit_ts": "commit_ts", "_start_ts": "start_ts", "_op_rank": "op_rank"}
-                )
-                won = lww_dedup(combined, key).withColumnsRenamed(
-                    {"commit_ts": "_commit_ts", "start_ts": "_start_ts", "op_rank": "_op_rank"}
-                )
-                # winners are stored INCLUDING delete tombstones (_deleted=1)
-                upserts = won.withColumn(
-                    "_deleted", (F.col(op_col) == "D").cast("int")
-                ).select(*cur_names, "_bucket")
-                out = keep.unionByName(upserts)
+                if lww:
+                    # contested keys: the stored row competes as an event
+                    # whose op reflects its tombstone state, so a stored
+                    # delete keeps deleting unless a strictly newer event
+                    # arrives; winners are stored INCLUDING delete tombstones
+                    contested = live.join(keys_df, on=key, how="left_semi").select(
+                        *cur_names, "_bucket",
+                        F.when(F.col("_deleted") == 1, "D").otherwise("I").alias("op"),
+                    )
+                    upserts = lww_dedup(
+                        contested.unionByName(src.select(*cur_names, "_bucket", "op")),
+                        key, order=ORDER_META[:3],
+                    ).withColumn("_deleted", (F.col("op") == "D").cast("int"))
+                else:
+                    # a delete drops the key (a missing key's delete is a no-op)
+                    upserts = src.filter(F.col("op") != "D")
+                out = keep.unionByName(upserts.select(*cur_names, "_bucket"))
+
                 commit_dir = os.path.join(self.data_dir, uuid.uuid4().hex)
                 (
                     out.repartition(len(affected), F.col("_bucket"))
@@ -870,6 +805,16 @@ class LakeTable:
         self._commit_batch(m, batch_id, resolved_ts, n_src, rows, epoch=epoch)
         return {"status": "committed", "batch_id": batch_id, "rows": n_src,
                 "buckets": affected, "version": m["version"], "lineage": rows}
+
+    @staticmethod
+    def _drop_stale(m: dict, src: DataFrame) -> DataFrame:
+        """Stale-DML drop: an event of the pre-truncate table incarnation
+        arriving late must not resurrect truncated rows
+        (cdc/entry/schema/snapshot.go:503-509). Only an order-column table
+        stores the commit ts this is judged by."""
+        if m.get("truncate_ts", 0) and any(x[0] == "_commit_ts" for x in m["schema"]):
+            return src.filter(F.col("_commit_ts") > int(m["truncate_ts"]))
+        return src
 
     # ---------------- merge-on-read (LSM-style) ----------------
 
@@ -897,9 +842,7 @@ class LakeTable:
         cur_names = [x[0] for x in m["schema"]]
         if "_commit_ts" not in cur_names:
             raise ValueError("append_delta needs a table created with_order_cols=True")
-        if m.get("truncate_ts", 0):
-            # stale-DML drop (see merge_lww): pre-truncate events are dead
-            src = src.filter(F.col("_commit_ts") > int(m["truncate_ts"]))
+        src = self._drop_stale(m, src)
 
         # deltas are written straight from the dedup output partitioning —
         # NO extra shuffle on the ingest path (the only exchange per batch
@@ -1149,7 +1092,7 @@ class LakeTable:
             folded = placed_fold(
                 rows, F.element_at(slot_of, F.col("_t") * nb + F.col("_bucket")),
                 len(slots), ["_t", "_bucket", *key],
-                order=("_commit_ts", "_start_ts", "_op_rank"))
+                order=ORDER_META[:3])
             if drop_tombstones:
                 folded = folded.filter(
                     (F.col("_deleted").isNull()) | (F.col("_deleted") != 1))

@@ -8,10 +8,10 @@ Two execution modes exist for the same engine:
    semantics precisely and is the mode used for DDL scenarios.
 2. this module — Spark-native streaming over file arrival. Batch
    boundaries are arbitrary w.r.t. commit-ts, so the sink must be
-   order-aware: ``LakeTable.merge_lww`` compares each event against the
-   stored ``(_commit_ts, _start_ts, _op_rank)`` and keeps delete
-   tombstones, making the final state independent of batching — the
-   generalization of the MySQL sink's REPLACE idempotency
+   order-aware: ``LakeTable.merge`` into an order-column table compares
+   each event against the stored ``(_commit_ts, _start_ts, _op_rank)``
+   and keeps delete tombstones, making the final state independent of
+   batching — the generalization of the MySQL sink's REPLACE idempotency
    (/root/reference/cdc/sink/dmlsink/txn/mysql/mysql.go:516,533-537).
 
 The multi-table twin (:func:`run_streaming_multi`) runs each micro-batch
@@ -111,9 +111,9 @@ def run_streaming(
         # batch_ids by the monotone epoch high-water mark (foreachBatch
         # epochs are monotone; only the newest can be re-delivered) — the
         # arrival-ordered twin of the monotone-window rule
-        res = target.merge_lww(src, batch_id,
-                               lineage_rows=tapped_lineage(tap, batch_id, None),
-                               epoch=int(epoch_id))
+        res = target.merge(src, batch_id,
+                           lineage_rows=tapped_lineage(tap, batch_id, None),
+                           epoch=int(epoch_id))
         stats["batches"] += 1
         stats["events"] += sum(r["event_count"] for r in res.get("lineage", []))
 
